@@ -26,11 +26,6 @@ import graft.operators.MlOps
   * raw data to the driver.
   */
 object MlPipelines {
-
-  /** Session-scoped memo for the vectorized embeddings frame KMeans
-    * iterates over — released at family boundaries / on eviction like
-    * every other checkpointed derived table. */
-  private val vecsMemo = graft.tools.LruMemo.checkpointed[(String, String)](4, "ml_vecs")
   val Seed = 42L
 
   /** J5: tokenize → HashingTF(2^18, murmur3) → IDF. Returns the fitted
@@ -62,11 +57,11 @@ object MlPipelines {
                        maxIter: Int = 8): (KMeansModel, DataFrame) = {
     // materialized once: KMeans re-scans its input every iteration (one
     // job each) — without this the parquet read + vector conversion
-    // reruns 8×. Routed through a registered memo, NOT a bare .cache():
+    // reruns 8×. Routed through the Derived store, NOT a bare .cache():
     // an unreleased cache pinned a corpus-sized frame in the block
-    // manager for the session's lifetime, the leak the memo/release
-    // machinery exists to close.
-    val vecs = vecsMemo.get((org.apache.spark.sql.graftnative.SessionIds.uuid(spark), sfDir)) {
+    // manager for the session's lifetime, the leak the store's release
+    // exists to close.
+    val vecs = graft.tools.Derived(spark, sfDir, "ml_vecs") {
       Tables.load(spark, sfDir, "embeddings")
         .withColumn("features", array_to_vector(col("embedding")))
         .localCheckpoint(true)

@@ -132,16 +132,11 @@ object GeoOps {
     * sfDir) like the graph family's edge/pair frames: TWO graded keys
     * (geo_radius_join, geo_knn) read it, so the blocked candidate join
     * is priced once per corpus instead of per read. */
-  private val pairsMemo =
-    graft.tools.LruMemo.checkpointed[(String, String)](16, "geo_radius_pairs")
-
-  private[graft] def radiusPairs(s: SparkSession, d: String): DataFrame = {
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-    pairsMemo.get((sid, d))(
+  private[graft] def radiusPairs(s: SparkSession, d: String): DataFrame =
+    graft.tools.Derived(s, d, "geo_radius_pairs")(
       radiusPairsFrom(supplierPoints(t(s, d, "supplier")),
         points(t(s, d, "customer"), "c_custkey"), radiusKm = 50.0)
         .localCheckpoint(true))
-  }
 
   /** The grid-blocked candidate kernel behind [[radiusPairs]],
     * parameterized on the point frames (both shaped `(k, lat, lon,

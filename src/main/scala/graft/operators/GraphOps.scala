@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.tools.Derived
 
 /** Graph analytics beyond connected components: weighted PageRank over
   * the customer↔supplier purchase network (who buys from whom, how
@@ -40,17 +41,14 @@ object GraphOps {
     * strings: the 5-round loop shuffles the edge+rank frames ten times,
     * and an 8-byte key hashes and compares several times cheaper than a
     * variable-length UTF8 string — the namespacing only needs to exist in
-    * the final projection, so the hot loop never carries it. */
-  private val edgeMemo =
-    graft.tools.LruMemo.checkpointed[(String, String)](16, "graph_edges")
-
-  private def purchaseEdges(s: SparkSession, d: String): DataFrame = {
-    // The edge list is a DERIVED TABLE shared by every graph op
-    // (PageRank, degree distribution): build + checkpoint once per
-    // (session, sfDir), exactly like the text pipeline's shingle index —
-    // at 100 TB the materialized edge list is what a graph job reads.
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-    edgeMemo.get((sid, d)) {
+    * the final projection, so the hot loop never carries it.
+    *
+    * The edge list is a DERIVED TABLE shared by every graph op
+    * (PageRank, degree distribution): built + checkpointed once per
+    * (session, sfDir), exactly like the text pipeline's shingle index —
+    * at 100 TB the materialized edge list is what a graph job reads. */
+  private def purchaseEdges(s: SparkSession, d: String): DataFrame =
+    Derived(s, d, "graph_edges") {
       val li = Tables.load(s, d, "lineitem").select("l_orderkey", "l_suppkey")
       val o = Tables.load(s, d, "orders").select("o_orderkey", "o_custkey")
       val cs = li.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -67,7 +65,6 @@ object GraphOps {
         cs.union(cs.select(col("dst").as("src"), col("src").as("dst"), col("w"))),
         col("src"))
     }
-  }
 
   /** Long node id → the graded output's namespaced string form. */
   private def namespaced(id: org.apache.spark.sql.Column) =
@@ -206,32 +203,12 @@ object GraphOps {
       .orderBy("seed")
   }
 
-  /** Distinct part-pair co-purchase counts (p1 < p2 canonical order) —
-    * the market-basket edge list. Built by a self-join of lineitem on
-    * l_orderkey: per-order item counts are small (~4), so the per-key
-    * pair expansion is O(items²) with a tiny constant — the standard
-    * itemset trick; a mega-basket guard (cap items per order) would slot
-    * in front of the join at scale. Memoized + checkpointed per
-    * (session, sfDir) like the purchase edge list: three graded ops read
-    * it, and at 100 TB the pair table IS the materialized artifact. */
-  private val pairMemo =
-    graft.tools.LruMemo.checkpointed[(String, String)](16, "basket_pairs")
-
-  /** Backbone CC labels, memoized like [[pairMemo]] — the pointer-jumping
-    * rounds run once per (session, corpus); consumers price the reads. */
-  private val ccLabelMemo =
-    graft.tools.LruMemo.checkpointed[(String, String)](16, "graph_cc_labels")
-
   /** Basket-grain (ok, sorted distinct items) table — the probability
     * base [[basketAffinity]] reads THREE times in one call (the N
     * count, the pair explode, the per-item counts); memoized like
-    * [[pairMemo]] so the lineitem distinct shuffle is priced once per
+    * [[partPairs]] so the lineitem distinct shuffle is priced once per
     * (session, corpus) instead of per read. */
-  private val dpkMemo =
-    graft.tools.LruMemo.checkpointed[(String, String)](16, "basket_items")
-
   private def distinctBasketItems(s: SparkSession, d: String): DataFrame = {
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
     // r15 note: Layout.checkpointBy(ok) was tried here and reverted — AQE
     // plans the pair self-join as a BROADCAST hash join (the distinct
     // basket-item frame is small), so there is no ok-keyed SMJ to
@@ -245,15 +222,22 @@ object GraphOps {
     // shuffle. distinct + groupBy(ok) share one exchange (same key
     // domain: ok ⊂ (ok, pk) clustering is not reusable, but the distinct
     // feeds the groupBy map-side) — the build stays one lineitem scan.
-    dpkMemo.get((sid, d))(Tables.load(s, d, "lineitem")
+    Derived(s, d, "basket_items")(Tables.load(s, d, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
       .groupBy("ok").agg(sort_array(collect_list(col("pk"))).as("items"))
       .localCheckpoint(true))
   }
 
-  private[graft] def partPairs(s: SparkSession, d: String): DataFrame = {
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-    pairMemo.get((sid, d)) {
+  /** Distinct part-pair co-purchase counts (p1 < p2 canonical order) —
+    * the market-basket edge list. Built by a self-join of lineitem on
+    * l_orderkey: per-order item counts are small (~4), so the per-key
+    * pair expansion is O(items²) with a tiny constant — the standard
+    * itemset trick; a mega-basket guard (cap items per order) would slot
+    * in front of the join at scale. Memoized + checkpointed per
+    * (session, sfDir) like the purchase edge list: three graded ops read
+    * it, and at 100 TB the pair table IS the materialized artifact. */
+  private[graft] def partPairs(s: SparkSession, d: String): DataFrame =
+    Derived(s, d, "basket_pairs") {
       // r16: aggregate-then-pair (the LlmTextOps.pairInter shape) — each
       // order's part list collects once (RAW lines, duplicates kept: the
       // graph family counts LINE pairs) and the i<j pairs are emitted
@@ -274,7 +258,6 @@ object GraphOps {
         .agg(count(lit(1)).as("n_cooccur"))
         .localCheckpoint(true)
     }
-  }
 
   /** Top-100 co-purchased part pairs. Tiebreak (n desc, p1, p2) is a
     * TOTAL order, so the cut inside the long n=1 band is deterministic;
@@ -327,8 +310,7 @@ object GraphOps {
     // key prices the census aggregations over it (round-10 — before
     // this, the graph key rebuilt the labels every call while the dedup
     // key served its memo, an inconsistency the bench numbers showed)
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-    val labels = ccLabelMemo.get((sid, d))(LlmTextOps.connectedComponents(edges))
+    val labels = Derived(s, d, "graph_cc_labels")(LlmTextOps.connectedComponents(edges))
     val sizes = labels.groupBy(col("comp").as("component_id"))
       .agg(count(lit(1)).as("n_nodes"))
     // every node came from an edge, so the inner joins are total

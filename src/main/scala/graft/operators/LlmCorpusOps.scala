@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.tools.Derived
 
 /** Corpus-preparation operators rounding out the LLM training-data
   * pipeline: context-window packing, text normalization, n-gram vocab
@@ -16,20 +17,6 @@ import graft.Tables
 object LlmCorpusOps {
   type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-
-  /** Stage memo for this family's checkpointed derived tables (the
-    * TF/postings table). Registered with MemoRegistry so Bench's
-    * family-boundary release frees the checkpoint blocks eagerly —
-    * before this, each llm_tfidf_cosine run pinned its TF blocks until
-    * the ContextCleaner happened to notice the GC'd RDD (the same
-    * pattern CheckpointRelease was written to fix). */
-  private val stageMemo =
-    graft.tools.LruMemo.checkpointed[(String, String, String)](64, "corpus_stage")
-
-  private def memo(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame = {
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-    stageMemo.getAs(tag, (sid, d, tag))(build.localCheckpoint(true))
-  }
 
   /** THE canonical normalization expression — one definition shared by
     * llm_normalize_text and the e2e pipeline so their semantics cannot
@@ -389,7 +376,7 @@ object LlmCorpusOps {
     // ONE memoized brute pass at the deepest depth used; a shallower k
     // is a rank-prefix filter of the same list (rank lists nest), so the
     // O(|queries|·n) scan is priced once per (session, corpus)
-    memo(s, d, "dense_brute")({
+    Derived(s, d, "dense_brute") {
       import org.apache.spark.sql.expressions.Window
       val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"),
         graft.GraftFunctions.vectorNorm(col("embedding")).as("nrm"))
@@ -406,7 +393,8 @@ object LlmCorpusOps {
         .withColumn("r_dense", row_number().over(w))
         .filter(col("r_dense") <= FusionDepth)
         .select("q_id", "doc_id", "r_dense")
-    }).filter(col("r_dense") <= k)
+        .localCheckpoint(true)
+    }.filter(col("r_dense") <= k)
   }
 
   /** The BM25 top-[[FusionDepth]] rank list every fusion variant shares —
@@ -415,7 +403,7 @@ object LlmCorpusOps {
     * the fixture predicate, the streaming sinks their batch's id set. */
   private def lexTopOn(s: SparkSession, d: String, lexQ: Column): DataFrame =
     bm25TopK(t(s, d, "documents"), lexQ, FusionDepth,
-        tf => memo(s, d, "bm25_tf")(tf))
+        tf => Derived(s, d, "bm25_tf")(tf.localCheckpoint(true)))
       .select(col("q_id"), col("doc_id"), col("rank").as("r_lex"))
 
   /** The memoized depth-[[FusionDepth]] BM25 rank list for the FIXTURE
@@ -425,9 +413,9 @@ object LlmCorpusOps {
     * [[denseBruteTopK]]. The TF memo stays: the streaming sink's
     * per-batch query sets reuse it through [[lexTopOn]]. */
   private def lexFixtureList(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "bm25_lex10")(
+    Derived(s, d, "bm25_lex10")(
       bm25TopK(t(s, d, "documents"), col("doc_id") % 97 === 0, FusionDepth,
-        tf => memo(s, d, "bm25_tf")(tf)))
+        tf => Derived(s, d, "bm25_tf")(tf.localCheckpoint(true))).localCheckpoint(true))
 
   private def lexTop10(s: SparkSession, d: String): DataFrame =
     lexFixtureList(s, d)
@@ -469,8 +457,8 @@ object LlmCorpusOps {
     // shared first stage of three graded keys (this one, llm_rerank_topk,
     // llm_rerank_recall) — fuse once, re-rank on top, exactly the serving
     // posture
-    memo(s, d, "rrf_fused")(hybridRrfIndexedOn(s, d,
-      col("doc_id") % 97 === 0, col("vec_id") % 97 === 0))
+    Derived(s, d, "rrf_fused")(hybridRrfIndexedOn(s, d,
+      col("doc_id") % 97 === 0, col("vec_id") % 97 === 0).localCheckpoint(true))
 
   /** The query-set-parameterized body of [[llmHybridRrfIndexed]] — ONE
     * kernel shared by the graded batch key (fixture predicate
@@ -606,7 +594,7 @@ object LlmCorpusOps {
     * (≤ |sources| rows). */
   def llmCurationE2e(s: SparkSession, d: String): DataFrame =
     curationFunnel(t(s, d, "documents"),
-      losers => memo(s, d, "curation_losers")(losers))
+      losers => Derived(s, d, "curation_losers")(losers.localCheckpoint(true)))
 
   /** The frame-parameterized funnel body — ONE kernel shared by the
     * graded fixture key and the StressCheck 40× planted-corpus row, so
@@ -709,10 +697,10 @@ object LlmCorpusOps {
     * is dropped BEFORE the checkpoint: the truth frame is two columns,
     * never a corpus copy. */
   private def keptFlags(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "curation_kept")(
+    Derived(s, d, "curation_kept")(
       curationFlags(t(s, d, "documents"),
-          losers => memo(s, d, "curation_losers")(losers))
-        .select(col("doc_id"), col("is_kept")))
+          losers => Derived(s, d, "curation_losers")(losers.localCheckpoint(true)))
+        .select(col("doc_id"), col("is_kept")).localCheckpoint(true))
 
   def llmGateAgreement(s: SparkSession, d: String): DataFrame = {
     val kept = keptFlags(s, d)
@@ -893,10 +881,10 @@ object LlmCorpusOps {
     // materialize as its postings/TF table.
     // memoized (not a bare localCheckpoint): the blocks release at the
     // next family boundary instead of pinning until ContextCleaner luck
-    val tf = memo(s, d, "tfidf_tf")(docs
+    val tf = Derived(s, d, "tfidf_tf")(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(length(col("term")) > 0)
-      .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf")))
+      .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf")).localCheckpoint(true))
     // dense feature index: alphabetical rank over the bounded dictionary.
     // The dictionary is METADATA SCALE (closed ~31-term vocabulary; the
     // open-vocab path is the hashing trick, fixing dim up front), so it is
@@ -979,12 +967,12 @@ object LlmCorpusOps {
     val wsF = filter(split(col("text"), " "), x => length(x) >= 1)
     val w = docs.select(col("doc_id"), explode(wsF).as("word"))
     val nb = greatest(size(col("ws")) - 1, lit(0))
-    val bg = memo(s, d, "bigrams")(docs
+    val bg = Derived(s, d, "bigrams")(docs
       .select(col("doc_id"), wsF.as("ws"))
       .select(col("doc_id"), explode(zip_with(
         slice(col("ws"), lit(1), nb), slice(col("ws"), lit(2), nb),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")))
+      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")).localCheckpoint(true))
     (w, bg)
   }
 
@@ -1120,9 +1108,9 @@ object LlmCorpusOps {
     // occurrences ride as a conditional sum), memoized: the vocab-sized
     // table feeds the scalar collect below AND the score join without
     // re-scanning the corpus per action
-    val cnt = memo(s, d, "dsir_cnt")(words.groupBy("word")
+    val cnt = Derived(s, d, "dsir_cnt")(words.groupBy("word")
       .agg(count(lit(1)).as("cc"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("tc")))
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("tc")).localCheckpoint(true))
     // smoothing denominators as literals: ONE bounded vocab-sized
     // aggregation collect (the llmPerplexity V pattern — a 1-row
     // crossJoin would plan a BNL)
@@ -1168,8 +1156,8 @@ object LlmCorpusOps {
     // memoized (the dsir_cnt pattern): the model feeds three
     // re-aggregations, the scalar count, and the score join — without
     // the memo each action re-ran the corpus-wide bigram aggregation
-    val model = memo(s, d, "kn_model")(
-      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
+    val model = Derived(s, d, "kn_model")(
+      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")).localCheckpoint(true))
     val lc = model.groupBy("w1")
       .agg(sum("c12").as("c1"), count(lit(1)).as("n1p_w1"))
     val cont = model.groupBy("w2").agg(count(lit(1)).as("n1p_w2"))

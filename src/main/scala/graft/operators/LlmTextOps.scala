@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.tools.Derived
 import graft.functions.VectorFunctions
 
 /** Text-analysis + near-dup operators beyond SURVEY §2.K — the rest of a
@@ -159,25 +160,15 @@ object LlmTextOps {
     * Returns (merge table: one row per round, ordered; final word
     * segmentation) — callers grade the first, specs audit the second. */
   def bpeTrainCore(s: SparkSession, d: String, rounds: Int = 8): (DataFrame, DataFrame) =
-    // corpus fingerprint in the key: a corpus mutated in place at the
-    // same path must MISS and retrain, not serve the stale model
-    bpeMemo.get((org.apache.spark.sql.graftnative.SessionIds.uuid(s),
-        d + "|" + graft.tables.CorpusStamp.fingerprint(d, "documents"), rounds)) {
+    // memoized: llm_bpe_train grades the merge table and llm_bpe_encode
+    // the segmentation — without it each grading/bench pass paid the
+    // full iterative training (8 argmax collects + 9 eager checkpoints)
+    // TWICE. Corpus fingerprint in the key: a corpus mutated in place at
+    // the same path must MISS and retrain, not serve the stale model
+    Derived(s, d, "bpe_train",
+        (graft.tables.CorpusStamp.fingerprint(d, "documents"), rounds)) {
       bpeTrainUncached(s, d, rounds)
     }
-
-  /** Memo for the trained pair: llm_bpe_train grades the merge table and
-    * llm_bpe_encode the segmentation — without it each grading/bench
-    * pass paid the full iterative training (8 argmax collects + 9 eager
-    * checkpoints) TWICE. The final seg checkpoint is released on
-    * eviction and at family boundaries like every stage memo; the merge
-    * table is a driver-local toDF, nothing to release. */
-  private val bpeMemo =
-    new graft.tools.LruMemo[(String, String, Int), (DataFrame, DataFrame)](8,
-      t => org.apache.spark.sql.graftnative.CheckpointRelease.release(t._2),
-      tag = "bpe_train")
-  graft.tools.MemoRegistry.register(() =>
-    bpeMemo.clear(t => org.apache.spark.sql.graftnative.CheckpointRelease.release(t._2)))
 
   /** Trainer-invocation counter — the spec hook proving the persisted-
     * tokenizer serve path (llm_bpe_persisted) never retrains, the
@@ -322,7 +313,7 @@ object LlmTextOps {
       graft.tables.VersionedTable.create(s, root, bpeTrainCore(s, d)._1)
       graft.tables.CorpusStamp.write(root, fp)
     } else if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-      // corpus mutated in place: retrain (fp-keyed bpeMemo) and
+      // corpus mutated in place: retrain (fp-keyed bpe_train artifact) and
       // RE-VERSION the persisted merge list, then seal the corpus state
       graft.tables.VersionedTable.open(s, root).overwrite(bpeTrainCore(s, d)._1)
       graft.tables.CorpusStamp.write(root, fp)
@@ -354,9 +345,8 @@ object LlmTextOps {
     // — the corpus fingerprint rides in the key so an in-place corpus
     // mutation re-derives from the retrained index instead of serving
     // the stale frame — so repeated serves price the derivation once
-    val seg = memo(s,
-        d + "|" + graft.tables.CorpusStamp.fingerprint(d, "documents"),
-        "bpe_served_seg") {
+    val seg = Derived(s, d, "bpe_served_seg",
+        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
       val merges = bpeMergesFromIndex(s, d)
       var sg = TokenizerMerge.initialSeg(
         t(s, d, "documents")
@@ -366,7 +356,7 @@ object LlmTextOps {
       merges.foreach { case (l, r) =>
         sg = sg.withColumn("seg", TokenizerMerge.applyMerge(col("seg"), l, r))
       }
-      sg
+      sg.localCheckpoint(true)
     }
     bpeEncodeEconomics(s, d, seg)
   }
@@ -520,8 +510,8 @@ object LlmTextOps {
     * per (session, corpus) like the shingle index, so grading/benching
     * both keys prices the ~1-window-per-token hash pass once. */
   private def fixtureSubstringSpans(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "substring_spans")(
-      substringSpans(t(s, d, "documents"), SubstringWindow))
+    Derived(s, d, "substring_spans")(
+      substringSpans(t(s, d, "documents"), SubstringWindow).localCheckpoint(true))
 
   /** Fixture window width: 16 tokens (docs run 10–99 tokens; Lee et al.
     * use 50 on web-scale docs — the width is a parameter, the machinery
@@ -684,10 +674,10 @@ object LlmTextOps {
     * standing doc_id % 10 boundary), span-classified ONCE per
     * (session, corpus) and shared by the profile and strip keys. */
   private def fixtureIncrementalSpans(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "substring_inc_spans") {
+    Derived(s, d, "substring_inc_spans") {
       val docs = t(s, d, "documents")
       incrementalSpans(docs.filter(col("doc_id") % 10 < 8),
-        docs.filter(col("doc_id") % 10 >= 8), SubstringWindow)
+        docs.filter(col("doc_id") % 10 >= 8), SubstringWindow).localCheckpoint(true)
     }
 
   /** Shared kernel of the incremental pair: every FRESH window
@@ -1045,33 +1035,17 @@ object LlmTextOps {
     * the index build once, not per consumer. Correctness is unaffected:
     * the checkpoint holds exactly the frame the expression tree defines
     * (preflighted at sf0.01 and sf0.1). */
-  private val stageMemo =
-    graft.tools.LruMemo.checkpointed[(String, String, String)](64, "llm_stage")
-
-  private def memo(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame = {
-    // Entries are rebuildable caches: LRU-bound retention so a long-lived
-    // JVM cycling many sessions can't pin dead sessions' checkpointed
-    // frames forever, while a LIVE session's hot memo survives other
-    // sessions churning past the bound (eviction is one cold entry at a
-    // time, never clear-all — LruMemo scaladoc).
-    // Key by the session's UUID (stable, unique) — an identity hash could
-    // collide across sessions within one JVM and hand a caller a frame
-    // bound to a dead session.
-    val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-    stageMemo.getAs(tag, (sid, d, tag))(build.localCheckpoint(true))
-  }
-
   private[graft] def fixtureShingleIndex(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "shingles")(shingleIndex(t(s, d, "documents")))
+    Derived(s, d, "shingles")(shingleIndex(t(s, d, "documents")).localCheckpoint(true))
 
   private def dedupLabels(s: SparkSession, d: String): DataFrame = {
     // hoisted out of the memo lambda to keep the index build's jobs
-    // outside the label-build's lock hold (LruMemo is reentrant, so the
-    // nesting would be legal — just longer under the lock)
+    // outside the label-build's key-lock hold (Derived builds may nest,
+    // so the nesting would be legal — just longer under the lock)
     val sh = fixtureShingleIndex(s, d)
-    memo(s, d, "cc_labels")(
+    Derived(s, d, "cc_labels")(
       connectedComponents(jaccardPairs(sh, 0.8, maxPosting = StopShingleCap)
-        .select("a_id", "b_id")))
+        .select("a_id", "b_id")).localCheckpoint(true))
   }
 
   /** Distributed connected components by min-label propagation WITH
@@ -1182,8 +1156,8 @@ object LlmTextOps {
     * (memoized) by llm_dedup_embedding and llm_dedup_semantic; each
     * previously recomputed the identical dominant-cost frame. */
   private def embeddingPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "emb_pairs")(graft.functions.VectorFunctions
-      .cosinePairsDistributed(s, t(s, d, "embeddings"), 0.45))
+    Derived(s, d, "emb_pairs")(graft.functions.VectorFunctions
+      .cosinePairsDistributed(s, t(s, d, "embeddings"), 0.45).localCheckpoint(true))
 
   /** Alternative survivor policy: instead of min doc_id, keep the LONGEST
     * member of each duplicate cluster (ties → smaller doc_id) — the policy
@@ -1389,8 +1363,8 @@ object LlmTextOps {
     // read only those two columns, and the unprojected memo materialized
     // the full document text a second time in block storage — 16 bytes
     // per row vs corpus-sized at the stated scale
-    memo(s, d, "simhash")(simhashSketches(t(s, d, "documents"))
-      .select(col("doc_id"), col("sh64")))
+    Derived(s, d, "simhash")(simhashSketches(t(s, d, "documents"))
+      .select(col("doc_id"), col("sh64")).localCheckpoint(true))
 
   /** SimHash sketch buckets — oracle-graded since round 6
     * ([[simhashBucketsOracle]] reconstructs the signed sh64 in DuckDB);
@@ -1574,9 +1548,9 @@ object LlmTextOps {
     * 20 rows; the O(n²) truth pass is priced once per (session, corpus),
     * not once per index. */
   private def annTruth(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "ann_truth")(
+    Derived(s, d, "ann_truth")(
       VectorFunctions.cosineTopKDistributed(s, t(s, d, "embeddings"), 20)
-        .orderBy(col("sim").desc, col("a_id"), col("b_id")).limit(20))
+        .orderBy(col("sim").desc, col("a_id"), col("b_id")).limit(20).localCheckpoint(true))
 
   /** The shared recall report shape (n_truth, n_hit, recall 6 dp) — ONE
     * definition of the graded recall arithmetic across the three recall
@@ -1602,11 +1576,12 @@ object LlmTextOps {
     * index build per (session, corpus), shared by the top-k and the
     * recall self-evaluation. */
   private def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "ivf") {
+    Derived(s, d, "ivf") {
       val cb = PortableQuantizer.ivfCentroids(s, d)
       t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           PortableQuantizer.ivfAssign(cb, col("embedding")).as("bucket"))
+        .localCheckpoint(true)
     }
 
   /** The GRADED default IVF top-k — serves at the 3-probe operating
@@ -1658,12 +1633,13 @@ object LlmTextOps {
     * bucket) — each vector in its 3 nearest inverted lists, the FAISS
     * nprobe knob applied to pair-finding. */
   private[graft] def ivfAssignedMp(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "ivf_mp") {
+    Derived(s, d, "ivf_mp") {
       val cb = PortableQuantizer.ivfCentroids(s, d)
       t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           posexplode(PortableQuantizer.ivfAssignMulti(cb, col("embedding"), 3))
             .as(Seq("probe", "bucket")))
+        .localCheckpoint(true)
     }
 
   /** Multi-probe IVF pair top-k kernel: candidates = DISTINCT pairs
@@ -1828,14 +1804,14 @@ object LlmTextOps {
     // corpus fingerprint in the memo key (CorpusStamp): an in-place
     // corpus mutation re-assigns against the retrained index instead of
     // serving the stale assigned frame
-    val assigned = memo(s,
-        d + "|" + graft.tables.CorpusStamp.fingerprint(d, "embeddings"),
-        "ivf_persisted") {
+    val assigned = Derived(s, d, "ivf_persisted",
+        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
       val cb = PortableQuantizer.ivfFromIndex(s, d)
       t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           posexplode(PortableQuantizer.ivfAssignMulti(cb, col("embedding"), 3))
             .as(Seq("probe", "bucket")))
+        .localCheckpoint(true)
     }
     multiProbePairTopk(s, d, assigned)
   }

@@ -121,9 +121,6 @@ object PortableQuantizer {
     * index serve path (ann_ivf_persisted) never retrains. */
   private[graft] val trainRuns = new java.util.concurrent.atomic.AtomicLong
 
-  private def sid(s: SparkSession): String =
-    org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-
   /** Persist the trained ANN index into a `graft-vt` versioned table:
     * v0 = the IVF coarse codebook, v1 = + the PQ codebooks. Schema
     * (kind, m, k, vals): ("ivf", 0, bucket, centroid) and
@@ -235,16 +232,6 @@ object PortableQuantizer {
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.map(_.getSeq[Long](1).toSeq).toSeq)
 
-  /** Codebooks are an INDEX — trained once per (session, corpus STATE):
-    * the corpus fingerprint rides in the key (CorpusStamp) so an
-    * in-place corpus mutation retrains instead of serving stale. */
-  private val ivfMemo =
-    new graft.tools.LruMemo[(String, String, String), Seq[Seq[Long]]](8, tag = "vt_ivf_centroids")
-  private val pqMemo =
-    new graft.tools.LruMemo[(String, String, String), Seq[Seq[Seq[Long]]]](8, tag = "vt_pq_codebooks")
-  // driver-side Seqs only — clear() alone frees them
-  graft.tools.MemoRegistry.register(() => { ivfMemo.clear(); pqMemo.clear() })
-
   private def trainFrame(s: SparkSession, d: String): DataFrame =
     // the TrainSample SMALLEST ids, not `vec_id < TrainSample`: a corpus
     // whose ids are offset or sparse would make the filter form return 0
@@ -254,9 +241,13 @@ object PortableQuantizer {
     Tables.load(s, d, "embeddings").orderBy("vec_id").limit(TrainSample)
       .select(col("vec_id").as("id"), quantArr(col("embedding")).as("qa"))
 
-  /** IVF coarse quantizer: one full-dimension k-centroid codebook. */
+  /** IVF coarse quantizer: one full-dimension k-centroid codebook.
+    * Codebooks are an INDEX — trained once per (session, corpus STATE):
+    * the corpus fingerprint rides in the key (CorpusStamp) so an
+    * in-place corpus mutation retrains instead of serving stale. */
   def ivfCentroids(s: SparkSession, d: String): Seq[Seq[Long]] =
-    ivfMemo.get((sid(s), d, graft.tables.CorpusStamp.fingerprint(d, "embeddings"))) {
+    graft.tools.Derived(s, d, "vt_ivf_centroids",
+        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
       train(trainFrame(s, d)
         .select(lit(0).as("m"), col("id"), col("qa").as("q")), K)(0)
         .map(_.toSeq).toSeq
@@ -299,7 +290,8 @@ object PortableQuantizer {
   /** PQ codebooks: [[PqOps.NumSub]] subspaces × [[PqOps.K]] codewords,
     * every subspace trained concurrently in the same Lloyd's jobs. */
   def pqCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Long]]] =
-    pqMemo.get((sid(s), d, graft.tables.CorpusStamp.fingerprint(d, "embeddings"))) {
+    graft.tools.Derived(s, d, "vt_pq_codebooks",
+        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
       val cbs = train(trainFrame(s, d)
         .select(col("id"), posexplode(expr(
           s"transform(sequence(0, ${NumSub - 1}), " +

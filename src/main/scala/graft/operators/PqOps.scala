@@ -54,14 +54,6 @@ object PqOps {
   val Shortlist = 40
   val TrainSample = 1024
 
-  /** Codebooks are an INDEX — trained once per (session, corpus), queried
-    * many times; constant size (16 × 16 × 4 doubles). */
-  private val codebookMemo =
-    new graft.tools.LruMemo[(String, String), Seq[Seq[Seq[Double]]]](8, tag = "pq_codebooks")
-
-  private def sid(s: SparkSession): String =
-    org.apache.spark.sql.graftnative.SessionIds.uuid(s)
-
   /** Deterministic Lloyd's k-means on a driver-local point set: seeded
     * initial centroids drawn from the (distinct) points, 8 assignment/
     * re-mean rounds, empty clusters keep their previous centroid. */
@@ -193,9 +185,10 @@ object PqOps {
   /** Train all [[NumSub]] codebooks from a bounded deterministic sample
     * (first [[TrainSample]] vec_ids — a pure, reproducible choice),
     * distributed: one training-frame pass per Lloyd's round covers every
-    * subspace. */
+    * subspace. Codebooks are an INDEX — trained once per (session,
+    * corpus), queried many times; constant size (16 × 16 × 4 doubles). */
   private[graft] def codebook(s: SparkSession, d: String): Seq[Seq[Seq[Double]]] =
-    codebookMemo.get((sid(s), d)) {
+    graft.tools.Derived(s, d, "pq_codebooks") {
       val pts = trainFrame(s, d)
         .select(col("rank"), posexplode(expr(
           s"transform(sequence(0, ${NumSub - 1}), " +
@@ -207,16 +200,11 @@ object PqOps {
       (0 until NumSub).map(m => cbs(m).map(_.toSeq).toSeq)
     }
 
-  private val ivfMemo =
-    new graft.tools.LruMemo[(String, String), Seq[Seq[Double]]](8, tag = "ivf_centroids")
-  // driver-side Seqs, no executor blocks to release — clear() alone frees them
-  graft.tools.MemoRegistry.register(() => { codebookMemo.clear(); ivfMemo.clear() })
-
   /** A single FULL-dimension codebook (the IVF coarse quantizer) from the
     * same bounded sample — shared infrastructure with the PQ codebooks:
     * training is O(1) in the corpus, assignment is a row-local argmin. */
   def ivfCentroids(s: SparkSession, d: String, k: Int = K): Seq[Seq[Double]] =
-    ivfMemo.get((sid(s), d)) {
+    graft.tools.Derived(s, d, "ivf_centroids") {
       // single-group (m = 0) use of the distributed trainer, full dim
       // (NumSub * SubDim — the same layout constant the PQ slicing above
       // derives from; a hardcoded 64 here would fail as an opaque NPE in

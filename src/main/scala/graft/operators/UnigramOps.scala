@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.{CheckpointRelease, GraftNative, SessionIds, UnigramSegment}
+import org.apache.spark.sql.graftnative.{CheckpointRelease, GraftNative, UnigramSegment}
 import graft.Tables
 
 /** Unigram-LM (SentencePiece-style) tokenizer — the second trained
@@ -64,14 +64,8 @@ object UnigramOps {
   def unigramCore(s: SparkSession, d: String): (Seq[(String, Long, Long)], DataFrame) =
     // corpus fingerprint in the key: a corpus mutated in place at the
     // same path must MISS and retrain, not serve the stale model
-    memo.get((SessionIds.uuid(s), d,
-        graft.tables.CorpusStamp.fingerprint(d, "documents"))) { trainUncached(s, d) }
-
-  private val memo =
-    new graft.tools.LruMemo[(String, String, String), (Seq[(String, Long, Long)], DataFrame)](8,
-      t => CheckpointRelease.release(t._2), tag = "unigram_train")
-  graft.tools.MemoRegistry.register(() =>
-    memo.clear(t => CheckpointRelease.release(t._2)))
+    graft.tools.Derived(s, d, "unigram_train",
+        graft.tables.CorpusStamp.fingerprint(d, "documents"))(trainUncached(s, d))
 
   /** Trainer-invocation counter — the spec hook proving the persisted-
     * tokenizer serve path (llm_unigram_persisted) never re-runs EM, the
@@ -205,8 +199,8 @@ object UnigramOps {
     * together with llm_bpe_persisted this makes the tokenizer-artifact
     * posture a FAMILY property, not a BPE special case. */
   def llmUnigramPersisted(s: SparkSession, d: String): DataFrame = {
-    val seg = servedSegMemo.get((SessionIds.uuid(s), d,
-        graft.tables.CorpusStamp.fingerprint(d, "documents"))) {
+    val seg = graft.tools.Derived(s, d, "unigram_served_seg",
+        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
       val (ps, ss) = unigramScoresFromIndex(s, d).unzip
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
@@ -219,12 +213,6 @@ object UnigramOps {
     }
     encodeEconomics(s, d, seg)
   }
-
-  /** The served word-token table is a derived table like the trained
-    * one — memoized + checkpointed per (session, corpus) with the same
-    * release hooks. */
-  private val servedSegMemo =
-    graft.tools.LruMemo.checkpointed[(String, String, String)](8, tag = "unigram_served_seg")
 
   /** Graded: SentencePiece's third step — PRUNE the EM-trained vocabulary
     * to a serving budget. Single chars always survive (coverage); the

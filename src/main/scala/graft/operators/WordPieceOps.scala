@@ -58,18 +58,8 @@ object WordPieceOps {
       (Seq[(Int, String, String, String, Long, Long)], Seq[String], DataFrame) =
     // corpus fingerprint in the key: a corpus mutated in place at the
     // same path must MISS and retrain, not serve the stale model
-    memo.get((org.apache.spark.sql.graftnative.SessionIds.uuid(s), d,
-        graft.tables.CorpusStamp.fingerprint(d, "documents"))) {
-      trainUncached(s, d)
-    }
-
-  private val memo = new graft.tools.LruMemo[
-      (String, String, String),
-      (Seq[(Int, String, String, String, Long, Long)], Seq[String], DataFrame)](8,
-    t => org.apache.spark.sql.graftnative.CheckpointRelease.release(t._3),
-    tag = "wordpiece_train")
-  graft.tools.MemoRegistry.register(() =>
-    memo.clear(t => org.apache.spark.sql.graftnative.CheckpointRelease.release(t._3)))
+    graft.tools.Derived(s, d, "wordpiece_train",
+        graft.tables.CorpusStamp.fingerprint(d, "documents"))(trainUncached(s, d))
 
   /** Trainer-invocation counter — the spec hook proving the persisted-
     * tokenizer serve path (llm_wordpiece_persisted) never retrains, the
@@ -242,9 +232,8 @@ object WordPieceOps {
     * (asserted via [[wordpieceTrainRuns]] in VtDataSourceSpec). Same
     * answer, same oracle as llm_wordpiece_encode. */
   def llmWordpiecePersisted(s: SparkSession, d: String): DataFrame = {
-    val seg = servedSegMemo.get(
-        (org.apache.spark.sql.graftnative.SessionIds.uuid(s), d,
-          graft.tables.CorpusStamp.fingerprint(d, "documents"))) {
+    val seg = graft.tools.Derived(s, d, "wordpiece_served_seg",
+        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
       val vocab = wordpieceVocabFromIndex(s, d)
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
@@ -255,9 +244,6 @@ object WordPieceOps {
     }
     encodeEconomics(s, d, seg)
   }
-
-  private val servedSegMemo =
-    graft.tools.LruMemo.checkpointed[(String, String, String)](8, tag = "wordpiece_served_seg")
 
   val queries: Map[String, Q] = Map(
     "llm_wordpiece_train" -> (llmWordpieceTrain _),

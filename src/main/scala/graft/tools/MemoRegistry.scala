@@ -1,15 +1,15 @@
 package graft.tools
 
-/** Process-wide list of memo release hooks.
+/** Lifecycle entry points of the [[Derived]] artifact store.
   *
-  * Each operator family that memoizes a derived artifact (shingle index,
-  * edge list, PQ codebooks — all [[LruMemo]]s over localCheckpoint'd frames)
-  * registers a release closure here at init. A long single-JVM sweep over
-  * the whole registry (Bench's 240+-key run, Verify's full dump) otherwise
-  * accumulates every family's checkpoint blocks for the entire run: by the
-  * tail, queries pay GC and block-eviction pressure for state no later
-  * query will ever read. Round-5 measurements put that inflation at 5-20×
-  * on tail keys (stat_crosstab 29.4 s driver-run vs 1.5 s isolated).
+  * Every operator family that memoizes a derived artifact (shingle index,
+  * edge list, tokenizer model, PQ codebooks) does so in [[Derived]]. A
+  * long single-JVM sweep over the whole registry (Bench's 240+-key run,
+  * Verify's full dump) otherwise accumulates every family's checkpoint
+  * blocks for the entire run: by the tail, queries pay GC and
+  * block-eviction pressure for state no later query will ever read.
+  * Round-5 measurements put that inflation at 5-20× on tail keys
+  * (stat_crosstab 29.4 s driver-run vs 1.5 s isolated).
   *
   * [[releaseAll]] is called at family boundaries; memos rebuild on next
   * use, so this is purely a memory/GC lifecycle hook, never a correctness
@@ -113,18 +113,8 @@ object MemoRegistry {
     def reset(): Unit = perKey.synchronized { perKey.clear(); current = "" }
   }
 
-  private val hooks = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-
-  def register(release: () => Unit): Unit = synchronized { hooks += release }
-
-  def releaseAll(): Unit = synchronized {
-    // NonFatal only: a release hook dying of OOM/StackOverflow must not
-    // have its first symptom swallowed by the very hook meant to relieve
-    // memory pressure. Non-fatal drop failures are logged, not rethrown —
-    // release stays a lifecycle hint, never a correctness gate.
-    hooks.foreach(h => try h() catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] memo release hook failed: $e")
-    })
-  }
+  /** Empty the [[Derived]] store, releasing every memoized frame's
+    * blocks. Resolved table plans (`Tables.planMemo`) hold no blocks and
+    * survive. */
+  def releaseAll(): Unit = Derived.clear()
 }

@@ -3,10 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.LruMemo
 
-/** The stage-memo eviction contract (LlmTextOps caches derived tables in
-  * an LruMemo): crossing the capacity bound evicts cold entries one at a
-  * time — a live consumer's hot entry is never dropped, unlike the
-  * previous clear-all-on-bound behavior. */
+/** The LruMemo contract behind the Derived artifact store (every
+  * family's derived tables share ONE LruMemo) and Tables.planMemo:
+  * crossing the capacity bound evicts cold entries one at a time — a live
+  * consumer's hot entry is never dropped, unlike the previous
+  * clear-all-on-bound behavior — and a build holds only its own key's
+  * lock. */
 class LruMemoSpec extends AnyFunSuite {
 
   test("exceeding the bound evicts only the coldest entry, never a hot one") {
@@ -138,5 +140,25 @@ class LruMemoSpec extends AnyFunSuite {
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(builds.get == 4, s"expected 4 builds, got ${builds.get}")
+  }
+
+  test("a slow build of one key does not block a hit on an already-built key") {
+    import java.util.concurrent.{CompletableFuture, CountDownLatch, TimeUnit}
+    val m = new LruMemo[String, Int](4)
+    m.get("b")(2)
+    val started = new CountDownLatch(1)
+    val gate = new CountDownLatch(1)
+    val slow = new Thread(() => m.get("a") { started.countDown(); gate.await(); 1 })
+    slow.start()
+    try {
+      assert(started.await(10, TimeUnit.SECONDS))
+      val hit = CompletableFuture.supplyAsync[Int](() => m.get("b")(sys.error("rebuilt b")))
+      // the hit must not wait for key a's build to finish
+      assert(hit.get(5, TimeUnit.SECONDS) == 2)
+    } finally {
+      gate.countDown()
+      slow.join()
+    }
+    assert(m.get("a")(sys.error("rebuilt a")) == 1)
   }
 }
