@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * column as INT64 TIMESTAMP(NANOS) (pre-2026-08-13) and as TIMESTAMP(MICROS)
   * (current). We branch on the dtype the reader actually produced —
   * schema-on-read, not a frozen assumption — so both generations load:
-  *   - LongType (nanosAsLong path): ns longs, truncate to µs (matches
-  *     DuckDB's own ns→µs truncation).
+  *   - LongType (the nanosAsLong path, set by [[GraftSession.builder]]):
+  *     ns longs, truncate to µs (matches DuckDB's own ns→µs truncation).
   *   - TIMESTAMP_NTZ (µs fixtures, no tz in footer): cast to TimestampType;
   *     the session is pinned UTC so NTZ ≡ LTZ wall-clock.
   *   - TimestampType: pass through.
@@ -23,28 +23,6 @@ import org.apache.spark.sql.functions._
 object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Engine-wide optimizer tuning, applied once per session on first load.
-    * InferFiltersFromGenerate synthesizes a `size(e) > 0 AND isnotnull(e)`
-    * pre-filter under every explode — for our text operators `e` is an
-    * interpreted higher-order shingle expression, so the inferred filter
-    * TRIPLES its evaluation (twice in the filter, once in the project) and
-    * prunes nothing (fixture arrays are never empty, and no join pushdown
-    * depends on it). Measured on llm_ngram_jaccard at sf0.1: 4.5 s → 1.9 s
-    * warm with the rule excluded. */
-  private val ExcludedRule =
-    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-
-  private def tune(spark: SparkSession): Unit = {
-    // Read-modify-write: callers (tests, users) may have excluded their own
-    // rules — merge instead of clobbering, and skip the conf write once
-    // present (conf sets invalidate cached plans).
-    val cur = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-      .map(_.trim).filter(_.nonEmpty)
-    if (!cur.exists(_.split(",").map(_.trim).contains(ExcludedRule)))
-      spark.conf.set("spark.sql.optimizer.excludedRules",
-        (cur.toSeq :+ ExcludedRule).mkString(","))
-  }
 
   /** Analyzed-plan memo (r15): `spark.read.parquet` re-lists the path and
     * re-reads parquet footers for schema inference on EVERY call, and the
@@ -66,20 +44,12 @@ object Tables {
 
   /** Load one table as a DataFrame, applying per-table normalization. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    tune(spark)
     val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(spark)
     planMemo.getAs("tables_plan", (sid, sfDir, name))(loadRaw(spark, sfDir, name))
   }
 
   private def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
-      // nanosAsLong must be set before the FIRST read of events.parquet in
-      // the session (the footer is parsed at read time). Harmless when the
-      // file carries µs timestamps — it only changes how TIMESTAMP(NANOS)
-      // footers are surfaced (as raw int64). Guarded like tune(): conf
-      // sets invalidate cached plans, and this runs on EVERY events load.
-      if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       raw.schema("ts").dataType match {

@@ -4,16 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 
-/** Test-facing bridge into private[sql] plan machinery: materialize an
-  * already-analyzed [[LogicalPlan]] fragment back into a DataFrame.
+/** Bridge into private[sql] plan machinery: materialize an
+  * already-analyzed [[LogicalPlan]] back into a DataFrame.
   *
-  * PlanInvariantsSpec uses this to AUDIT plans, not to build them: it
-  * lifts a Window node's child out of a graded key's optimized plan and
-  * measures the partition key's fixture NDV against the child's row count
-  * — the guard that catches "data-grain window partitioned by a 3-value
-  * key" (linear locally, 3 tasks at 100 TB), which a structural plan
-  * check alone cannot see. Lives in the org.apache.spark.sql namespace
-  * solely for access to classic.Dataset.ofRows.
+  * Two users. `graft.tools.Layout.checkpointBy` wraps a checkpointed
+  * `LogicalRDD` that declares its true layout into the frame it returns.
+  * PlanInvariantsSpec audits plans with it: it lifts a Window node's
+  * child out of a graded key's optimized plan and measures the partition
+  * key's fixture NDV against the child's row count — the guard that
+  * catches "data-grain window partitioned by a 3-value key" (linear
+  * locally, 3 tasks at 100 TB), which a structural plan check alone
+  * cannot see. Lives in the org.apache.spark.sql namespace solely for
+  * access to classic.Dataset.ofRows.
   */
 object PlanFrames {
   /** The plan fragment as a queryable DataFrame. */

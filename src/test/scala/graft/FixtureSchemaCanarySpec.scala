@@ -29,8 +29,8 @@ class FixtureSchemaCanarySpec extends SparkTestBase {
   }
 
   test("CANARY: events.ts raw parquet type is one the loader handles") {
-    // Raw read under the loader's own conf (nanosAsLong set by Tables.load
-    // in the shared session): the supported generations surface as int64
+    // Raw read under the loader's own conf (nanosAsLong, set by
+    // GraftSession.builder): the supported generations surface as int64
     // (ns fixtures), TIMESTAMP_NTZ (µs, no tz), or TIMESTAMP (µs, tz'd).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$SF/events.parquet").schema("ts").dataType

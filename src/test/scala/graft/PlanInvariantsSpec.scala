@@ -274,4 +274,22 @@ class PlanInvariantsSpec extends SparkTestBase {
     }
     assert(broken.isEmpty, s"sort-lift regressions:\n${broken.mkString("\n")}")
   }
+
+  test("graph_pagerank's rounds reuse the layout checkpoints: Exchange/Sort counts pinned") {
+    // trans and nodes are Layout.checkpointBy leaves declaring their hash
+    // layout, so the 5 rounds shuffle only the rank vector and each
+    // round's received mass. Without the declared layout every round
+    // re-exchanges and re-sorts the static sides (17/17 at r15's before
+    // plan, plans/r15/graph_pagerank_before.txt). The bound is the count
+    // before checkpointBy kept AQE on, and the r15 after plan's: 6 of each.
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = SparkEntry.queries("graph_pagerank")(spark, SF)
+      .queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }.size
+    val sorts = plan.collect { case s: SortExec => s }.size
+    assert(exchanges <= 6 && sorts <= 6,
+      s"graph_pagerank: $exchanges Exchanges / $sorts Sorts (pinned 6 / 6):\n$plan")
+  }
 }
