@@ -2,8 +2,13 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, NumericType, StructType}
 
 /** A minimal versioned table format over plain parquet — the lakehouse
   * primitives (ACID commit, MERGE upsert, copy-on-write DELETE, time
@@ -32,9 +37,13 @@ import org.apache.spark.sql.functions._
   * and DELETE are copy-on-write at file granularity: files with no
   * matching rows survive untouched into the next version (DELETE prunes
   * the rewrite set via `input_file_name()`), so write amplification is
-  * proportional to the touched files, not the table. Production formats
-  * (Delta/Iceberg) add column stats for file skipping and a log-compaction
-  * checkpoint; the commit/CoW/time-travel shape is the same.
+  * proportional to the touched files, not the table. Optional per-file
+  * min/max and bloom sidecars (`create(..., statsCol, bloomCol)`) drive
+  * file skipping; a commit fills both in one aggregate pass over its fresh
+  * files. Reads take the schema from one data file's footer on the driver,
+  * so no operation spends a Spark job on schema inference. Production
+  * formats (Delta/Iceberg) add a log-compaction checkpoint; the
+  * commit/CoW/time-travel shape is the same.
   */
 final class VersionedTable private (val spark: SparkSession, val root: String) {
   import VersionedTable._
@@ -85,7 +94,21 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
       "VersionedTable reads require spark.sql.files.ignoreMissingFiles=false: " +
         "with it on, a read racing a vacuum would silently return a torn " +
         "subset of the snapshot instead of failing")
-    spark.read.parquet(files: _*)
+    scan(files)
+  }
+
+  /** `spark.read.parquet(files)` without Spark's schema inference, a
+    * one-task job that reads one footer: the driver reads that footer
+    * (the smallest path, the file inference picks) itself. Spark keeps
+    * its schema JSON there and data files never change, so the schema is
+    * exact; a footer without it falls back to inference. */
+  private def scan(files: Seq[String]): DataFrame = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new HPath(files.min), spark.sessionState.newHadoopConf()))
+    val json = try r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY) finally r.close()
+    if (json == null) spark.read.parquet(files: _*)
+    else spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(files: _*)
   }
 
   /** Snapshot read. `asOf` = time travel to an older version. */
@@ -167,31 +190,6 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     (c, arr("files").zip(arr("blooms").map(dec.decode)).toMap)
   }
 
-  /** One aggregate job over just the fresh files: per file, Spark's own
-    * serialized bloom sketch of the key column (BloomBridge — the same
-    * XxHash64 path the runtime-filter expressions use, so the driver
-    * probe can never hash differently). */
-  private def computeBlooms(files: Seq[String], c: String): Seq[(String, Array[Byte])] = {
-    if (files.isEmpty) return Seq.empty
-    val df = spark.read.parquet(files: _*)
-    // The driver probe hashes Literal(key: Long); XxHash64 of an INT and
-    // of a LONG differ, so a non-long bloom column would produce
-    // systematic FALSE NEGATIVES (silently lost rows) — fail loudly at
-    // write time instead.
-    val dt = df.schema(c).dataType
-    require(dt == org.apache.spark.sql.types.LongType,
-      s"bloom column '$c' must be LongType (got $dt): the driver-side probe " +
-        "hashes long keys, and XxHash64(int) != XxHash64(long) would turn " +
-        "type mismatch into silent false-negative skipping")
-    df
-      .groupBy(input_file_name().as("f"))
-      .agg(org.apache.spark.sql.graftnative.BloomBridge
-        .bloomFilterAgg(col(c), BloomBits / 10, BloomBits).as("bf"))
-      .collect()
-      .filter(!_.isNullAt(1)) // all-NULL key file: no entry → kept conservatively
-      .map(r => normalizeUri(r.getString(0)) -> r.getAs[Array[Byte]](1)).toSeq
-  }
-
   private def writeBlooms(v: Int, c: String, entries: Seq[(String, Array[Byte])]): Unit = {
     val enc = java.util.Base64.getEncoder
     val json = "{\"col\":\"" + c + "\"," +
@@ -233,20 +231,26 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     else snapshotRead(pruned).filter(col(c) === key)
   }
 
-  /** Compute (min,max) of `c` per fresh data file — one aggregate job over
-    * just the new files (production formats collect this in the writer;
-    * recomputing over freshly-written files is the same I/O order). */
-  private def computeStats(files: Seq[String], c: String): Seq[(String, (Double, Double))] = {
-    if (files.isEmpty) return Seq.empty
-    spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(c).cast("double")).as("lo"), max(col(c).cast("double")).as("hi"))
-      .collect()
-      // a file whose stats column is all-NULL (or non-numeric) gets NO
-      // entry — pruneFiles keeps entry-less files, so skipping stays
-      // conservative instead of NPEing on getDouble
-      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-      .map(r => normalizeUri(r.getString(0)) -> (r.getDouble(1), r.getDouble(2))).toSeq
+  /** Both sidecars' entries for the fresh files in ONE aggregate job:
+    * per file, min/max of the stats column as double, and Spark's own
+    * serialized bloom sketch of the key column (BloomBridge — the same
+    * XxHash64 path the runtime-filter expressions use, so the driver probe
+    * can never hash differently). A file whose stats column is all NULL,
+    * or whose key is not a long, gets NO entry: pruning keeps entry-less
+    * files, so skipping stays conservative. */
+  private def computeSidecars(files: Seq[String], sc: Option[String], bc: Option[String])
+      : (Seq[(String, (Double, Double))], Seq[(String, Array[Byte])]) = {
+    if (files.isEmpty || (sc.isEmpty && bc.isEmpty)) return (Nil, Nil)
+    val df = scan(files)
+    val b = bc.filter(c => df.schema(c).dataType == LongType)
+    val aggs = sc.toSeq.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))) ++
+      b.map(c => org.apache.spark.sql.graftnative.BloomBridge
+        .bloomFilterAgg(col(c), BloomBits / 10, BloomBits))
+    val rows = df.groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect().toSeq
+    def entries[T](i: Int, get: Row => T) =
+      rows.filter(r => !r.isNullAt(i)).map(r => normalizeUri(r.getString(0)) -> get(r))
+    (if (sc.isEmpty) Nil else entries(2, r => (r.getDouble(1), r.getDouble(2))),
+      if (b.isEmpty) Nil else entries(aggs.size, _.getAs[Array[Byte]](aggs.size)))
   }
 
   /** Written ONLY by the winner of the manifest race, after its rename —
@@ -304,17 +308,14 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     finally s.close()
   }
 
-  /** Publish `carried ++ fresh` as the next version after `base` (atomic
-    * rename = commit point). Returns the committed version. Retries
-    * against a moved head up to `maxRetries` times. If the table keeps
-    * file stats, the winner also publishes the version's stats sidecar:
-    * carried files inherit their previous entries, only fresh files are
-    * scanned. */
-  /** SINGLE-attempt publish at version `base + 1`; throws [[VersionedTable
-    * .CommitConflict]] if a concurrent writer took that version. The
-    * caller must REBASE — recompute carried/fresh against the new head —
-    * before trying again: blindly republishing a stale file list at the
-    * next slot would silently drop the winner's files (lost update). */
+  /** SINGLE-attempt publish of `carried ++ fresh` at version `base + 1`;
+    * throws [[VersionedTable.CommitConflict]] if a concurrent writer took
+    * that version. The caller must REBASE — recompute carried/fresh
+    * against the new head — before trying again: blindly republishing a
+    * stale file list at the next slot would silently drop the winner's
+    * files (lost update). If the table keeps sidecars, the winner then
+    * publishes the version's stats and bloom sidecars: carried files
+    * inherit their previous entries, and one pass scans the fresh files. */
   private def commitOnce(base: Int, carried: Seq[String], fresh: Seq[String],
                          newStatsCol: Option[String] = None,
                          txn: Option[String] = None,
@@ -359,28 +360,20 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     }
     txn.foreach(recordTxn) // keep the incremental txn cache warm
     // The manifest rename above IS the commit; everything past it is an
-    // optimization, so a stats failure must not surface as a commit
+    // optimization, so a sidecar failure must not surface as a commit
     // failure (the caller would retry a commit that already happened and
     // duplicate rows). Known benign loss: if the PREVIOUS winner hasn't
     // published its sidecar yet, carried files get no entries and simply
     // stop pruning — conservative, never wrong.
-    try newStatsCol.orElse(statsCol).foreach { c =>
-      val prev: Map[String, (Double, Double)] =
-        if (base >= 0 && Files.exists(statsPath(base))) readStatsJson(base)._2
-        else Map.empty
-      val entries = carried.flatMap(f => prev.get(normalize(f)).map(normalize(f) -> _)) ++
-        computeStats(fresh, c)
-      writeStats(attempt, c, entries)
-    } catch { case scala.util.control.NonFatal(_) => }
-    // same contract as the stats sidecar: post-commit optimization only,
-    // carried files inherit entries, a failure never unwinds the commit
-    try newBloomCol.orElse(bloomCol).foreach { c =>
-      val prev: Map[String, Array[Byte]] =
-        if (base >= 0 && Files.exists(bloomPath(base))) readBloomJson(base)._2
-        else Map.empty
-      val entries = carried.flatMap(f => prev.get(normalize(f)).map(normalize(f) -> _)) ++
-        computeBlooms(fresh, c)
-      writeBlooms(attempt, c, entries)
+    try {
+      val (sc, bc) = (newStatsCol.orElse(statsCol), newBloomCol.orElse(bloomCol))
+      val (stats, blooms) = computeSidecars(fresh, sc, bc)
+      def inherit[T](p: Path, prev: => Map[String, T]): Seq[(String, T)] = {
+        val m = if (base >= 0 && Files.exists(p)) prev else Map.empty[String, T]
+        carried.flatMap(f => m.get(normalize(f)).map(normalize(f) -> _))
+      }
+      sc.foreach(c => writeStats(attempt, c, inherit(statsPath(base), readStatsJson(base)._2) ++ stats))
+      bc.foreach(c => writeBlooms(attempt, c, inherit(bloomPath(base), readBloomJson(base)._2) ++ blooms))
     } catch { case scala.util.control.NonFatal(_) => }
     attempt
   }
@@ -579,16 +572,16 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
   }
 
   /** Retention cleanup: drop all but the newest `keepVersions` manifests
-    * (and their stats sidecars), then delete every data file no remaining
-    * manifest references AND older than `retentionMs` — CoW rewrites and
-    * abandoned writes leave orphans that only a vacuum reclaims. The age
-    * threshold is the in-flight-writer guard: a concurrent commit's
-    * freshly-written files are unreferenced until its manifest rename
-    * lands, and deleting them would corrupt that commit (the standard
-    * lakehouse vacuum-retention rule). Dropped manifests' txn ids are
-    * checkpointed first, so [[appendIdempotent]] stays exactly-once
-    * across vacuums. Time travel before the horizon is gone afterwards,
-    * by design. Returns the number of data files deleted.
+    * (and their stats and bloom sidecars), then delete every data file no
+    * remaining manifest references AND older than `retentionMs` — CoW
+    * rewrites and abandoned writes leave orphans that only a vacuum
+    * reclaims. The age threshold is the in-flight-writer guard: a
+    * concurrent commit's freshly-written files are unreferenced until its
+    * manifest rename lands, and deleting them would corrupt that commit
+    * (the standard lakehouse vacuum-retention rule). Dropped manifests'
+    * txn ids are checkpointed first, so [[appendIdempotent]] stays
+    * exactly-once across vacuums. Time travel before the horizon is gone
+    * afterwards, by design. Returns the number of data files deleted.
     *
     * Reader-race contract: a DataFrame already PLANNED on a version this
     * vacuum reclaims (planned before, executed after — the torn-read
@@ -614,6 +607,7 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     val referenced = kept.flatMap(readManifest).map(normalize).toSet
     dropped.foreach { v =>
       Files.deleteIfExists(statsPath(v))
+      Files.deleteIfExists(bloomPath(v))
       Files.deleteIfExists(manifestPath(v))
     }
     val dataDir = Paths.get(root, "data")
@@ -681,10 +675,19 @@ object VersionedTable {
 
   /** Create a new table at `root` with `df` as version 0. `statsCol`
     * (numeric) turns on per-file min/max stats and [[VersionedTable
-    * .readWhere]] file skipping for the table's whole life. */
+    * .readWhere]] file skipping, `bloomCol` (long) per-file blooms and
+    * [[VersionedTable.readWhereEq]], for the table's whole life. Both are
+    * checked here, before any file is written: the sidecars are computed
+    * after the commit, where an error only drops them. */
   def create(spark: SparkSession, root: String, df: DataFrame,
              statsCol: Option[String] = None,
              bloomCol: Option[String] = None): VersionedTable = {
+    statsCol.map(df.schema(_)).foreach(f => require(f.dataType.isInstanceOf[NumericType],
+      s"stats column '${f.name}' must be numeric (got ${f.dataType})"))
+    // the driver probe hashes Literal(key: Long), and XxHash64(int) !=
+    // XxHash64(long): any other type would skip files holding the key
+    bloomCol.map(df.schema(_)).foreach(f => require(f.dataType == LongType,
+      s"bloom column '${f.name}' must be LongType (got ${f.dataType})"))
     val t = new VersionedTable(spark, root)
     Files.createDirectories(t.manifestDir)
     require(t.versions.isEmpty, s"table already exists at $root")

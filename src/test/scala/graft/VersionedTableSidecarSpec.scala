@@ -1,0 +1,156 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.BloomBridge
+import org.apache.spark.sql.types._
+import graft.tables.VersionedTable
+
+/** What a VersionedTable keeps beside its data: the schema a read plans
+  * with (taken from a data file's footer, not inferred by a Spark job),
+  * the per-file stats and bloom sidecars (filled in one aggregate pass
+  * per commit), the sidecar-column checks at create, and vacuum's
+  * cleanup of every sidecar of a dropped version. */
+class VersionedTableSidecarSpec extends SparkTestBase {
+
+  private def freshRoot(): String =
+    Files.createTempDirectory("graft_vt_side").resolve("t").toString
+
+  private def manifests(root: String): Seq[String] = {
+    val s = Files.list(Paths.get(root, "_manifests"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+  }
+
+  /** The data files of the current snapshot, as Spark spells them. */
+  private def files(t: VersionedTable): Seq[String] = t.read().inputFiles.toSeq
+
+  test("read schema from the footer equals Spark's inferred schema, after every operation") {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("d", DoubleType),
+      StructField("dec", DecimalType(38, 18)),
+      StructField("s", StringType, nullable = false),
+      StructField("dt", DateType),
+      StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
+      StructField("arr", ArrayType(IntegerType, containsNull = false)),
+      StructField("st", StructType(Seq(
+        StructField("a", IntegerType, nullable = false), StructField("b", StringType)))),
+      StructField("m", MapType(StringType, IntegerType))))
+    def df(ids: Range): DataFrame = spark.createDataFrame(ids.map(i => Row(
+      i.toLong, i * 1.5, new java.math.BigDecimal(s"$i.123456789012345678"), s"s$i",
+      java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)),
+      java.sql.Timestamp.valueOf(java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusHours(i)),
+      java.time.LocalDateTime.of(2021, 6, 1, 12, 0).plusMinutes(i),
+      Seq(i, i + 1), Row(i, if (i % 3 == 0) null else s"b$i"),
+      Map("k" -> i))).asJava, schema).repartition(2)
+    val t = VersionedTable.create(spark, freshRoot(), df(0 until 20), statsCol = Some("d"))
+    def check(op: String): Unit = {
+      val inferred = spark.read.parquet(files(t): _*).schema
+      assert(t.read().schema == inferred, s"after $op")
+    }
+    check("create")
+    t.append(df(20 until 30)); check("append")
+    t.merge(df(25 until 35), "id"); check("merge")
+    t.delete(col("id") === 3); check("delete")
+    t.compact(); check("compact")
+    t.optimizeLayout("id", numFiles = 3); check("optimizeLayout")
+    assert(t.read().count() == 34)
+    assert(t.read().filter(col("id") === 21).select("ntz").head().get(0) ==
+      java.time.LocalDateTime.of(2021, 6, 1, 12, 21))
+  }
+
+  /** `file -> value` of one sidecar array, parsed like the table does. */
+  private def sidecar(root: String, v: Int, ext: String, field: String): Map[String, String] = {
+    val s = new String(Files.readAllBytes(Paths.get(root, "_manifests", f"v$v%08d.$ext.json")), "UTF-8")
+    def arr(f: String): Seq[String] =
+      s.split("\"" + f + "\":\\[", 2)(1).split("]", 2)(0)
+        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
+    arr("files").zip(arr(field)).toMap
+  }
+
+  private def local(uri: String): String =
+    java.net.URLDecoder.decode(
+      uri.stripPrefix("file://").stripPrefix("file:").replace("+", "%2B"), "UTF-8")
+
+  test("one-pass sidecars equal a per-file reference aggregate, NULL/NaN/-0.0 files included") {
+    import spark.implicits._
+    val root = freshRoot()
+    // one file per batch, so each edge case owns a file
+    def batch(rows: Seq[(Option[Long], Option[Double])]): DataFrame =
+      rows.toDF("k", "v").coalesce(1)
+    val t = VersionedTable.create(spark, root,
+      batch((0 until 50).map(i => (Some(i.toLong), Some(i * 2.5)))),
+      statsCol = Some("v"), bloomCol = Some("k"))
+    t.append(batch((50 until 60).map(i => (Some(i.toLong), None))))            // all-NULL stats
+    t.append(batch(Seq((Some(60L), Some(Double.NaN)), (Some(61L), Some(1.0))))) // NaN
+    t.append(batch(Seq((Some(62L), Some(-0.0)), (Some(63L), Some(0.0)))))       // -0.0 and 0.0
+    t.append(batch(Seq((None, Some(5.0)), (None, Some(7.0)))))                  // all-NULL key
+    t.delete(col("k") === 3)
+    t.merge(batch(Seq((Some(61L), Some(Double.NaN)), (Some(64L), Some(-0.0)))), "k")
+
+    for (v <- t.versions) {
+      val fs = t.read(Some(v)).inputFiles.toSeq
+      val ref = spark.read.parquet(fs: _*).groupBy(input_file_name())
+        .agg(min(col("v").cast("double")), max(col("v").cast("double")),
+          BloomBridge.bloomFilterAgg(col("k"), 65536L / 10, 65536L))
+        .collect().map(r => local(r.getString(0)) -> r).toMap
+      val refStats = ref.collect { case (f, r) if !r.isNullAt(1) =>
+        f -> (r.getDouble(1).toString, r.getDouble(2).toString) }
+      val refBlooms = ref.collect { case (f, r) if !r.isNullAt(3) =>
+        f -> java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]](3)) }
+      val mins = sidecar(root, v, "stats", "mins")
+      val maxs = sidecar(root, v, "stats", "maxs")
+      val stats = mins.map { case (f, lo) => f -> (lo.toDouble.toString, maxs(f).toDouble.toString) }
+      assert(stats == refStats, s"stats sidecar of v$v")
+      assert(sidecar(root, v, "bloom", "blooms") == refBlooms, s"bloom sidecar of v$v")
+    }
+    // today's edge behaviour on v4 (one file per batch): the all-NULL
+    // stats file has no stats entry, the NaN file has one; XxHash64(NULL)
+    // is the hash seed, so the all-NULL key file has a bloom too, one that
+    // no probed key matches
+    assert(t.read(Some(4)).inputFiles.length == 5)
+    assert(sidecar(root, 4, "stats", "mins").size == 4, "all-NULL stats file: no entry")
+    assert(sidecar(root, 4, "stats", "maxs").values.count(_ == "NaN") == 1)
+    assert(sidecar(root, 4, "bloom", "blooms").size == 5)
+    assert(t.pruneFilesEq(62L, Some(4)).size == 1)
+    assert(t.readWhere(-1.0, 1.0).count() ==
+      t.read().filter(col("v").between(-1.0, 1.0)).count())
+    assert(t.readWhereEq(62L).count() == 1 && t.readWhereEq(3L).count() == 0)
+  }
+
+  test("create rejects a non-long bloom column or a non-numeric stats column before writing") {
+    import spark.implicits._
+    val df = Seq((1, 2L, "a")).toDF("i", "l", "s")
+    for ((stats, bloom) <- Seq((None, Some("i")), (Some("s"), None), (Some("i"), Some("s")))) {
+      val root = freshRoot()
+      val e = intercept[IllegalArgumentException](
+        VersionedTable.create(spark, root, df, statsCol = stats, bloomCol = bloom))
+      assert(e.getMessage.contains("must be"), e.getMessage)
+      assert(!Files.exists(Paths.get(root)), s"$stats/$bloom wrote files before failing")
+    }
+    // the accepted types still build both sidecars
+    val t = VersionedTable.create(spark, freshRoot(), df, statsCol = Some("i"), bloomCol = Some("l"))
+    assert(t.statsCol.contains("i") && t.bloomCol.contains("l"))
+    assert(t.readWhereEq(2L).count() == 1)
+  }
+
+  test("vacuum drops every sidecar of a dropped version: _manifests holds only kept versions") {
+    import spark.implicits._
+    val root = freshRoot()
+    val t = VersionedTable.create(spark, root, Seq((1L, 1.0)).toDF("id", "v"),
+      statsCol = Some("v"), bloomCol = Some("id"))
+    for (i <- 2 to 5) t.append(Seq((i.toLong, i.toDouble)).toDF("id", "v"))
+    assert(manifests(root).count(_.endsWith(".bloom.json")) == 5)
+    t.vacuum(keepVersions = 2, retentionMs = 0)
+    val kept = t.versions
+    assert(kept == Seq(3, 4))
+    val Version = "v(\\d{8})\\..*".r
+    val listed = manifests(root).collect { case n @ Version(v) => v.toInt -> n }
+    assert(listed.map(_._1).toSet == kept.toSet, listed.mkString(", "))
+    assert(listed.size == 3 * kept.size, listed.mkString(", ")) // manifest, stats, bloom
+    assert(t.readWhereEq(5L).count() == 1)
+  }
+}
