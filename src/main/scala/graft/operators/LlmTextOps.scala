@@ -1540,9 +1540,8 @@ object LlmTextOps {
     * rounds unrolled as CTEs); it trains on a BOUNDED sample (O(1) in
     * the corpus, the FAISS posture) and assignment is a row-local
     * literal-codebook argmin, so the memoized index build is ONE scan
-    * with no training jobs. The seeded float trainer (PqOps.lloyd and
-    * its distributed twin) stays unit-tested; the full-corpus MLlib
-    * KMeans remains as the graded J7 pipeline. */
+    * with no training jobs. The full-corpus MLlib KMeans remains as the
+    * graded J7 pipeline. */
   /** The exact top-20 cosine-pair truth (the llm_cosine_topk frame) —
     * memoized because all three ANN recall keys grade against the SAME
     * 20 rows; the O(n²) truth pass is priced once per (session, corpus),

@@ -10,10 +10,11 @@ import graft.Tables
   * replace the one non-portable ingredient with exact integer arithmetic
   * both engines reproduce bit-for-bit, keep the algorithm itself).
   *
-  * The float k-means trainer ([[PqOps.lloyd]] / the distributed twin) is
-  * seeded with `scala.util.Random.shuffle` — correct, but its init
-  * permutation is JVM-library-specific, so no SQL oracle can replay it.
-  * This trainer swaps exactly two ingredients and keeps Lloyd's:
+  * It is the engine's only vector quantizer: one trainer ([[train]]),
+  * one encoder ([[pqCodes]]) and one search ([[pqSearch]]), serving the
+  * graded keys and the streaming ANN sink alike. The trainer is Lloyd's
+  * k-means with two ingredients made portable, so a SQL oracle can
+  * replay it bit-for-bit:
   *
   *  - INIT: instead of a seeded shuffle of the distinct training points,
   *    rank them by `(md5int60(m ":" r0), r0)` and take the first k — a
@@ -32,7 +33,7 @@ import graft.Tables
   *    IEEE op — bit-identical cross-engine by construction.
   *
   * Both graded entries keep their 100 TB shape:
-  *  - training reads a bounded sample (first [[PqOps.TrainSample]]
+  *  - training reads a bounded sample (first [[TrainSample]]
   *    vec_ids — O(1) in the corpus, the FAISS posture); per Lloyd's round
   *    the executors do one map + one ≤ groups·k·dim-row reduce, and the
   *    driver holds MODEL STATE only (the k centroids), never vectors;
@@ -45,7 +46,16 @@ import graft.Tables
   * against an independent scalar reference at sf0.001/sf0.01/sf0.1.
   */
 object PortableQuantizer {
-  import PqOps.{NumSub, SubDim, K, Shortlist, TrainSample}
+  /** PQ layout: [[NumSub]] contiguous subvectors of [[SubDim]] components
+    * (NumSub · SubDim = the 64-dim embedding), [[K]] codewords per
+    * codebook; the ADC scan keeps [[Shortlist]] candidates per query for
+    * the exact re-rank; codebooks train on the [[TrainSample]] smallest
+    * vec_ids. */
+  val NumSub = 16
+  val SubDim = 4
+  val K = 16
+  val Shortlist = 40
+  val TrainSample = 1024
 
   /** Component quantization scale: 1e-6 resolution on unit-norm-ish
     * embedding components keeps full float32 precision (~7 decimal
@@ -235,9 +245,7 @@ object PortableQuantizer {
   private def trainFrame(s: SparkSession, d: String): DataFrame =
     // the TrainSample SMALLEST ids, not `vec_id < TrainSample`: a corpus
     // whose ids are offset or sparse would make the filter form return 0
-    // rows and crash training with an opaque empty.max — orderBy/limit
-    // is what the float twin (PqOps.trainFrame) already does, and the
-    // two samplers must pick the same vectors
+    // rows and crash training with an opaque empty.max
     Tables.load(s, d, "embeddings").orderBy("vec_id").limit(TrainSample)
       .select(col("vec_id").as("id"), quantArr(col("embedding")).as("qa"))
 
@@ -287,7 +295,7 @@ object PortableQuantizer {
       1, p)
   }
 
-  /** PQ codebooks: [[PqOps.NumSub]] subspaces × [[PqOps.K]] codewords,
+  /** PQ codebooks: [[NumSub]] subspaces × [[K]] codewords,
     * every subspace trained concurrently in the same Lloyd's jobs. */
   def pqCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Long]]] =
     graft.tools.Derived(s, d, "vt_pq_codebooks",
@@ -341,18 +349,31 @@ object PortableQuantizer {
     }.toDF("sub_idx", "code", "cvec")
   }
 
-  /** Graded PQ-ADC entry: ADC shortlist (top-[[PqOps.Shortlist]] by exact
-    * integer table-lookup distance) → re-rank by the exact quantized
-    * squared L2 → top-10 per query (queries: vec_id ≤ 4, the
-    * llm_knn_queries set). Same two-broadcast plan shape as the float
-    * [[PqOps.pqSearch]]: codes ⋈ broadcast(distance table), then the
-    * shortlist ⋈ broadcast(query vectors) — the corpus is never shuffled
-    * pairwise. `l2q_d2` is exact int64 end-to-end, which is what makes
-    * the full-pipeline DuckDB oracle possible. */
-  def pqAdc(s: SparkSession, d: String): DataFrame = {
-    val queries = Tables.load(s, d, "embeddings").filter(col("vec_id") <= 4)
-      .select(col("vec_id").as("query_id"), quantArr(col("embedding")).as("qa"))
-    val qsub = queries
+  /** Product-quantization ADC search over any (query_id, embedding)
+    * frame — the graded [[pqAdc]] entry and the streaming
+    * `StreamingOps.annEnrichSink` both run it, so their answers cannot
+    * drift. Per query: a NumSub × K table of exact integer subspace
+    * distances to every codeword; each corpus vector's approximate
+    * distance is the sum of its NumSub table lookups (codes ⋈
+    * broadcast(distance table) on (sub_idx, code), then one
+    * (query_id, neighbor_id) aggregation); the top-[[Shortlist]] by that
+    * ADC distance are re-ranked by the exact quantized squared L2
+    * (shortlist ⋈ broadcast(query vectors)) — the corpus is never
+    * shuffled pairwise. Returns (query_id, rank, neighbor_id, l2q_d2)
+    * with rank ≤ k; `l2q_d2` is exact int64 end-to-end, which is what
+    * makes the full-pipeline DuckDB oracle possible. A query scores no
+    * corpus vector with its own id.
+    *
+    * Query rows whose embedding is NULL, holds a NULL element or is not
+    * exactly NumSub · SubDim long are dropped: their distances would be
+    * NULL, which ranks first, so they would return k arbitrary rows (the
+    * corpus side already encodes such vectors as NULL codes). */
+  def pqSearch(s: SparkSession, d: String, queries: DataFrame, k: Int): DataFrame = {
+    val qa = queries
+      .filter(size(col("embedding")) === NumSub * SubDim &&
+        !exists(col("embedding"), _.isNull))
+      .select(col("query_id"), quantArr(col("embedding")).as("qa"))
+    val qsub = qa
       .select(col("query_id"), posexplode(expr(
         s"transform(sequence(0, ${NumSub - 1}), " +
           s"m -> slice(qa, m * $SubDim + 1, $SubDim))")))
@@ -376,16 +397,23 @@ object PortableQuantizer {
     val wExact = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("l2q_d2").asc, col("neighbor_id"))
     shortlist
-      .join(broadcast(queries), "query_id")
+      .join(broadcast(qa), "query_id")
       .join(nv, "neighbor_id")
       .withColumn("l2q_d2",
         aggregate(zip_with(col("qa"), col("na"), (x, y) => (x - y) * (x - y)),
           lit(0L), (a, v) => a + v))
       .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= 10)
+      .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "l2q_d2")
-      .orderBy("query_id", "rank")
   }
+
+  /** Graded PQ-ADC entry: [[pqSearch]] at k = 10 over the queries
+    * vec_id ≤ 4 (the llm_knn_queries set). */
+  def pqAdc(s: SparkSession, d: String): DataFrame =
+    pqSearch(s, d,
+      Tables.load(s, d, "embeddings").filter(col("vec_id") <= 4)
+        .select(col("vec_id").as("query_id"), col("embedding")), 10)
+      .orderBy("query_id", "rank")
 
   // ------------------------------------------------------------------
   // DuckDB oracles: training replayed with the Lloyd's rounds unrolled

@@ -253,20 +253,25 @@ object StreamingOps {
       t.merge(latest, key); ()
     }
 
-  /** Streaming ANN serving: each micro-batch of query vectors is scored
-    * against the MEMOIZED PQ index of the static corpus through the exact
-    * batch search path ([[graft.operators.PqOps.pqSearch]] — ADC
-    * shortlist → exact re-rank), and the top-k results append to a
+  /** Streaming ANN serving: each micro-batch of (query_id, embedding)
+    * rows is scored against the MEMOIZED PQ index of the static corpus
+    * through the graded batch search
+    * ([[graft.operators.PortableQuantizer.pqSearch]] — the `emb_pq_adc`
+    * kernel: integer ADC shortlist → exact re-rank), and the top-k rows
+    * (query_id, rank, neighbor_id, l2q_d2) append to a
     * [[graft.tables.VersionedTable]] via idempotent txn-stamped commits.
-    * foreachBatch + shared core means streaming and batch answers cannot
-    * drift, and a replayed micro-batch (at-least-once delivery) lands
-    * exactly once. The codebook/codes memo is built on the first batch
-    * and served from the LRU cache afterwards — the index is NOT
-    * retrained per batch. */
+    * `l2q_d2` is the exact int64 squared L2 of the 1e-6-quantized
+    * vectors. One kernel for both paths means streaming and batch
+    * answers cannot drift (spec-asserted against `emb_pq_adc` rows), and
+    * a replayed micro-batch (at-least-once delivery) lands exactly once.
+    * Query rows with a NULL, NULL-holding or wrong-length embedding are
+    * dropped by the search, not committed. The codebook memo is built on
+    * the first batch and served from the derived-artifact store
+    * afterwards — the index is NOT retrained per batch. */
   def annEnrichSink(sfDir: String, t: graft.tables.VersionedTable,
                     queryId: String, k: Int = 10): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      val res = graft.operators.PqOps.pqSearch(batch.sparkSession, sfDir, batch, k)
+      val res = graft.operators.PortableQuantizer.pqSearch(batch.sparkSession, sfDir, batch, k)
       t.appendIdempotent(res, s"$queryId:$batchId"); ()
     }
 

@@ -350,10 +350,10 @@ object StressCheck {
       // TrainSample/K recipe the graded codebook build runs (the FAISS
       // posture: training O(1) in the corpus)
       val cb = graft.operators.PortableQuantizer.train(
-        vecs.orderBy("vec_id").limit(graft.operators.PqOps.TrainSample)
+        vecs.orderBy("vec_id").limit(graft.operators.PortableQuantizer.TrainSample)
           .select(lit(0).as("m"), col("vec_id").as("id"),
             graft.operators.PortableQuantizer.quantArr(col("embedding")).as("q")),
-        graft.operators.PqOps.K)(0).map(_.toSeq).toSeq
+        graft.operators.PortableQuantizer.K)(0).map(_.toSeq).toSeq
       val assigned = vecs.select(col("vec_id"),
         posexplode(graft.operators.PortableQuantizer
           .ivfAssignMulti(cb, col("embedding"), 3)).as(Seq("probe", "bucket")))
@@ -1086,36 +1086,34 @@ object StressCheck {
     }
     org.apache.commons.io.FileUtils.deleteQuietly(streamDir.toFile)
 
-    // 19. Distributed Lloyd's trainer (the PQ/IVF codebook kernel) at
-    // 100x its production sample: 50k 64-dim points, 8 iterations. The
-    // corpus is 16 exact atoms (every point IS its cluster centroid), so
-    // init sees exactly k distinct points and the fixed-point answer is
-    // closed-form: the trainer must return the 16 planted atoms EXACTLY
-    // and the assignment counts must be nVecs/16 per cluster. The claim
-    // stress-tested here is the distributed iteration path (row-local
-    // argmin assignment + the order-pinned per-cluster vector sums) at
-    // volume — atom recovery makes any drift in that arithmetic visible
-    // as a hard mismatch, not a quality degradation.
+    // 19. The PQ/IVF codebook trainer (PortableQuantizer.train) at 50x
+    // its production sample: 50k 64-dim points. The corpus is 16 exact
+    // atoms (every point IS one atom), so init sees exactly k distinct
+    // points and every cluster mean is its quantized atom: the trainer
+    // must return the 16 quantized atoms EXACTLY. The claim stress-tested
+    // here is the distributed iteration path (row-local integer argmin
+    // assignment + the per-cluster integer sums and the one rounding
+    // re-mean) at volume — atom recovery makes any drift in that
+    // arithmetic visible as a hard mismatch, not a quality degradation.
     time("lloyd_train_50k") {
       val kC = 16
       val dim = 64
-      // atoms on the 1/512 grid: every coordinate is an exact binary
-      // fraction, every partial sum in the trainer is an exact integer
-      // multiple of 1/512 (far below 2^53), and the mean division is
-      // exact — so "recovered EXACTLY" means bitwise, not within-epsilon
+      // atoms on the 1/512 grid, quantized by the trainer's own quantArr
       val planted: Array[Array[Double]] = Array.tabulate(kC, dim)((j, t) =>
         ((j * 8191 + t * 127) % 1000) / 512.0 - 1.0)
       val centLit = typedlit(planted.map(_.toSeq).toSeq)
+      val atoms = spark.range(kC).select(graft.operators.PortableQuantizer
+          .quantArr(element_at(centLit, col("id").cast("int") + 1)))
+        .collect().map(_.getSeq[Long](0).toSeq).toSet
+      require(atoms.size == kC, s"planted atoms collide after quantization: ${atoms.size}")
       val pts = spark.range(nVecs).select(
-        lit(0).as("m"), col("id").as("rank"),
-        element_at(centLit, pmod(col("id"), lit(kC)).cast("int") + 1).as("p"))
-      val learned = graft.operators.PqOps
-        .lloydDistributedAll(pts, dim, kC, _ => 42L)(0)
-      def d2(a: Array[Double], b: Array[Double]) =
-        a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-      val worst = planted.map(pc => learned.map(lc => d2(pc, lc)).min).max
-      require(worst == 0.0, s"planted atoms not recovered exactly: worst d2 $worst")
-      require(learned.length == kC, s"centroid count drifted: ${learned.length}")
+        lit(0).as("m"), col("id"),
+        graft.operators.PortableQuantizer.quantArr(
+          element_at(centLit, pmod(col("id"), lit(kC)).cast("int") + 1)).as("q"))
+      val learned = graft.operators.PortableQuantizer.train(pts, kC)(0)
+        .map(_.toSeq).toSet
+      require(learned == atoms,
+        s"quantized atoms not recovered exactly: ${(atoms -- learned).size} missing")
       nVecs
     }
 

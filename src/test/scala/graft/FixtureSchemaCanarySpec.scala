@@ -134,8 +134,9 @@ class FixtureSchemaCanarySpec extends SparkTestBase {
       .collect().map(_.getInt(0)).toSet
     assert(dims == Set(64),
       s"""|FIXTURE DRIFT — embedding dimensions $dims (expected exactly 64).
-          |Update the ml_summarizer oracle's generate_series bound, PqOps
-          |NumSub/SubDim, and the PortableQuantizer width assertion together.""".stripMargin)
+          |Update the ml_summarizer oracle's generate_series bound,
+          |PortableQuantizer NumSub/SubDim, and the PortableQuantizerSpec
+          |width assertion together.""".stripMargin)
   }
 
   test("CANARY: documents.text is pure ASCII (byte ≡ codepoint oracle precondition)") {

