@@ -1531,17 +1531,6 @@ object LlmTextOps {
   def llmDedupEmbedding(s: SparkSession, d: String): DataFrame =
     embeddingPairs(s, d).orderBy("a_id", "b_id")
 
-  /** IVF ANN scale path, graded with a FULL DuckDB oracle since round 7:
-    * sample-trained coarse centroids partition the vectors; pairwise
-    * similarity only within each inverted list. Complements the
-    * hyperplane-LSH variant. The coarse quantizer is the portable
-    * integer-exact Lloyd's ([[PortableQuantizer]] — hash-ranked init +
-    * exact int64 distances, so the oracle replays training with the
-    * rounds unrolled as CTEs); it trains on a BOUNDED sample (O(1) in
-    * the corpus, the FAISS posture) and assignment is a row-local
-    * literal-codebook argmin, so the memoized index build is ONE scan
-    * with no training jobs. The full-corpus MLlib KMeans remains as the
-    * graded J7 pipeline. */
   /** The exact top-20 cosine-pair truth (the llm_cosine_topk frame) —
     * memoized because all three ANN recall keys grade against the SAME
     * 20 rows; the O(n²) truth pass is priced once per (session, corpus),
@@ -1573,7 +1562,12 @@ object LlmTextOps {
 
   /** The memoized IVF assignment (vec_id, embedding, bucket) — one
     * index build per (session, corpus), shared by the top-k and the
-    * recall self-evaluation. */
+    * recall self-evaluation. The IVF ANN scale path (full DuckDB oracle):
+    * coarse centroids from the portable integer-exact Lloyd's
+    * ([[PortableQuantizer]], replayed by the oracle as unrolled CTEs),
+    * trained on a BOUNDED sample (the FAISS posture); assignment is a
+    * row-local literal-codebook argmin, so the build is ONE scan with no
+    * training jobs, and pairwise similarity runs only within each list. */
   private def ivfAssigned(s: SparkSession, d: String): DataFrame =
     Derived(s, d, "ivf") {
       val cb = PortableQuantizer.ivfCentroids(s, d)

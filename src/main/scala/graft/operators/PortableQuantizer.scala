@@ -361,14 +361,16 @@ object PortableQuantizer {
     * (shortlist ⋈ broadcast(query vectors)) — the corpus is never
     * shuffled pairwise. Returns (query_id, rank, neighbor_id, l2q_d2)
     * with rank ≤ k; `l2q_d2` is exact int64 end-to-end, which is what
-    * makes the full-pipeline DuckDB oracle possible. A query scores no
-    * corpus vector with its own id.
+    * makes the full-pipeline DuckDB oracle possible. Candidates where
+    * `skip` (over query_id, neighbor_id) holds leave before the shortlist
+    * rank: the graded key skips each query's own vector, a caller serving
+    * arbitrary query ids skips nothing (`lit(false)`).
     *
     * Query rows whose embedding is NULL, holds a NULL element or is not
     * exactly NumSub · SubDim long are dropped: their distances would be
     * NULL, which ranks first, so they would return k arbitrary rows (the
     * corpus side already encodes such vectors as NULL codes). */
-  def pqSearch(s: SparkSession, d: String, queries: DataFrame, k: Int): DataFrame = {
+  def pqSearch(s: SparkSession, d: String, queries: DataFrame, k: Int, skip: Column): DataFrame = {
     val qa = queries
       .filter(size(col("embedding")) === NumSub * SubDim &&
         !exists(col("embedding"), _.isNull))
@@ -389,7 +391,7 @@ object PortableQuantizer {
     val shortlist = pqCodes(s, d).join(broadcast(dist), Seq("sub_idx", "code"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum("d2").as("adc_d2"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+      .filter(!skip)
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= Shortlist)
     val nv = Tables.load(s, d, "embeddings")
@@ -408,11 +410,12 @@ object PortableQuantizer {
   }
 
   /** Graded PQ-ADC entry: [[pqSearch]] at k = 10 over the queries
-    * vec_id ≤ 4 (the llm_knn_queries set). */
+    * vec_id ≤ 4 (the llm_knn_queries set), each excluding its own vector. */
   def pqAdc(s: SparkSession, d: String): DataFrame =
     pqSearch(s, d,
       Tables.load(s, d, "embeddings").filter(col("vec_id") <= 4)
-        .select(col("vec_id").as("query_id"), col("embedding")), 10)
+        .select(col("vec_id").as("query_id"), col("embedding")), 10,
+      skip = col("query_id") === col("neighbor_id"))
       .orderBy("query_id", "rank")
 
   // ------------------------------------------------------------------

@@ -264,6 +264,8 @@ object StreamingOps {
     * vectors. One kernel for both paths means streaming and batch
     * answers cannot drift (spec-asserted against `emb_pq_adc` rows), and
     * a replayed micro-batch (at-least-once delivery) lands exactly once.
+    * Query ids are the caller's: no corpus vector is skipped for sharing
+    * one, so a query's answer does not depend on its id.
     * Query rows with a NULL, NULL-holding or wrong-length embedding are
     * dropped by the search, not committed. The codebook memo is built on
     * the first batch and served from the derived-artifact store
@@ -271,7 +273,8 @@ object StreamingOps {
   def annEnrichSink(sfDir: String, t: graft.tables.VersionedTable,
                     queryId: String, k: Int = 10): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      val res = graft.operators.PortableQuantizer.pqSearch(batch.sparkSession, sfDir, batch, k)
+      val res = graft.operators.PortableQuantizer.pqSearch(
+        batch.sparkSession, sfDir, batch, k, skip = lit(false))
       t.appendIdempotent(res, s"$queryId:$batchId"); ()
     }
 

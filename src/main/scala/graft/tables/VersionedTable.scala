@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.TrackedParquet
 import org.apache.spark.sql.types.{DataType, LongType, NumericType, StructType}
 
 /** A minimal versioned table format over plain parquet — the lakehouse
@@ -39,9 +40,10 @@ import org.apache.spark.sql.types.{DataType, LongType, NumericType, StructType}
   * the rewrite set via `input_file_name()`), so write amplification is
   * proportional to the touched files, not the table. Optional per-file
   * min/max and bloom sidecars (`create(..., statsCol, bloomCol)`) drive
-  * file skipping; a commit fills both in one aggregate pass over its fresh
-  * files. Reads take the schema from one data file's footer on the driver,
-  * so no operation spends a Spark job on schema inference. Production
+  * file skipping; the parquet write job fills both for the files it
+  * writes, so a commit never re-reads them. Reads take the schema from
+  * one data file's footer on the driver, so no operation spends a Spark
+  * job on schema inference. Production
   * formats (Delta/Iceberg) add a log-compaction checkpoint; the
   * commit/CoW/time-travel shape is the same.
   */
@@ -231,28 +233,6 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     else snapshotRead(pruned).filter(col(c) === key)
   }
 
-  /** Both sidecars' entries for the fresh files in ONE aggregate job:
-    * per file, min/max of the stats column as double, and Spark's own
-    * serialized bloom sketch of the key column (BloomBridge — the same
-    * XxHash64 path the runtime-filter expressions use, so the driver probe
-    * can never hash differently). A file whose stats column is all NULL,
-    * or whose key is not a long, gets NO entry: pruning keeps entry-less
-    * files, so skipping stays conservative. */
-  private def computeSidecars(files: Seq[String], sc: Option[String], bc: Option[String])
-      : (Seq[(String, (Double, Double))], Seq[(String, Array[Byte])]) = {
-    if (files.isEmpty || (sc.isEmpty && bc.isEmpty)) return (Nil, Nil)
-    val df = scan(files)
-    val b = bc.filter(c => df.schema(c).dataType == LongType)
-    val aggs = sc.toSeq.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")))) ++
-      b.map(c => org.apache.spark.sql.graftnative.BloomBridge
-        .bloomFilterAgg(col(c), BloomBits / 10, BloomBits))
-    val rows = df.groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect().toSeq
-    def entries[T](i: Int, get: Row => T) =
-      rows.filter(r => !r.isNullAt(i)).map(r => normalizeUri(r.getString(0)) -> get(r))
-    (if (sc.isEmpty) Nil else entries(2, r => (r.getDouble(1), r.getDouble(2))),
-      if (b.isEmpty) Nil else entries(aggs.size, _.getAs[Array[Byte]](aggs.size)))
-  }
-
   /** Written ONLY by the winner of the manifest race, after its rename —
     * a present sidecar is therefore always consistent with its manifest.
     * Stats are an optimization: a missing sidecar only disables skipping. */
@@ -297,16 +277,12 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     else snapshotRead(pruned).filter(col(c).cast("double").between(lo, hi))
   }
 
-  /** Write `df` as fresh immutable data files; returns their paths. */
-  private def writeDataFiles(df: DataFrame): Seq[String] = {
-    val dir = Paths.get(root, "data", java.util.UUID.randomUUID().toString)
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .map(_.toString).filter(p => p.contains("part-") && p.endsWith(".parquet"))
-      .toSeq.sorted
-    finally s.close()
-  }
+  /** Write `df` as fresh immutable data files; returns their paths with
+    * the sidecar entries the write job itself collected. */
+  private def writeDataFiles(df: DataFrame, sc: Option[String] = statsCol,
+                             bc: Option[String] = bloomCol): Seq[TrackedParquet.Written] =
+    TrackedParquet.write(df, Paths.get(root, "data", java.util.UUID.randomUUID().toString).toString,
+      sc, bc, BloomBits / 10, BloomBits)
 
   /** SINGLE-attempt publish of `carried ++ fresh` at version `base + 1`;
     * throws [[VersionedTable.CommitConflict]] if a concurrent writer took
@@ -315,12 +291,13 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     * stale file list at the next slot would silently drop the winner's
     * files (lost update). If the table keeps sidecars, the winner then
     * publishes the version's stats and bloom sidecars: carried files
-    * inherit their previous entries, and one pass scans the fresh files. */
-  private def commitOnce(base: Int, carried: Seq[String], fresh: Seq[String],
+    * inherit their previous entries, and fresh files bring the entries
+    * their write job collected — no file is read again. */
+  private def commitOnce(base: Int, carried: Seq[String], fresh: Seq[TrackedParquet.Written],
                          newStatsCol: Option[String] = None,
                          txn: Option[String] = None,
                          newBloomCol: Option[String] = None): Int = {
-    val files = carried ++ fresh
+    val files = carried ++ fresh.map(_.path)
     val attempt = base + 1
     val tmp = Files.createTempFile(manifestDir, ".tmp-", ".json")
     val body = files.mkString("{\"files\":[\"", "\",\"", "\"]") +
@@ -362,13 +339,19 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     // The manifest rename above IS the commit; everything past it is an
     // optimization, so a sidecar failure must not surface as a commit
     // failure (the caller would retry a commit that already happened and
-    // duplicate rows). Known benign loss: if the PREVIOUS winner hasn't
-    // published its sidecar yet, carried files get no entries and simply
-    // stop pruning — conservative, never wrong.
+    // duplicate rows). Known benign loss: if the PREVIOUS winner never
+    // publishes its sidecar (it died past its link), carried files get no
+    // entries and simply stop pruning — conservative, never wrong.
     try {
       val (sc, bc) = (newStatsCol.orElse(statsCol), newBloomCol.orElse(bloomCol))
-      val (stats, blooms) = computeSidecars(fresh, sc, bc)
+      val stats = fresh.flatMap(f => f.minMax.map(f.path -> _))
+      val blooms = fresh.flatMap(f => f.bloom.map(f.path -> _))
       def inherit[T](p: Path, prev: => Map[String, T]): Seq[(String, T)] = {
+        // the racer that won `base` publishes its sidecars just after its
+        // link: wait up to a second past it rather than drop carried entries
+        val until =
+          if (base < 0) 0L else Files.getLastModifiedTime(manifestPath(base)).toMillis + 1000
+        while (!Files.exists(p) && System.currentTimeMillis() < until) Thread.sleep(1)
         val m = if (base >= 0 && Files.exists(p)) prev else Map.empty[String, T]
         carried.flatMap(f => m.get(normalize(f)).map(normalize(f) -> _))
       }
@@ -537,9 +520,12 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     val files = readManifest(base)
     if (files.isEmpty) return base // empty snapshot: nothing to delete
     val cur = snapshotRead(files)
-    // metadata-sized collect: the DISTINCT file paths containing hits
-    val touched = cur.filter(condition).select(input_file_name().as("f"))
-      .distinct().collect().map(r => normalizeUri(r.getString(0))).toSet
+    // metadata-sized collect of the file paths containing hits: distinct
+    // per partition (no shuffle), unioned on the driver, since a split
+    // file shows up in several partitions
+    val touched = cur.filter(condition).select(input_file_name())
+      .as(Encoders.STRING).mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().map(normalizeUri).toSet
     if (touched.isEmpty) base // no-op: nothing to delete
     else {
       val kept = files.filterNot(f => touched.contains(normalize(f)))
@@ -677,8 +663,9 @@ object VersionedTable {
     * (numeric) turns on per-file min/max stats and [[VersionedTable
     * .readWhere]] file skipping, `bloomCol` (long) per-file blooms and
     * [[VersionedTable.readWhereEq]], for the table's whole life. Both are
-    * checked here, before any file is written: the sidecars are computed
-    * after the commit, where an error only drops them. */
+    * checked here, before any file is written: the write job summarizes
+    * only a numeric stats column and a long bloom column, and would
+    * silently keep no entries for any other. */
   def create(spark: SparkSession, root: String, df: DataFrame,
              statsCol: Option[String] = None,
              bloomCol: Option[String] = None): VersionedTable = {
@@ -691,7 +678,7 @@ object VersionedTable {
     val t = new VersionedTable(spark, root)
     Files.createDirectories(t.manifestDir)
     require(t.versions.isEmpty, s"table already exists at $root")
-    val files = t.writeDataFiles(df)
+    val files = t.writeDataFiles(df, statsCol, bloomCol)
     t.commitOnce(-1, Nil, files, newStatsCol = statsCol, newBloomCol = bloomCol)
     t
   }

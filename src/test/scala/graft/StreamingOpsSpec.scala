@@ -466,6 +466,15 @@ class StreamingOpsSpec extends SparkTestBase {
     df.select("query_id", "rank", "neighbor_id", "l2q_d2")
       .as[(Long, Int, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
 
+  /** `emb_pq_adc` skips each query's own vector; the sink serves
+    * caller-chosen ids and skips nothing. So a query streamed under its
+    * corpus vec_id q gets q itself at distance 0 first, then the graded
+    * key's rows one rank down. */
+  private def withSelf(rows: Seq[(Long, Int, Long, Long)]): Seq[(Long, Int, Long, Long)] =
+    rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
+      (q, 1, q, 0L) +: rs.sortBy(_._2).dropRight(1).map(r => r.copy(_2 = r._2 + 1))
+    }
+
   test("streaming ANN enrichment serves the PQ index per micro-batch, exactly once") {
     import org.apache.spark.sql.functions.col
     // the emb_pq_adc query set (vec_id 0-4), streamed in two micro-batches
@@ -484,8 +493,9 @@ class StreamingOpsSpec extends SparkTestBase {
       input.addData(queries.drop(2): _*)
       q.processAllAvailable()
       val got = annRows(t.read())
-      // one search kernel: the streamed rows ARE the graded key's rows
-      val expected = annRows(SparkEntry.queries("emb_pq_adc")(spark, SF))
+      // one search kernel: the streamed rows ARE the graded key's rows,
+      // plus each query's own vector
+      val expected = withSelf(annRows(SparkEntry.queries("emb_pq_adc")(spark, SF)))
       assert(got.size == 50 && got == expected, s"got $got\nexpected $expected")
       // post-crash replay of the last micro-batch: same (query, batchId)
       // txn → the idempotent append is a no-op
@@ -511,9 +521,30 @@ class StreamingOpsSpec extends SparkTestBase {
         (2L, boxed.updated(5, null)), (4L, null))
       q.processAllAvailable()
       val got = annRows(t.read())
-      val expected = annRows(SparkEntry.queries("emb_pq_adc")(spark, SF)
-        .filter(col("query_id") === 3))
+      val expected = withSelf(annRows(SparkEntry.queries("emb_pq_adc")(spark, SF)
+        .filter(col("query_id") === 3)))
       assert(expected.size == 10 && got == expected, s"got $got")
+    } finally q.stop()
+  }
+
+  test("streaming ANN sink: a query id that is also a corpus vec_id loses no neighbour") {
+    import org.apache.spark.sql.functions.{col, max}
+    val emb = Tables.load(spark, SF, "embeddings")
+    val v3 = emb.filter(col("vec_id") === 3).select("embedding").as[Array[Float]].collect().head
+    val unused = emb.agg(max("vec_id")).head.getLong(0) + 1
+    val t = annTable("graft_annid")
+    val sink = StreamingOps.annEnrichSink(SF, t, "annid")
+    val input = MemoryStream[(Long, Array[Float])]
+    val q = input.toDF().toDF("query_id", "embedding")
+      .writeStream.foreachBatch(sink).start()
+    try {
+      // the same vector under its own corpus id and under an unused id
+      input.addData((3L, v3), (unused, v3))
+      q.processAllAvailable()
+      val got = annRows(t.read())
+      val byId = got.groupBy(_._1).map { case (id, rs) => id -> rs.map(r => (r._2, r._3, r._4)) }
+      assert(byId(3L).size == 10 && byId(3L) == byId(unused), s"got $got")
+      assert(byId(3L).head == ((1, 3L, 0L)), "a corpus vector is its own nearest neighbour")
     } finally q.stop()
   }
 

@@ -9,9 +9,11 @@ import graft.tables.VersionedTable
 
 /** Spark jobs per VersionedTable operation on a small table that keeps
   * both sidecars. A read plans against the schema in one data file's
-  * footer (no inference job), and a commit fills the stats and bloom
-  * sidecars in one aggregate pass. A count that rises means a job came
-  * back; a count that falls is a gain to pin here. */
+  * footer (no inference job), and the parquet write job fills the stats
+  * and bloom sidecars of the files it writes, so a commit is its write
+  * job alone: append and compact run one job, delete adds one to find
+  * its touched files, merge two for its join. A count that rises means a
+  * job came back; a count that falls is a gain to pin here. */
 class VersionedTableJobsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -42,7 +44,7 @@ class VersionedTableJobsSpec extends SparkTestBase {
   private def rows(ids: Range) =
     ids.map(i => (i.toLong, i * 10.0, s"n$i")).toDF("id", "score", "name")
 
-  test("jobs per table operation: reads run one job, commits one sidecar pass") {
+  test("jobs per table operation: reads run one job, commits only their write job") {
     val root = Files.createTempDirectory("graft_vt_jobs").resolve("t").toString
     val t = VersionedTable.create(spark, root, rows(0 until 100).repartition(4),
       statsCol = Some("score"), bloomCol = Some("id"))
@@ -56,7 +58,7 @@ class VersionedTableJobsSpec extends SparkTestBase {
       "merge" -> jobs(t.merge(rows(4 until 7).withColumn("name", lit("m")), "id")),
       "compact" -> jobs(t.compact()))
     assert(counts == Seq("read" -> 1, "readWhere" -> 1, "readWhereEq" -> 1,
-      "append" -> 3, "addedBetween" -> 1, "delete" -> 5, "merge" -> 5, "compact" -> 3),
+      "append" -> 1, "addedBetween" -> 1, "delete" -> 2, "merge" -> 3, "compact" -> 1),
       counts.mkString(", "))
     // the counts are of real work: every commit published both sidecars
     // and the table holds what the operations say

@@ -10,9 +10,10 @@ import graft.tables.VersionedTable
 
 /** What a VersionedTable keeps beside its data: the schema a read plans
   * with (taken from a data file's footer, not inferred by a Spark job),
-  * the per-file stats and bloom sidecars (filled in one aggregate pass
-  * per commit), the sidecar-column checks at create, and vacuum's
-  * cleanup of every sidecar of a dropped version. */
+  * the per-file stats and bloom sidecars (filled by the parquet write job
+  * for the files it writes, never by a second read), the sidecar-column
+  * checks at create, and vacuum's cleanup of every sidecar of a dropped
+  * version. */
 class VersionedTableSidecarSpec extends SparkTestBase {
 
   private def freshRoot(): String =
@@ -119,6 +120,100 @@ class VersionedTableSidecarSpec extends SparkTestBase {
     assert(t.readWhere(-1.0, 1.0).count() ==
       t.read().filter(col("v").between(-1.0, 1.0)).count())
     assert(t.readWhereEq(62L).count() == 1 && t.readWhereEq(3L).count() == 0)
+  }
+
+  /** Asserts that version `v`'s stats and bloom sidecars equal the
+    * per-file reference aggregate of the one-pass test above (min/max of
+    * `v` as double and Spark's bloom of `k`, grouped by input_file_name()),
+    * and returns the stats entries (file -> (min, max)). */
+  private def assertSidecarsMatchReference(t: VersionedTable, root: String, v: Int)
+      : Map[String, (Double, Double)] = {
+    val fs = t.read(Some(v)).inputFiles.toSeq
+    val ref = spark.read.parquet(fs: _*).groupBy(input_file_name())
+      .agg(min(col("v").cast("double")), max(col("v").cast("double")),
+        BloomBridge.bloomFilterAgg(col("k"), 65536L / 10, 65536L))
+      .collect().map(r => local(r.getString(0)) -> r).toMap
+    val refStats = ref.collect { case (f, r) if !r.isNullAt(1) => f -> (r.getDouble(1), r.getDouble(2)) }
+    val refBlooms = ref.collect { case (f, r) if !r.isNullAt(3) =>
+      f -> java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]](3)) }
+    val maxs = sidecar(root, v, "stats", "maxs")
+    val stats = sidecar(root, v, "stats", "mins").map { case (f, lo) => f -> (lo.toDouble, maxs(f).toDouble) }
+    assert(stats == refStats, s"stats sidecar of v$v")
+    assert(sidecar(root, v, "bloom", "blooms") == refBlooms, s"bloom sidecar of v$v")
+    stats
+  }
+
+  test("in-write sidecars: one task rolling into several files gives each file its own entry") {
+    import spark.implicits._
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    def batch(ids: Range): DataFrame =
+      s2.createDataFrame(ids.map(i => (i.toLong, i.toDouble))).toDF("k", "v").coalesce(1)
+    val root = freshRoot()
+    val t = VersionedTable.create(s2, root, batch(0 until 35), statsCol = Some("v"), bloomCol = Some("k"))
+    t.append(batch(100 until 125))
+    assert(t.read(Some(0)).inputFiles.length == 4 && t.read().inputFiles.length == 7)
+    for (v <- t.versions) {
+      val stats = assertSidecarsMatchReference(t, root, v)
+      assert(stats.size == t.read(Some(v)).inputFiles.length, s"v$v: one stats entry per file")
+      // one task wrote each version's fresh files in order: a per-task
+      // union would give every file the same range, per-file ranges are
+      // disjoint 10-row slices
+      val ranges = stats.values.toSeq.sorted
+      assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 }, ranges.mkString(", "))
+    }
+    assert(sidecar(root, 1, "bloom", "blooms").size == 7)
+    assert(t.pruneFilesEq(112L).size == 1 && t.readWhereEq(112L).count() == 1)
+    assert(t.pruneFiles(21.0, 22.0).size == 1 && t.readWhere(21.0, 22.0).count() == 2)
+  }
+
+  test("in-write sidecars: an empty frame's file gets no entry and the table still reads") {
+    import spark.implicits._
+    val root = freshRoot()
+    val t = VersionedTable.create(spark, root, Seq.empty[(Long, Double)].toDF("k", "v"),
+      statsCol = Some("v"), bloomCol = Some("k"))
+    assert(t.read().inputFiles.length == 1, "the empty write still lays down one file")
+    assert(assertSidecarsMatchReference(t, root, 0).isEmpty)
+    assert(sidecar(root, 0, "bloom", "blooms").isEmpty)
+    assert(t.read().count() == 0 && t.readWhere(0.0, 1.0).count() == 0 && t.readWhereEq(1L).count() == 0)
+    t.append(Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").coalesce(1))
+    assert(assertSidecarsMatchReference(t, root, 1).size == 1)
+    assert(t.readWhereEq(2L).count() == 1 && t.readWhere(0.0, 1.0).count() == 1)
+  }
+
+  test("in-write sidecars: racing appenders publish every version's entries") {
+    import spark.implicits._
+    // the racing-appenders shape: 4 threads x 5 appends on one table, here
+    // one that keeps both sidecars; a lost race republishes the loser's
+    // entries against the winner's head
+    val root = freshRoot()
+    def batch(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, i * 0.5)).toDF("k", "v").coalesce(1)
+    val t = VersionedTable.create(spark, root, batch(0 until 10), statsCol = Some("v"), bloomCol = Some("k"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val tasks = (0 until 4).map { w =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 5).foreach { i =>
+            val lo = 1000 + w * 100 + i * 10
+            t.append(batch(lo until lo + 10))
+          }
+        })
+      }
+      tasks.foreach(_.get())
+    } finally pool.shutdown()
+    assert(t.versions == (0 to 20), s"non-contiguous versions ${t.versions}")
+    for (v <- t.versions)
+      assert(assertSidecarsMatchReference(t, root, v).size == v + 1, s"v$v: one entry per file")
+    // every key's file survives its bloom pruning (what readWhereEq lists),
+    // and readWhereEq finds the first key of every batch
+    val fileOf = t.read().select(col("k"), input_file_name()).as[(Long, String)].collect()
+      .map { case (k, f) => k -> local(f) }.toMap
+    assert(fileOf.size == 210)
+    val missed = fileOf.collect { case (k, f) if !t.pruneFilesEq(k).contains(f) => k }
+    assert(missed.isEmpty, s"bloom pruning dropped the file of ${missed.mkString(",")}")
+    val firsts = 0L +: (for (w <- 0 until 4; i <- 0 until 5) yield 1000L + w * 100 + i * 10)
+    assert(firsts.forall(k => t.readWhereEq(k).count() == 1))
   }
 
   test("create rejects a non-long bloom column or a non-numeric stats column before writing") {
