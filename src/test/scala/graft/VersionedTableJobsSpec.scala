@@ -10,9 +10,9 @@ import graft.tables.VersionedTable
 /** Spark jobs per VersionedTable operation on a small table that keeps
   * both sidecars. A read plans against the schema in one data file's
   * footer (no inference job), and the parquet write job fills the stats
-  * and bloom sidecars of the files it writes, so a commit is its write
-  * job alone: append and compact run one job, delete adds one to find
-  * its touched files, merge two for its join. A count that rises means a
+  * and bloom sidecars of the files it writes, so a commit's one sidecar
+  * pass is its write job: append and compact run one job, delete adds
+  * one to find its touched files, merge two for its join. A count that rises means a
   * job came back; a count that falls is a gain to pin here. */
 class VersionedTableJobsSpec extends SparkTestBase {
   import spark.implicits._
@@ -44,7 +44,7 @@ class VersionedTableJobsSpec extends SparkTestBase {
   private def rows(ids: Range) =
     ids.map(i => (i.toLong, i * 10.0, s"n$i")).toDF("id", "score", "name")
 
-  test("jobs per table operation: reads run one job, commits only their write job") {
+  test("jobs per table operation: reads run one job, commits one sidecar pass") {
     val root = Files.createTempDirectory("graft_vt_jobs").resolve("t").toString
     val t = VersionedTable.create(spark, root, rows(0 until 100).repartition(4),
       statsCol = Some("score"), bloomCol = Some("id"))
