@@ -327,14 +327,12 @@ object GeoOps {
     * geo analogue of the persisted IVF index: the layout is paid once,
     * committed like data, and every region query after that prunes at
     * the FILE level before any row is read. Crash posture: the v0
-    * manifest is the build predicate and the v1 cluster commit is
-    * resumed if absent; a v0 whose stats sidecar went missing (stats
-    * write failures are swallowed by design, and a crash can land
-    * between the manifest link and the sidecar write) would wedge
-    * every future `readWhere`, so an opened table WITHOUT a stats
-    * column is wiped and rebuilt — safe because the whole table is a
-    * DERIVED index over re-derivable points, never source data. The
-    * whole check-build section is synchronized on this object: within
+    * manifest is the build predicate (its stats entries commit with it)
+    * and the v1 cluster commit is resumed if absent; a source table
+    * mutated in place (stale CorpusStamp) wipes and rebuilds the layout
+    * — safe because the whole table is a DERIVED index over
+    * re-derivable points, never source data. The whole check-build
+    * section is synchronized on this object: within
     * one JVM (the cache root's lifetime) concurrent first-serves
     * serialize instead of racing VersionedTable.create's
     * single-attempt v0 commit (whose loser would THROW, not retry) or
@@ -357,11 +355,9 @@ object GeoOps {
       var vt =
         if (!java.nio.file.Files.exists(v0)) build()
         else graft.tables.VersionedTable.open(s, root)
-      if (vt.statsCol.isEmpty || !graft.tables.CorpusStamp.isFresh(root, fp)) {
-        // half-built index (v0 committed, sidecar lost) OR a source table
-        // mutated in place under the same path (stale CorpusStamp):
-        // derived data — wipe and rebuild rather than serve a permanently
-        // unprunable (or stale) layout
+      if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
+        // a source table mutated in place under the same path: derived
+        // data — wipe and rebuild rather than serve a stale layout
         graft.TempDirs.rmTree(java.nio.file.Paths.get(root))
         vt = build()
       }

@@ -300,26 +300,14 @@ object LlmTextOps {
   }
 
   /** Persist the trained BPE merge list into a `graft-vt` versioned
-    * table (build-if-absent; the "absent" predicate is the committed v0
-    * manifest, the PortableQuantizer.indexRootAt discipline) -- a trained
+    * table ([[graft.tables.CorpusStamp.persist]]: build-if-absent on the
+    * committed v0 manifest, retrain on a stale corpus) -- a trained
     * TOKENIZER is a pipeline artifact exactly like an ANN index:
     * committed once, versioned like data, reopened by every later
     * serving job with zero training jobs. The merge list is 8 rows. */
-  private[graft] def bpeIndexRoot(s: SparkSession, d: String): String = {
-    val root = graft.TempDirs.cached("vtbpe", d)(_ => ()) + "/t"
-    val fp = graft.tables.CorpusStamp.fingerprint(d, "documents")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_manifests", "v00000000.json"))) {
-      graft.tables.VersionedTable.create(s, root, bpeTrainCore(s, d)._1)
-      graft.tables.CorpusStamp.write(root, fp)
-    } else if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-      // corpus mutated in place: retrain (fp-keyed bpe_train artifact) and
-      // RE-VERSION the persisted merge list, then seal the corpus state
-      graft.tables.VersionedTable.open(s, root).overwrite(bpeTrainCore(s, d)._1)
-      graft.tables.CorpusStamp.write(root, fp)
-    }
-    root
-  }
+  private[graft] def bpeIndexRoot(s: SparkSession, d: String): String =
+    graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtbpe", d)(_ => ()) + "/t",
+      graft.tables.CorpusStamp.fingerprint(d, "documents"))(bpeTrainCore(s, d)._1)
 
   /** The ordered merge list read back from the persisted tokenizer -- a
     * bounded index LOOKUP (8 rows through the graft-vt reader), never
@@ -739,31 +727,20 @@ object LlmTextOps {
   private[graft] val substringIndexBuilds = new java.util.concurrent.atomic.AtomicLong
 
   /** Persist the EXISTING corpus's distinct window hashes into a
-    * `graft-vt` versioned table, build-if-absent on the committed v0
-    * manifest (the unigramIndexRoot / PortableQuantizer discipline): at
-    * 100 TB the known-hash table is a committed pipeline artifact built
-    * once per corpus snapshot, and each daily batch job reopens it with
-    * zero scans of the existing data. Corpus-fingerprint sealed: a
+    * `graft-vt` versioned table ([[graft.tables.CorpusStamp.persist]],
+    * the bpeIndexRoot discipline): at 100 TB the known-hash table is a
+    * committed pipeline artifact built once per corpus snapshot, and
+    * each daily batch job reopens it with zero scans of the existing
+    * data. Corpus-fingerprint sealed: a
     * corpus mutated in place re-derives (and re-versions) exactly once,
     * an unchanged corpus serves with zero builds. */
-  private[graft] def substringIndexRoot(s: SparkSession, d: String): String = {
-    val root = graft.TempDirs.cached("vtsubh", d)(_ => ()) + "/t"
-    val fp = graft.tables.CorpusStamp.fingerprint(d, "documents")
-    def knownHashes = substringWindows(
-        t(s, d, "documents").filter(col("doc_id") % 10 < 8), SubstringWindow)
-      .select(col("h")).distinct()
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_manifests", "v00000000.json"))) {
+  private[graft] def substringIndexRoot(s: SparkSession, d: String): String =
+    graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtsubh", d)(_ => ()) + "/t",
+        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
       substringIndexBuilds.incrementAndGet()
-      graft.tables.VersionedTable.create(s, root, knownHashes)
-      graft.tables.CorpusStamp.write(root, fp)
-    } else if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-      substringIndexBuilds.incrementAndGet()
-      graft.tables.VersionedTable.open(s, root).overwrite(knownHashes)
-      graft.tables.CorpusStamp.write(root, fp)
+      substringWindows(t(s, d, "documents").filter(col("doc_id") % 10 < 8), SubstringWindow)
+        .select(col("h")).distinct()
     }
-    root
-  }
 
   /** [[llmDedupSubstringIncremental]] SERVED FROM THE PERSISTED
     * known-hash index: the existing corpus is never scanned at serve

@@ -140,7 +140,7 @@ object TableOps {
   /** Range-layout lineitem slice with per-file blooms on l_orderkey —
     * built once per (JVM, sfDir). repartitionByRange gives each data
     * file a narrow key range, the layout optimizeLayout would produce;
-    * the bloom sidecar is what readWhereEq probes. */
+    * the manifest's bloom entries are what readWhereEq probes. */
   private def bloomTable(s: SparkSession, d: String): VersionedTable = {
     val root = TempDirs.cached("vtbloom", d) { dir =>
       val li = Tables.load(s, d, "lineitem")

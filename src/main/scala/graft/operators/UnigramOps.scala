@@ -160,27 +160,15 @@ object UnigramOps {
       .orderBy("doc_id")
 
   /** Persist the trained unigram model (piece, cnt, score — ≤ 84 rows)
-    * into a `graft-vt` versioned table, build-if-absent on the committed
-    * v0 manifest (the bpeIndexRoot / PortableQuantizer discipline): a
-    * trained tokenizer is a committed pipeline artifact, reopened by
-    * serving jobs with zero training jobs. */
+    * into a `graft-vt` versioned table ([[graft.tables.CorpusStamp
+    * .persist]], the bpeIndexRoot discipline): a trained tokenizer is a
+    * committed pipeline artifact, reopened by serving jobs with zero
+    * training jobs. */
   private[graft] def unigramIndexRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = graft.TempDirs.cached("vtuni", d)(_ => ()) + "/t"
-    val fp = graft.tables.CorpusStamp.fingerprint(d, "documents")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_manifests", "v00000000.json"))) {
-      graft.tables.VersionedTable.create(s, root,
-        unigramCore(s, d)._1.toDF("piece", "cnt", "score"))
-      graft.tables.CorpusStamp.write(root, fp)
-    } else if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-      // corpus mutated in place: retrain (fp-keyed core memo) and
-      // RE-VERSION the persisted model, then seal the new corpus state
-      graft.tables.VersionedTable.open(s, root)
-        .overwrite(unigramCore(s, d)._1.toDF("piece", "cnt", "score"))
-      graft.tables.CorpusStamp.write(root, fp)
-    }
-    root
+    graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtuni", d)(_ => ()) + "/t",
+      graft.tables.CorpusStamp.fingerprint(d, "documents"))(
+      unigramCore(s, d)._1.toDF("piece", "cnt", "score"))
   }
 
   /** The trained scores read back from the persisted model — a bounded

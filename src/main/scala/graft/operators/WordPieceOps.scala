@@ -195,28 +195,14 @@ object WordPieceOps {
       .orderBy("doc_id")
 
   /** Persist the trained encode vocabulary (alphabet ∪ merged symbols,
-    * ≤ |alphabet| + 8 rows) into a `graft-vt` versioned table,
-    * build-if-absent on the committed v0 manifest — the same
+    * ≤ |alphabet| + 8 rows) into a `graft-vt` versioned table
+    * ([[graft.tables.CorpusStamp.persist]]) — the same
     * tokenizer-artifact posture as llm_bpe_persisted /
     * llm_unigram_persisted, completing all three trained families. */
   private[graft] def wordpieceIndexRoot(s: SparkSession, d: String): String = {
     import s.implicits._
-    val root = graft.TempDirs.cached("vtwp", d)(_ => ()) + "/t"
-    val fp = graft.tables.CorpusStamp.fingerprint(d, "documents")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_manifests", "v00000000.json"))) {
-      graft.tables.VersionedTable.create(s, root,
-        wordpieceCore(s, d)._2.toDF("piece"))
-      graft.tables.CorpusStamp.write(root, fp)
-    } else if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-      // corpus mutated in place under the same path: retrain (the core
-      // memo key carries fp, so this is a real retrain) and RE-VERSION
-      // the artifact, then seal the new corpus state
-      graft.tables.VersionedTable.open(s, root)
-        .overwrite(wordpieceCore(s, d)._2.toDF("piece"))
-      graft.tables.CorpusStamp.write(root, fp)
-    }
-    root
+    graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtwp", d)(_ => ()) + "/t",
+      graft.tables.CorpusStamp.fingerprint(d, "documents"))(wordpieceCore(s, d)._2.toDF("piece"))
   }
 
   /** The vocabulary read back from the persisted tokenizer — a bounded

@@ -2,6 +2,7 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Staleness seal for persisted derived artifacts (trained tokenizers,
   * ANN codebooks, geo layouts): a metadata fingerprint of the corpus
@@ -9,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * manifests at build time and re-checked at every serve.
   *
   * Why: the persisted-model roots are keyed per corpus DIRECTORY
-  * (build-if-absent on the committed v0 manifest), so a corpus mutated
+  * (build-if-absent on the committed v0 manifest, [[persist]]), so a corpus mutated
   * IN PLACE at the same path would serve a stale vocabulary / codebook
   * silently — the one failure the whole "committed pipeline artifact"
   * posture must not have. With the stamp, a serve whose recomputed
@@ -76,4 +77,34 @@ object CorpusStamp {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  /** One lock per artifact root: [[persist]]'s check and build hold it. */
+  private val rootLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The build-if-absent-or-stale path of a persisted artifact, a
+    * `graft-vt` table at `tableRoot` derived from the corpus state `fp`:
+    * with no committed v0 manifest, `create` it from `frame`; with a
+    * stamp other than `fp`, RE-VERSION it (`overwrite` with `frame`, so
+    * the history records the retrain); then seal `fp`. An artifact that
+    * is present and fresh evaluates nothing. Returns `tableRoot`.
+    *
+    * "Absent" is the committed v0 manifest, not the directory: `create`
+    * makes `_manifests` before its v0 commit lands, so a crashed first
+    * build must not wedge the root. Check and build run under one lock
+    * per root, so concurrent first serves in one JVM build once and
+    * both return the one version; unserialized, both miss the v0 check
+    * and the loser's `create` throws. Cross-process coordination is the
+    * durable deployment's problem, which PortableQuantizer.indexRootAt's
+    * idempotent-txn pattern shows how to solve. */
+  def persist(s: SparkSession, tableRoot: String, fp: String)(frame: => DataFrame): String =
+    rootLocks.computeIfAbsent(tableRoot, _ => new AnyRef).synchronized {
+      if (!Files.exists(Paths.get(tableRoot, "_manifests", "v00000000.json"))) {
+        VersionedTable.create(s, tableRoot, frame)
+        write(tableRoot, fp)
+      } else if (!isFresh(tableRoot, fp)) {
+        VersionedTable.open(s, tableRoot).overwrite(frame)
+        write(tableRoot, fp)
+      }
+      tableRoot
+    }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.TrackedParquet
+import org.apache.spark.sql.graftnative.TrackedParquet.Written
 import org.apache.spark.sql.types.{DataType, LongType, NumericType, StructType}
 
 /** A minimal versioned table format over plain parquet — the lakehouse
@@ -19,8 +20,14 @@ import org.apache.spark.sql.types.{DataType, LongType, NumericType, StructType}
   * Layout:
   * {{{
   *   <root>/data/<uuid>/part-*.parquet   -- immutable data files
-  *   <root>/_manifests/v00000012.json    -- ordered file list for version 12
+  *   <root>/_manifests/v00000012.json    -- the record of version 12
   * }}}
+  *
+  * A version's record is ONE file: its ordered file list, the idempotent
+  * txn id that committed it, and — when `create(..., statsCol, bloomCol)`
+  * turned them on — each file's min/max and bloom entries with the two
+  * column names. Entries commit inside the manifest, so whatever a reader
+  * sees of a version it sees whole: files and pruning entries together.
   *
   * Commit protocol (optimistic concurrency): a writer computes its new
   * file list, serializes the manifest to a temp file, and publishes it
@@ -39,7 +46,7 @@ import org.apache.spark.sql.types.{DataType, LongType, NumericType, StructType}
   * matching rows survive untouched into the next version (DELETE prunes
   * the rewrite set via `input_file_name()`), so write amplification is
   * proportional to the touched files, not the table. Optional per-file
-  * min/max and bloom sidecars (`create(..., statsCol, bloomCol)`) drive
+  * min/max and bloom entries (`create(..., statsCol, bloomCol)`) drive
   * file skipping; the parquet write job fills both for the files it
   * writes, so a commit never re-reads them. Reads take the schema from
   * one data file's footer on the driver, so no operation spends a Spark
@@ -67,13 +74,8 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
 
   private def manifestPath(v: Int): Path = manifestDir.resolve(f"v$v%08d.json")
 
-  private def readManifest(v: Int): Seq[String] = {
-    val line = new String(Files.readAllBytes(manifestPath(v)), "UTF-8")
-    // one JSON object: {"files":["p1","p2",...]} — parsed without a JSON
-    // lib dependency (paths are uuid-based, never contain quotes)
-    line.split("\"files\":\\[", 2)(1).split("]", 2)(0)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-  }
+  private def readManifest(v: Int): Manifest =
+    Manifest.parse(new String(Files.readAllBytes(manifestPath(v)), "UTF-8"))
 
   /** Every parquet read of manifest-listed files goes through here: it
     * pins the READER side of the vacuum contract. A DataFrame planned on
@@ -117,108 +119,37 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
   def read(asOf: Option[Int] = None): DataFrame = {
     val v = asOf.getOrElse(currentVersion)
     require(versions.contains(v), s"version $v not in ${versions.mkString(",")}")
-    val files = readManifest(v)
+    val files = readManifest(v).paths
     if (files.isEmpty) spark.emptyDataFrame
     else snapshotRead(files)
   }
 
   // ------------------------------------------------------ file skipping
 
-  private def statsPath(v: Int): Path = manifestDir.resolve(f"v$v%08d.stats.json")
+  /** The numeric column this table keeps per-file min/max for, if any.
+    * `create(..., statsCol)` fixes it for the table's life, so a handle
+    * reads it once, from the head manifest. */
+  lazy val statsCol: Option[String] = readManifest(currentVersion).statsCol
 
-  /** The numeric column this table keeps per-file min/max for, if any —
-    * recorded in the newest stats sidecar (create(..., statsCol) set it).
-    * Resolved ONCE per handle: the un-cached scan probed every version's
-    * sidecar path on EVERY commit of a stats-less table (newStatsCol
-    * .orElse(statsCol) in commitOnce), turning N streaming appends into
-    * O(N²) filesystem metadata calls. Stats written through this handle
-    * update the cache; stats appearing from another process are picked
-    * up by the next fresh handle — acceptable staleness for a pure
-    * optimization. */
-  @volatile private var statsColCache: Option[Option[String]] = None
-  def statsCol: Option[String] = statsColCache match {
-    case Some(v) => v
-    case None =>
-      val v = versions.reverse.find(v => Files.exists(statsPath(v)))
-        .map(v => readStatsJson(v)._1)
-      statsColCache = Some(v)
-      v
-  }
-
-  private def readStatsJson(v: Int): (String, Map[String, (Double, Double)]) = {
-    val s = new String(Files.readAllBytes(statsPath(v)), "UTF-8")
-    def arr(field: String): Seq[String] =
-      s.split("\"" + field + "\":\\[", 2)(1).split("]", 2)(0)
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    val c = s.split("\"col\":\"", 2)(1).split("\"", 2)(0)
-    val fs = arr("files")
-    val mins = arr("mins").map(_.toDouble)
-    val maxs = arr("maxs").map(_.toDouble)
-    (c, fs.lazyZip(mins).lazyZip(maxs).map((f, lo, hi) => f -> (lo, hi)).toMap)
-  }
-
-  // ------------------------------------------------- bloom file skipping
-
-  private def bloomPath(v: Int): Path = manifestDir.resolve(f"v$v%08d.bloom.json")
+  /** The long-typed key column this table keeps per-file blooms for, if
+    * any; fixed at create like [[statsCol]]. */
+  lazy val bloomCol: Option[String] = readManifest(currentVersion).bloomCol
 
   /** Bits per per-file bloom: 64 Kbit = 8 KB ≈ 1% fpp at ~6k keys/file.
-    * The sidecar stays metadata-scale (8 KB × files), and a probe is a
+    * The manifest stays metadata-scale (8 KB × files), and a probe is a
     * driver-side bit test — the point-lookup complement to the min/max
     * range stats ([[readWhere]] skips on RANGES; equality probes on a
     * hash-distributed key overlap every range, which is exactly where
     * blooms win). */
   private val BloomBits = 65536L
 
-  /** The long-typed key column this table keeps per-file blooms for, if
-    * any — create(..., bloomCol) set it. Same one-probe caching
-    * discipline as [[statsCol]]. */
-  @volatile private var bloomColCache: Option[Option[String]] = None
-  def bloomCol: Option[String] = bloomColCache match {
-    case Some(v) => v
-    case None =>
-      val v = versions.reverse.find(v => Files.exists(bloomPath(v)))
-        .map(v => readBloomJson(v)._1)
-      bloomColCache = Some(v)
-      v
-  }
-
-  private def readBloomJson(v: Int): (String, Map[String, Array[Byte]]) = {
-    val s = new String(Files.readAllBytes(bloomPath(v)), "UTF-8")
-    def arr(field: String): Seq[String] =
-      s.split("\"" + field + "\":\\[", 2)(1).split("]", 2)(0)
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    val c = s.split("\"col\":\"", 2)(1).split("\"", 2)(0)
-    val dec = java.util.Base64.getDecoder
-    (c, arr("files").zip(arr("blooms").map(dec.decode)).toMap)
-  }
-
-  private def writeBlooms(v: Int, c: String, entries: Seq[(String, Array[Byte])]): Unit = {
-    val enc = java.util.Base64.getEncoder
-    val json = "{\"col\":\"" + c + "\"," +
-      entries.map(_._1).mkString("\"files\":[\"", "\",\"", "\"],") +
-      entries.map(e => enc.encodeToString(e._2)).mkString("\"blooms\":[\"", "\",\"", "\"]}")
-    val tmp = Files.createTempFile(manifestDir, ".tmp-", ".json")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    Files.move(tmp, bloomPath(v), StandardCopyOption.ATOMIC_MOVE)
-    bloomColCache = Some(Some(c))
-  }
-
   /** File list for version `v` pruned to files whose bloom POSSIBLY
     * contains `key`. Files without an entry are kept — skipping must
     * never lose rows; false positives only cost a file read. */
-  def pruneFilesEq(key: Long, asOf: Option[Int] = None): Seq[String] = {
-    val v = asOf.getOrElse(currentVersion)
-    val files = readManifest(v)
-    if (!Files.exists(bloomPath(v))) return files
-    val (_, blooms) = readBloomJson(v)
-    files.filter { f =>
-      blooms.get(normalize(f)) match {
-        case Some(bytes) =>
-          org.apache.spark.sql.graftnative.BloomBridge.mightContainDriver(bytes, key)
-        case None => true
-      }
-    }
-  }
+  def pruneFilesEq(key: Long, asOf: Option[Int] = None): Seq[String] =
+    readManifest(asOf.getOrElse(currentVersion)).files
+      .filter(_.bloom.forall(org.apache.spark.sql.graftnative.BloomBridge.mightContainDriver(_, key)))
+      .map(_.path)
 
   /** Point-lookup read with bloom file skipping: only possibly-matching
     * files are LISTED in the scan, then the exact predicate applies. At
@@ -233,36 +164,13 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     else snapshotRead(pruned).filter(col(c) === key)
   }
 
-  /** Written ONLY by the winner of the manifest race, after its rename —
-    * a present sidecar is therefore always consistent with its manifest.
-    * Stats are an optimization: a missing sidecar only disables skipping. */
-  private def writeStats(v: Int, c: String, entries: Seq[(String, (Double, Double))]): Unit = {
-    val ordered = entries
-    val json = "{\"col\":\"" + c + "\"," +
-      ordered.map(_._1).mkString("\"files\":[\"", "\",\"", "\"],") +
-      ordered.map(_._2._1).mkString("\"mins\":[", ",", "],") +
-      ordered.map(_._2._2).mkString("\"maxs\":[", ",", "]}")
-    val tmp = Files.createTempFile(manifestDir, ".tmp-", ".json")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    Files.move(tmp, statsPath(v), StandardCopyOption.ATOMIC_MOVE)
-    statsColCache = Some(Some(c))
-  }
-
   /** File list for version `v` pruned to files whose [min,max] range on
     * the stats column overlaps [lo,hi]. Files without a stats entry are
     * kept (skipping must never lose rows). */
-  def pruneFiles(lo: Double, hi: Double, asOf: Option[Int] = None): Seq[String] = {
-    val v = asOf.getOrElse(currentVersion)
-    val files = readManifest(v)
-    if (!Files.exists(statsPath(v))) return files
-    val (_, stats) = readStatsJson(v)
-    files.filter { f =>
-      stats.get(normalize(f)) match {
-        case Some((mn, mx)) => !(mx < lo || mn > hi)
-        case None => true
-      }
-    }
-  }
+  def pruneFiles(lo: Double, hi: Double, asOf: Option[Int] = None): Seq[String] =
+    readManifest(asOf.getOrElse(currentVersion)).files
+      .filter(_.minMax.forall { case (mn, mx) => !(mx < lo || mn > hi) })
+      .map(_.path)
 
   /** Range read with file skipping: only overlapping files are even
     * LISTED in the scan — at 100 TB on a range-layout table (partitioned
@@ -278,9 +186,9 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
   }
 
   /** Write `df` as fresh immutable data files; returns their paths with
-    * the sidecar entries the write job itself collected. */
+    * the pruning entries the write job itself collected. */
   private def writeDataFiles(df: DataFrame, sc: Option[String] = statsCol,
-                             bc: Option[String] = bloomCol): Seq[TrackedParquet.Written] =
+                             bc: Option[String] = bloomCol): Seq[Written] =
     TrackedParquet.write(df, Paths.get(root, "data", java.util.UUID.randomUUID().toString).toString,
       sc, bc, BloomBits / 10, BloomBits)
 
@@ -289,20 +197,18 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     * that version. The caller must REBASE — recompute carried/fresh
     * against the new head — before trying again: blindly republishing a
     * stale file list at the next slot would silently drop the winner's
-    * files (lost update). If the table keeps sidecars, the winner then
-    * publishes the version's stats and bloom sidecars: carried files
-    * inherit their previous entries, and fresh files bring the entries
-    * their write job collected — no file is read again. */
-  private def commitOnce(base: Int, carried: Seq[String], fresh: Seq[TrackedParquet.Written],
-                         newStatsCol: Option[String] = None,
+    * files (lost update). The whole record is built before the link:
+    * carried files keep the entries of the base manifest they were read
+    * from, fresh files bring the entries their write job collected, so
+    * entries commit inside the manifest and nothing runs after the
+    * commit point. `cols` are the (stats, bloom) columns; only `create`
+    * passes them, every later commit keeps the table's. */
+  private def commitOnce(base: Int, carried: Seq[Written], fresh: Seq[Written],
                          txn: Option[String] = None,
-                         newBloomCol: Option[String] = None): Int = {
-    val files = carried ++ fresh.map(_.path)
+                         cols: (Option[String], Option[String]) = (statsCol, bloomCol)): Int = {
     val attempt = base + 1
     val tmp = Files.createTempFile(manifestDir, ".tmp-", ".json")
-    val body = files.mkString("{\"files\":[\"", "\",\"", "\"]") +
-      txn.map(t => s""","txn":"$t"""").getOrElse("") + "}"
-    Files.write(tmp, body.getBytes("UTF-8"))
+    Files.write(tmp, Manifest(carried ++ fresh, cols._1, cols._2, txn).json.getBytes("UTF-8"))
     // createLink, NOT move: Files.move(ATOMIC_MOVE) maps to rename(2),
     // which silently REPLACES an existing target on POSIX — two racers
     // landing on the same version slot would both "succeed" and the
@@ -336,28 +242,6 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
             "on a POSIX filesystem with hard links", e)
     }
     txn.foreach(recordTxn) // keep the incremental txn cache warm
-    // The manifest rename above IS the commit; everything past it is an
-    // optimization, so a sidecar failure must not surface as a commit
-    // failure (the caller would retry a commit that already happened and
-    // duplicate rows). Known benign loss: if the PREVIOUS winner never
-    // publishes its sidecar (it died past its link), carried files get no
-    // entries and simply stop pruning — conservative, never wrong.
-    try {
-      val (sc, bc) = (newStatsCol.orElse(statsCol), newBloomCol.orElse(bloomCol))
-      val stats = fresh.flatMap(f => f.minMax.map(f.path -> _))
-      val blooms = fresh.flatMap(f => f.bloom.map(f.path -> _))
-      def inherit[T](p: Path, prev: => Map[String, T]): Seq[(String, T)] = {
-        // the racer that won `base` publishes its sidecars just after its
-        // link: wait up to a second past it rather than drop carried entries
-        val until =
-          if (base < 0) 0L else Files.getLastModifiedTime(manifestPath(base)).toMillis + 1000
-        while (!Files.exists(p) && System.currentTimeMillis() < until) Thread.sleep(1)
-        val m = if (base >= 0 && Files.exists(p)) prev else Map.empty[String, T]
-        carried.flatMap(f => m.get(normalize(f)).map(normalize(f) -> _))
-      }
-      sc.foreach(c => writeStats(attempt, c, inherit(statsPath(base), readStatsJson(base)._2) ++ stats))
-      bc.foreach(c => writeBlooms(attempt, c, inherit(bloomPath(base), readBloomJson(base)._2) ++ blooms))
-    } catch { case scala.util.control.NonFatal(_) => }
     attempt
   }
 
@@ -397,7 +281,7 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     val fresh = writeDataFiles(df)
     withRebase() {
       val base = currentVersion
-      commitOnce(base, readManifest(base), fresh)
+      commitOnce(base, readManifest(base).files, fresh)
     }
   }
 
@@ -410,14 +294,11 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
 
   private def checkpointTxns: Set[String] =
     if (!Files.exists(txnCheckpointPath)) Set.empty
-    else new String(Files.readAllBytes(txnCheckpointPath), "UTF-8")
-      .split("\"txns\":\\[", 2)(1).split("]", 2)(0)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSet
+    else jsonArray(new String(Files.readAllBytes(txnCheckpointPath), "UTF-8"), "txns").toSet
 
   private def writeTxnCheckpoint(txns: Set[String]): Unit = {
     val tmp = Files.createTempFile(manifestDir, ".tmp-", ".json")
-    Files.write(tmp, txns.toSeq.sorted
-      .mkString("{\"txns\":[\"", "\",\"", "\"]}").getBytes("UTF-8"))
+    Files.write(tmp, ("{" + jsonField("txns", txns.toSeq.sorted.map(quote)) + "}").getBytes("UTF-8"))
     Files.move(tmp, txnCheckpointPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -429,12 +310,6 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
   private val txnCache = scala.collection.mutable.Set.empty[String]
 
   private def recordTxn(t: String): Unit = synchronized { txnCache += t }
-
-  private def txnOf(v: Int): Option[String] = {
-    val s = new String(Files.readAllBytes(manifestPath(v)), "UTF-8")
-    if (s.contains("\"txn\":\"")) Some(s.split("\"txn\":\"", 2)(1).split("\"", 2)(0))
-    else None
-  }
 
   /** Transaction ids already recorded by [[appendIdempotent]] — from the
     * vacuum checkpoint plus the manifests (the txn rides INSIDE the
@@ -448,7 +323,7 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     // listing and the read — its txns were checkpointed FIRST (vacuum's
     // contract), so re-read the checkpoint instead of crashing the sink
     fresh.foreach(v =>
-      try txnOf(v).foreach(txnCache += _)
+      try readManifest(v).txn.foreach(txnCache += _)
       catch { case _: java.nio.file.NoSuchFileException => txnCache ++= checkpointTxns })
     txnScanned = math.max(txnScanned, fresh.foldLeft(txnScanned)(math.max))
     txnCache.toSet
@@ -478,7 +353,7 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
       // way the replay skips — no interleaving double-appends.
       val base = currentVersion
       if (committedTxns.contains(txnId)) currentVersion
-      else commitOnce(base, readManifest(base), fresh, txn = Some(txnId))
+      else commitOnce(base, readManifest(base).files, fresh, txn = Some(txnId))
     }
   }
 
@@ -492,7 +367,8 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     // emptyDataFrame read() returns can't anchor the full-outer join (no
     // key column), and a CDC sink's first micro-batch into a just-created
     // table is exactly this case
-    if (readManifest(base).isEmpty)
+    val files = readManifest(base).files
+    if (files.isEmpty)
       return commitOnce(base, Nil, writeDataFiles(updates))
     val cur = read(Some(base))
     val cols = cur.columns.toSeq
@@ -508,7 +384,7 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
       .select(cols.map(c =>
         if (c == key) col(key)
         else when(col(marker).isNotNull, u(c)).otherwise(cur(c)).as(c)): _*)
-    commitOnce(base, Nil, writeDataFiles(merged.coalesce(math.max(1, readManifest(base).size))))
+    commitOnce(base, Nil, writeDataFiles(merged.coalesce(math.max(1, files.size))))
   }
 
   /** Copy-on-write DELETE with file pruning: only files that actually
@@ -517,9 +393,9 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     * a selective delete rewrites a handful of files, not the table. */
   def delete(condition: org.apache.spark.sql.Column): Int = withRebase() {
     val base = currentVersion
-    val files = readManifest(base)
+    val files = readManifest(base).files
     if (files.isEmpty) return base // empty snapshot: nothing to delete
-    val cur = snapshotRead(files)
+    val cur = snapshotRead(files.map(_.path))
     // metadata-sized collect of the file paths containing hits: distinct
     // per partition (no shuffle), unioned on the driver, since a split
     // file shows up in several partitions
@@ -528,7 +404,7 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
       .collect().map(normalizeUri).toSet
     if (touched.isEmpty) base // no-op: nothing to delete
     else {
-      val kept = files.filterNot(f => touched.contains(normalize(f)))
+      val kept = files.filterNot(f => touched.contains(normalize(f.path)))
       // SQL DELETE removes rows where the condition is TRUE; a NULL
       // predicate keeps the row (bare !condition would drop it)
       val rewritten = writeDataFiles(
@@ -557,11 +433,10 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
       read(Some(base)).repartitionByRange(numFiles, col(sortCol))))
   }
 
-  /** Retention cleanup: drop all but the newest `keepVersions` manifests
-    * (and their stats and bloom sidecars), then delete every data file no
-    * remaining manifest references AND older than `retentionMs` — CoW
-    * rewrites and abandoned writes leave orphans that only a vacuum
-    * reclaims. The age threshold is the in-flight-writer guard: a
+  /** Retention cleanup: drop all but the newest `keepVersions` manifests,
+    * then delete every data file no remaining manifest references AND
+    * older than `retentionMs` — CoW rewrites and abandoned writes leave
+    * orphans that only a vacuum reclaims. The age threshold is the in-flight-writer guard: a
     * concurrent commit's freshly-written files are unreferenced until its
     * manifest rename lands, and deleting them would corrupt that commit
     * (the standard lakehouse vacuum-retention rule). Dropped manifests'
@@ -587,15 +462,11 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     committedTxns // warm the cache from manifests before any are dropped
     val all = versions
     val (dropped, kept) = all.splitAt(math.max(0, all.size - keepVersions))
-    val droppedTxns = dropped.flatMap(txnOf).toSet
+    val droppedTxns = dropped.flatMap(readManifest(_).txn).toSet
     if (droppedTxns.nonEmpty)
       writeTxnCheckpoint(checkpointTxns ++ droppedTxns)
-    val referenced = kept.flatMap(readManifest).map(normalize).toSet
-    dropped.foreach { v =>
-      Files.deleteIfExists(statsPath(v))
-      Files.deleteIfExists(bloomPath(v))
-      Files.deleteIfExists(manifestPath(v))
-    }
+    val referenced = kept.flatMap(readManifest(_).paths).map(normalize).toSet
+    dropped.foreach(v => Files.deleteIfExists(manifestPath(v)))
     val dataDir = Paths.get(root, "data")
     if (!Files.isDirectory(dataDir)) return 0
     val horizon = System.currentTimeMillis() - retentionMs
@@ -620,14 +491,14 @@ final class VersionedTable private (val spark: SparkSession, val root: String) {
     * tracking. */
   def addedBetween(fromV: Int, toV: Int): DataFrame = {
     require(fromV <= toV, s"fromV $fromV > toV $toV")
-    val before = readManifest(fromV).toSet
-    val added = readManifest(toV).filterNot(before)
+    val before = readManifest(fromV).paths.toSet
+    val added = readManifest(toV).paths.filterNot(before)
     if (added.isEmpty) read(Some(toV)).filter(lit(false))
     else snapshotRead(added)
   }
 
   /** (version, fileCount) per committed version — the audit trail. */
-  def history: Seq[(Int, Int)] = versions.map(v => v -> readManifest(v).size)
+  def history: Seq[(Int, Int)] = versions.map(v => v -> readManifest(v).files.size)
 }
 
 object VersionedTable {
@@ -637,16 +508,81 @@ object VersionedTable {
 
   private val ManifestName = "v(\\d{8})\\.json".r
 
+  /** One version's record, all that its commit publishes: the ordered
+    * data files with their pruning entries (a `Written` per file: min/max
+    * of the stats column, bloom of the bloom column, each absent when the
+    * table keeps none or the file has nothing to summarize), the two
+    * column names and the optional idempotent-append txn id. */
+  private final case class Manifest(files: Seq[Written], statsCol: Option[String],
+                                    bloomCol: Option[String], txn: Option[String]) {
+    def paths: Seq[String] = files.map(_.path)
+
+    /** `{"files":[..],"statsCol":"c","mins":[..],"maxs":[..],"bloomCol":"k",
+      * "blooms":[..],"txn":"id"}`: the entry arrays align with `files`,
+      * `null` where a file has no entry, and a table without a stats or
+      * bloom column writes neither its name nor its arrays. */
+    def json: String = {
+      val enc = java.util.Base64.getEncoder
+      def entries[T](e: Written => Option[T])(show: T => String) =
+        files.map(e(_).fold("null")(show))
+      (Seq(jsonField("files", paths.map(quote))) ++
+        statsCol.toSeq.flatMap(c => Seq(s""""statsCol":${quote(c)}""",
+          jsonField("mins", entries(_.minMax)(_._1.toString)),
+          jsonField("maxs", entries(_.minMax)(_._2.toString)))) ++
+        bloomCol.toSeq.flatMap(c => Seq(s""""bloomCol":${quote(c)}""",
+          jsonField("blooms", entries(_.bloom)(b => quote(enc.encodeToString(b)))))) ++
+        txn.map(t => s""""txn":${quote(t)}""")).mkString("{", ",", "}")
+    }
+  }
+
+  private object Manifest {
+    def parse(s: String): Manifest = {
+      val paths = jsonArray(s, "files")
+      def entries[T](field: String)(read: String => T): Seq[Option[T]] =
+        jsonArray(s, field).map(e => if (e == "null") None else Some(read(e)))
+          .padTo(paths.size, None)
+      val mins = entries("mins")(_.toDouble)
+      val maxs = entries("maxs")(_.toDouble)
+      val blooms = entries("blooms")(java.util.Base64.getDecoder.decode)
+      def name(field: String): Option[String] = {
+        val key = quote(field) + ":\""
+        val at = s.indexOf(key)
+        if (at < 0) None else Some(s.substring(at + key.length, s.indexOf('"', at + key.length)))
+      }
+      Manifest(paths.indices.map(i => Written(paths(i), mins(i).zip(maxs(i)), blooms(i))),
+        name("statsCol"), name("bloomCol"), name("txn"))
+    }
+  }
+
+  private def quote(x: String): String = "\"" + x + "\""
+
+  private def jsonField(name: String, elems: Seq[String]): String =
+    elems.mkString(quote(name) + ":[", ",", "]")
+
+  /** The elements of the JSON array `field` of `s`, quotes stripped, or
+    * Nil if `s` has none: the one reader of every array this format
+    * writes. Hand-rolled without a JSON library, which holds because no
+    * element contains a quote, comma or bracket: uuid-based paths,
+    * numbers, base64 and txn ids (checked at [[appendIdempotent]]). */
+  private def jsonArray(s: String, field: String): Seq[String] = {
+    val key = quote(field) + ":["
+    val at = s.indexOf(key)
+    if (at < 0) Nil
+    else {
+      val body = s.substring(at + key.length, s.indexOf(']', at + key.length))
+      if (body.isEmpty) Nil else body.split(",", -1).toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
+    }
+  }
+
   /** Manifest-side spelling: raw local path, scheme stripped. */
   private def normalize(p: String): String =
     p.stripPrefix("file://").stripPrefix("file:")
 
   /** `input_file_name()`-side spelling: Spark returns a PERCENT-ENCODED
     * URI, while manifests hold raw paths — a root containing a space (or
-    * any URI-encodable char) made delete's touched set and the stats
-    * sidecar keys miss every manifest path, breaking delete outright and
-    * silently disabling file skipping. Decode exactly once, ONLY on the
-    * URI side: a raw path that itself contains '%' arrives double-encoded
+    * any URI-encodable char) made delete's touched set miss every
+    * manifest path, breaking delete outright. Decode exactly once, ONLY
+    * on the URI side: a raw path that itself contains '%' arrives double-encoded
     * (%25…) and decodes back to the raw spelling, so the two sides meet
     * for every path. */
   private def normalizeUri(p: String): String = {
@@ -679,7 +615,7 @@ object VersionedTable {
     Files.createDirectories(t.manifestDir)
     require(t.versions.isEmpty, s"table already exists at $root")
     val files = t.writeDataFiles(df, statsCol, bloomCol)
-    t.commitOnce(-1, Nil, files, newStatsCol = statsCol, newBloomCol = bloomCol)
+    t.commitOnce(-1, Nil, files, cols = (statsCol, bloomCol))
     t
   }
 

@@ -100,8 +100,8 @@ class VtRelation(ctx: SQLContext, root: String, asOf: Option[Int])
   extends BaseRelation with PrunedFilteredScan {
 
   // ONE handle per relation, not one open() per call: open re-runs the
-  // stale-tmp sweep and the statsCol resolution, which a scan-per-batch
-  // consumer paid on every buildScan.
+  // stale-tmp sweep, and a fresh handle re-reads statsCol from the head
+  // manifest, which a scan-per-batch consumer paid on every buildScan.
   private lazy val table: VersionedTable = VersionedTable.open(ctx.sparkSession, root)
 
   // The snapshot is PINNED at relation creation: buildScan used to

@@ -1122,7 +1122,7 @@ object StressCheck {
     // every present key found exactly once THROUGH the pruned file list
     // (no false negatives at volume), (b) the average point lookup LISTS
     // a small fraction of the table's files (~1 owning file + ~1% fpp
-    // over the rest; per-file key counts here sit at the sidecar's
+    // over the rest; per-file key counts here sit at the 8 KB bloom's
     // designed ~5k-keys/file operating point).
     time("vt_bloom_1m") {
       val vroot = java.nio.file.Files
@@ -1134,6 +1134,8 @@ object StressCheck {
         bloomCol = Some("id"))
       val nFiles = tb.read().inputFiles.length
       require(nFiles >= 150, s"expected ~192 data files, got $nFiles")
+      println(s"[stress] vt_bloom_1m head manifest: ${java.nio.file.Files.size(java.nio.file.Paths
+        .get(vroot, "_manifests", f"v${tb.currentVersion}%08d.json"))} bytes, $nFiles files")
       val keys = (0 until 20).map(i => (nB / 20) * i + i)
       var listed = 0
       keys.foreach { k =>

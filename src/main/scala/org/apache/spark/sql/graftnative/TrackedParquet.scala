@@ -25,7 +25,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * several files. In org.apache.spark.sql for the writer API. */
 object TrackedParquet {
 
-  /** One written file, `dir/<file name>`, and its sidecar entries: no
+  /** One written file, `dir/<file name>`, and its pruning entries: no
     * min/max without a non-NULL stats value, no bloom without a row. */
   final case class Written(path: String, minMax: Option[(Double, Double)],
                            bloom: Option[Array[Byte]])

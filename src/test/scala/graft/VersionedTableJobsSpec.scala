@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
 import graft.tables.VersionedTable
 
 /** Spark jobs per VersionedTable operation on a small table that keeps
-  * both sidecars. A read plans against the schema in one data file's
-  * footer (no inference job), and the parquet write job fills the stats
-  * and bloom sidecars of the files it writes, so a commit's one sidecar
-  * pass is its write job: append and compact run one job, delete adds
-  * one to find its touched files, merge two for its join. A count that rises means a
-  * job came back; a count that falls is a gain to pin here. */
+  * both stats and bloom entries. A read plans against the schema in one
+  * data file's footer (no inference job), and the parquet write job fills
+  * the entries of the files it writes, which commit inside the manifest,
+  * so a commit's one sidecar pass is its write job: append and compact
+  * run one job, delete adds one to find its touched files, merge two for
+  * its join. A count that rises means a job came back; a count that
+  * falls is a gain to pin here. */
 class VersionedTableJobsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -60,12 +61,15 @@ class VersionedTableJobsSpec extends SparkTestBase {
     assert(counts == Seq("read" -> 1, "readWhere" -> 1, "readWhereEq" -> 1,
       "append" -> 1, "addedBetween" -> 1, "delete" -> 2, "merge" -> 3, "compact" -> 1),
       counts.mkString(", "))
-    // the counts are of real work: every commit published both sidecars
-    // and the table holds what the operations say
+    // the counts are of real work: every commit published both kinds of
+    // entries in its manifest and the table holds what the operations say
     val v = t.currentVersion
     assert(v == 4)
-    for (ext <- Seq("stats", "bloom"))
-      assert(Files.exists(Paths.get(root, "_manifests", f"v$v%08d.$ext.json")), ext)
+    val head = new String(Files.readAllBytes(Paths.get(root, "_manifests", f"v$v%08d.json")), "UTF-8")
+    for (field <- Seq("\"statsCol\":\"score\"", "\"mins\":[", "\"maxs\":[",
+        "\"bloomCol\":\"id\"", "\"blooms\":[\""))
+      assert(head.contains(field), field)
+    assert(t.pruneFiles(2000.0, 3000.0).isEmpty && t.pruneFilesEq(5000L).isEmpty)
     val out = t.read().collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(out.size == 119 && !out.contains(7L) && out(5L) == "m" && out(119L) == "n119")
   }

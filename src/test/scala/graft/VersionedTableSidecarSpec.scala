@@ -10,10 +10,11 @@ import graft.tables.VersionedTable
 
 /** What a VersionedTable keeps beside its data: the schema a read plans
   * with (taken from a data file's footer, not inferred by a Spark job),
-  * the per-file stats and bloom sidecars (filled by the parquet write job
-  * for the files it writes, never by a second read), the sidecar-column
-  * checks at create, and vacuum's cleanup of every sidecar of a dropped
-  * version. */
+  * the per-file stats and bloom entries of each version's manifest
+  * (filled by the parquet write job for the files it writes, never by a
+  * second read, and committed by the same link as the file list), the
+  * entry-column checks at create, and vacuum leaving one manifest per
+  * kept version. */
 class VersionedTableSidecarSpec extends SparkTestBase {
 
   private def freshRoot(): String =
@@ -63,13 +64,17 @@ class VersionedTableSidecarSpec extends SparkTestBase {
       java.time.LocalDateTime.of(2021, 6, 1, 12, 21))
   }
 
-  /** `file -> value` of one sidecar array, parsed like the table does. */
-  private def sidecar(root: String, v: Int, ext: String, field: String): Map[String, String] = {
-    val s = new String(Files.readAllBytes(Paths.get(root, "_manifests", f"v$v%08d.$ext.json")), "UTF-8")
+  /** `file -> value` of one entry array of version `v`'s manifest: the
+    * array aligns with `files`, and a file without an entry holds `null`. */
+  private def sidecar(root: String, v: Int, field: String): Map[String, String] = {
+    val s = new String(Files.readAllBytes(Paths.get(root, "_manifests", f"v$v%08d.json")), "UTF-8")
     def arr(f: String): Seq[String] =
       s.split("\"" + f + "\":\\[", 2)(1).split("]", 2)(0)
         .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    arr("files").zip(arr(field)).toMap
+    val fs = arr("files")
+    val values = arr(field)
+    assert(values.size == fs.size, s"v$v: $field does not align with files")
+    fs.zip(values).filter(_._2 != "null").toMap
   }
 
   private def local(uri: String): String =
@@ -102,20 +107,20 @@ class VersionedTableSidecarSpec extends SparkTestBase {
         f -> (r.getDouble(1).toString, r.getDouble(2).toString) }
       val refBlooms = ref.collect { case (f, r) if !r.isNullAt(3) =>
         f -> java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]](3)) }
-      val mins = sidecar(root, v, "stats", "mins")
-      val maxs = sidecar(root, v, "stats", "maxs")
+      val mins = sidecar(root, v, "mins")
+      val maxs = sidecar(root, v, "maxs")
       val stats = mins.map { case (f, lo) => f -> (lo.toDouble.toString, maxs(f).toDouble.toString) }
       assert(stats == refStats, s"stats sidecar of v$v")
-      assert(sidecar(root, v, "bloom", "blooms") == refBlooms, s"bloom sidecar of v$v")
+      assert(sidecar(root, v, "blooms") == refBlooms, s"bloom sidecar of v$v")
     }
     // today's edge behaviour on v4 (one file per batch): the all-NULL
     // stats file has no stats entry, the NaN file has one; XxHash64(NULL)
     // is the hash seed, so the all-NULL key file has a bloom too, one that
     // no probed key matches
     assert(t.read(Some(4)).inputFiles.length == 5)
-    assert(sidecar(root, 4, "stats", "mins").size == 4, "all-NULL stats file: no entry")
-    assert(sidecar(root, 4, "stats", "maxs").values.count(_ == "NaN") == 1)
-    assert(sidecar(root, 4, "bloom", "blooms").size == 5)
+    assert(sidecar(root, 4, "mins").size == 4, "all-NULL stats file: no entry")
+    assert(sidecar(root, 4, "maxs").values.count(_ == "NaN") == 1)
+    assert(sidecar(root, 4, "blooms").size == 5)
     assert(t.pruneFilesEq(62L, Some(4)).size == 1)
     assert(t.readWhere(-1.0, 1.0).count() ==
       t.read().filter(col("v").between(-1.0, 1.0)).count())
@@ -136,10 +141,10 @@ class VersionedTableSidecarSpec extends SparkTestBase {
     val refStats = ref.collect { case (f, r) if !r.isNullAt(1) => f -> (r.getDouble(1), r.getDouble(2)) }
     val refBlooms = ref.collect { case (f, r) if !r.isNullAt(3) =>
       f -> java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]](3)) }
-    val maxs = sidecar(root, v, "stats", "maxs")
-    val stats = sidecar(root, v, "stats", "mins").map { case (f, lo) => f -> (lo.toDouble, maxs(f).toDouble) }
+    val maxs = sidecar(root, v, "maxs")
+    val stats = sidecar(root, v, "mins").map { case (f, lo) => f -> (lo.toDouble, maxs(f).toDouble) }
     assert(stats == refStats, s"stats sidecar of v$v")
-    assert(sidecar(root, v, "bloom", "blooms") == refBlooms, s"bloom sidecar of v$v")
+    assert(sidecar(root, v, "blooms") == refBlooms, s"bloom sidecar of v$v")
     stats
   }
 
@@ -162,7 +167,7 @@ class VersionedTableSidecarSpec extends SparkTestBase {
       val ranges = stats.values.toSeq.sorted
       assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 }, ranges.mkString(", "))
     }
-    assert(sidecar(root, 1, "bloom", "blooms").size == 7)
+    assert(sidecar(root, 1, "blooms").size == 7)
     assert(t.pruneFilesEq(112L).size == 1 && t.readWhereEq(112L).count() == 1)
     assert(t.pruneFiles(21.0, 22.0).size == 1 && t.readWhere(21.0, 22.0).count() == 2)
   }
@@ -174,7 +179,7 @@ class VersionedTableSidecarSpec extends SparkTestBase {
       statsCol = Some("v"), bloomCol = Some("k"))
     assert(t.read().inputFiles.length == 1, "the empty write still lays down one file")
     assert(assertSidecarsMatchReference(t, root, 0).isEmpty)
-    assert(sidecar(root, 0, "bloom", "blooms").isEmpty)
+    assert(sidecar(root, 0, "blooms").isEmpty)
     assert(t.read().count() == 0 && t.readWhere(0.0, 1.0).count() == 0 && t.readWhereEq(1L).count() == 0)
     t.append(Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").coalesce(1))
     assert(assertSidecarsMatchReference(t, root, 1).size == 1)
@@ -216,6 +221,54 @@ class VersionedTableSidecarSpec extends SparkTestBase {
     assert(firsts.forall(k => t.readWhereEq(k).count() == 1))
   }
 
+  test("a version's entries are visible as soon as the version is: a reader racing 4 appenders prunes each one") {
+    import spark.implicits._
+    // the racing-appenders workload (4 threads x 5 appends) while a reader
+    // on its own handle polls the head: every version it sees must already
+    // prune the key of v0's batch, which every version carries
+    val root = freshRoot()
+    def batch(ids: Range): DataFrame =
+      ids.map(i => (i.toLong, i * 0.5)).toDF("k", "v").coalesce(1)
+    val t = VersionedTable.create(spark, root, batch(0 until 10), statsCol = Some("v"), bloomCol = Some("k"))
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    val seen = try {
+      val reader = pool.submit(new java.util.concurrent.Callable[Seq[(Int, Int, Int, Int)]] {
+        def call(): Seq[(Int, Int, Int, Int)] = {
+          val r = VersionedTable.open(spark, root)
+          val out = Seq.newBuilder[(Int, Int, Int, Int)]
+          var last = 0
+          // (version, files, files listed for key 0, files listed for v = 0.0)
+          def look(): Unit = {
+            val v = r.versions.last
+            if (v > last) {
+              last = v
+              out += ((v, r.pruneFiles(Double.NegativeInfinity, Double.PositiveInfinity, Some(v)).size,
+                r.pruneFilesEq(0L, Some(v)).size, r.pruneFiles(0.0, 0.0, Some(v)).size))
+            }
+          }
+          while (writing.get()) look()
+          look()
+          out.result()
+        }
+      })
+      val writers = (0 until 4).map { w =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 5).foreach { i =>
+            val lo = 1000 + w * 100 + i * 10
+            t.append(batch(lo until lo + 10))
+          }
+        })
+      }
+      try writers.foreach(_.get()) finally writing.set(false)
+      reader.get()
+    } finally pool.shutdown()
+    assert(t.versions == (0 to 20), s"non-contiguous versions ${t.versions}")
+    assert(seen.nonEmpty && seen.last._1 == 20, seen.mkString(", "))
+    val unpruned = seen.filterNot { case (_, n, eq, range) => eq < n && range < n }
+    assert(unpruned.isEmpty, s"versions seen before their entries: ${unpruned.mkString(", ")}")
+  }
+
   test("create rejects a non-long bloom column or a non-numeric stats column before writing") {
     import spark.implicits._
     val df = Seq((1, 2L, "a")).toDF("i", "l", "s")
@@ -238,14 +291,15 @@ class VersionedTableSidecarSpec extends SparkTestBase {
     val t = VersionedTable.create(spark, root, Seq((1L, 1.0)).toDF("id", "v"),
       statsCol = Some("v"), bloomCol = Some("id"))
     for (i <- 2 to 5) t.append(Seq((i.toLong, i.toDouble)).toDF("id", "v"))
-    assert(manifests(root).count(_.endsWith(".bloom.json")) == 5)
+    assert(t.versions.forall(v => sidecar(root, v, "blooms").size == v + 1))
+    assert(manifests(root) == t.versions.map(v => f"v$v%08d.json"), "one file per version")
     t.vacuum(keepVersions = 2, retentionMs = 0)
     val kept = t.versions
     assert(kept == Seq(3, 4))
     val Version = "v(\\d{8})\\..*".r
     val listed = manifests(root).collect { case n @ Version(v) => v.toInt -> n }
     assert(listed.map(_._1).toSet == kept.toSet, listed.mkString(", "))
-    assert(listed.size == 3 * kept.size, listed.mkString(", ")) // manifest, stats, bloom
+    assert(listed.size == kept.size, listed.mkString(", ")) // one manifest per version
     assert(t.readWhereEq(5L).count() == 1)
   }
 }

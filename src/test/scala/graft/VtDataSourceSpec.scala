@@ -239,6 +239,22 @@ class VtDataSourceSpec extends SparkTestBase {
     assert(WordPieceOps.wordpieceTrainRuns.get() == before + 2)
   }
 
+  test("persisted artifact: concurrent first serves of a fresh corpus build once, one root, one version") {
+    import graft.operators.LlmTextOps
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_fpfirst").toString
+    Files.copy(Paths.get(SF, "documents.parquet"), Paths.get(dir, "documents.parquet"))
+    // both threads reach the build-if-absent check together
+    val gate = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val roots = try (0 until 2).map(_ => pool.submit(new java.util.concurrent.Callable[String] {
+        def call(): String = { gate.await(); LlmTextOps.bpeIndexRoot(spark, dir) }
+      })).map(_.get())
+    finally pool.shutdown()
+    assert(roots.distinct.size == 1, roots.mkString(", "))
+    assert(VersionedTable.open(spark, roots.head).versions == Seq(0))
+  }
+
   test("persisted substring known-hash index: cross-session serve with ZERO rebuilds, identical profile") {
     import graft.operators.LlmTextOps
     LlmTextOps.substringIndexRoot(spark, SF) // may build once
