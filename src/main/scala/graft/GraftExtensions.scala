@@ -6,9 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftnative.{DotProduct, GraftNative, HashedShingles}
 
 /** Session extension installer — the public plug-in point for the engine's
-  * native expressions. Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` to get the
-  * SQL-callable `graft_dot(a, b)`; the DataFrame API goes through
+  * planner rules and native expressions. Activate with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (as
+  * [[GraftSession.builder]] does) to install:
+  *  - two optimizer rules: [[RedundantRoundRule]] (drops a provably
+  *    redundant outer round) and [[SmallPlanRule]] (a plan whose inputs
+  *    fit in one task runs as one stage);
+  *  - the planner strategy of the native as-of join (`AsOfJoinExec`);
+  *  - the SQL functions `graft_dot(a, b)` and
+  *    `graft_hashed_shingles(ws, n)`.
+  * The DataFrame API of the native expressions goes through
   * [[GraftFunctions]] and needs no session config.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -26,6 +33,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RedundantRoundRule)
+    ext.injectOptimizerRule(_ => SmallPlanRule)
     // Whole-operator extension: the native as-of join's planner strategy
     // (logical AsOfJoinPlan → physical AsOfJoinExec merge).
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftnative.AsOfJoinStrategy)

@@ -80,14 +80,14 @@ object ScalePrimitives {
         s"distRunning sums LongType columns only; ${df.schema(i).name} is ${df.schema(i).dataType}")
     }
     val sorted = df.orderBy(ord: _*)
-    // planned ONCE (see object doc) under a TRACKED execution id — the
-    // Dataset.rdd parity that keeps observe()/Observation working on
-    // plans upstream of the pin (InternalRows.toRddTracked scaladoc)
-    val rowRdd = org.apache.spark.sql.graftnative.InternalRows
-      .toRddTracked(sorted, "distRunning")
+    // planned ONCE (see object doc) under a TRACKED execution id that
+    // pass 1 runs inside — the Dataset.rdd parity that keeps
+    // observe()/Observation working on plans upstream of the pin
+    // (InternalRows.toRddTracked scaladoc)
     // pass 1: per-partition (row count, per-column totals); |partitions| rows
     val localIdx = idx // avoid closing over `df`
-    val totals = rowRdd.mapPartitionsWithIndex { case (pid, it) =>
+    val (rowRdd, totals) = org.apache.spark.sql.graftnative.InternalRows
+        .toRddTracked(sorted, "distRunning")(_.mapPartitionsWithIndex { case (pid, it) =>
       var cnt = 0L
       val acc = new Array[Long](localIdx.length)
       it.foreach { r =>
@@ -96,7 +96,7 @@ object ScalePrimitives {
         while (j < localIdx.length) { acc(j) += r.getLong(localIdx(j)); j += 1 }
       }
       Iterator((pid, cnt, acc))
-    }.collect()
+    }.collect())
     // exclusive prefix offsets, indexed by the dense pids 0..nParts-1
     // (mapPartitionsWithIndex emits one row per partition — an empty
     // partition still contributes its (pid, 0, zeros) row)
@@ -212,10 +212,9 @@ object ScalePrimitives {
         s"distRunningBy double sums DoubleType columns only; ${df.schema(i).name} is ${df.schema(i).dataType}")
     }
     val sorted = df.orderBy((col(grp) +: ord): _*)
-    // planned ONCE (see object doc) under a TRACKED execution id — see
-    // [[distRunningWithCount]] / InternalRows.toRddTracked
-    val rowRdd = org.apache.spark.sql.graftnative.InternalRows
-      .toRddTracked(sorted, "distRunningBy")
+    // planned ONCE (see object doc) under a TRACKED execution id that
+    // pass 1 runs inside — see [[distRunningWithCount]] /
+    // InternalRows.toRddTracked
     val (locG, locL, locD, locT) = (gIdx, lIdx, dIdx, gType)
     // pass 1: per partition — first/last group values plus the SUFFIX
     // partial (count + sums over the last group's rows only); the suffix
@@ -223,7 +222,8 @@ object ScalePrimitives {
     // hold exactly the trailing group's contribution. Group values are
     // RETAINED (copied) out of the reused row buffer before they outlive
     // the current row.
-    val infos = rowRdd.mapPartitionsWithIndex { case (pid, it) =>
+    val (rowRdd, infos) = org.apache.spark.sql.graftnative.InternalRows
+        .toRddTracked(sorted, "distRunningBy")(_.mapPartitionsWithIndex { case (pid, it) =>
       var nonEmpty = false
       var first: Any = null
       var cur: Any = null
@@ -244,7 +244,7 @@ object ScalePrimitives {
         while (j < locD.length) { accD(j) += r.getDouble(locD(j)); j += 1 }
       }
       Iterator((pid, nonEmpty, first, cur, cnt, accL, accD))
-    }.collect()
+    }.collect())
     // driver chain in partition order: carry-in for partition p applies to
     // its first group IFF that group is the running group at p's entry
     val nParts = rowRdd.getNumPartitions

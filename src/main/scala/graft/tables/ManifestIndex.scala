@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftnative.BloomBridge
 import org.apache.spark.sql.graftnative.TrackedParquet.Written
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** One manifest version's files as Spark's `FileIndex`. Every
   * VersionedTable read and `graft-vt` load is a `HadoopFsRelation` over
@@ -32,9 +33,16 @@ private[tables] final class ManifestIndex(spark: SparkSession, private val files
     HadoopFsRelation(this, partitionSchema, schema, None, new ParquetFileFormat, Map.empty)(spark)
   }
 
+  /** Each file's bloom, decoded and deserialized once per index, when a
+    * filter first probes one; aligned with `files`. */
+  private lazy val blooms: IndexedSeq[Option[BloomFilter]] =
+    files.map(_.bloom.map(b => BloomBridge.readDriver(java.util.Base64.getDecoder.decode(b)))).toIndexedSeq
+
   /** The files whose entries rule out none of `filters`. */
   def prune(filters: Seq[Expression]): Seq[Written] =
-    files.filterNot(w => filters.exists(f => outside(w, f) || absent(w, f)))
+    files.zipWithIndex.collect {
+      case (w, i) if !filters.exists(f => outside(w, f) || absent(i, f)) => w
+    }
 
   /** Whether `e` reads the stats column, itself or cast to double. */
   private def stat(e: Expression): Boolean = e match {
@@ -63,12 +71,11 @@ private[tables] final class ManifestIndex(spark: SparkSession, private val files
     }
   }
 
-  /** Whether `w`'s bloom holds none of the keys `f` matches. */
-  private def absent(w: Written, f: Expression): Boolean = (w.bloom, f) match {
-    case (Some(b), OneOf(c: Attribute, ks)) if bloomCol.contains(c.name) && c.dataType == LongType &&
+  /** Whether the bloom of file `i` holds none of the keys `f` matches. */
+  private def absent(i: Int, f: Expression): Boolean = f match {
+    case OneOf(c: Attribute, ks) if bloomCol.contains(c.name) && c.dataType == LongType &&
         ks.forall(_.isInstanceOf[java.lang.Long]) =>
-      val bytes = java.util.Base64.getDecoder.decode(b)
-      !ks.exists(k => BloomBridge.mightContainDriver(bytes, k.asInstanceOf[java.lang.Long]))
+      blooms(i).exists(bf => !ks.exists(k => BloomBridge.mightContainDriver(bf, k.asInstanceOf[java.lang.Long])))
     case _ => false
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Liter
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Column bridge to Spark's OWN runtime-filter expressions
   * (BloomFilterAggregate / BloomFilterMightContain — the pair Catalyst's
@@ -35,17 +36,17 @@ object BloomBridge {
       Literal(bloomBytes, BinaryType),
       new XxHash64(Seq(ExpressionUtils.expression(key)))))
 
-  /** DRIVER-side probe of the same serialized sketch — what file-level
-    * skipping needs (the manifest is driver state; no job may run just
-    * to decide which files to list). Mirrors the SQL expression pair
-    * exactly: the aggregate puts XxHash64(key) longs into the filter, so
-    * the probe hashes the key through the same expression before
-    * mightContainLong — a mismatch here would silently break skipping
-    * (false negatives), which is why both paths share this one bridge. */
-  def mightContainDriver(bloomBytes: Array[Byte], key: Long): Boolean = {
-    val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bloomBytes))
-    val hashed = new XxHash64(Seq(Literal(key))).eval(null).asInstanceOf[Long]
-    bf.mightContainLong(hashed)
-  }
+  /** A serialized sketch read back on the DRIVER, for [[mightContainDriver]]. */
+  def readDriver(bloomBytes: Array[Byte]): BloomFilter =
+    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bloomBytes))
+
+  /** DRIVER-side probe of the same sketch — what file-level skipping
+    * needs (the manifest is driver state; no job may run just to decide
+    * which files to list). Mirrors the SQL expression pair exactly: the
+    * aggregate puts XxHash64(key) longs into the filter, so the probe
+    * hashes the key through the same expression before mightContainLong
+    * — a mismatch here would silently break skipping (false negatives),
+    * which is why both paths share this one bridge. */
+  def mightContainDriver(bf: BloomFilter, key: Long): Boolean =
+    bf.mightContainLong(new XxHash64(Seq(Literal(key))).eval(null).asInstanceOf[Long])
 }

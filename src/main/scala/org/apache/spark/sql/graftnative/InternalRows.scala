@@ -36,12 +36,18 @@ object InternalRows {
     * ObservationManager. A bare `queryExecution.toRdd` skips them, and
     * an Observation upstream of the pinned plan then never completes —
     * llmPipelineObserved's `obs.get` hung exactly this way when
-    * ScalePrimitives first switched to the bare call (r15). */
-  def toRddTracked(df: DataFrame, name: String): RDD[InternalRow] = {
+    * ScalePrimitives first switched to the bare call (r15).
+    *
+    * `firstPass` runs inside the execution too: the Observation's metrics
+    * are published when it ends, and a plan without a shuffle stage (all
+    * of a small one, see graft.SmallPlanRule) has read no row until a
+    * job runs over its RDD. Returns the RDD and the first pass's result. */
+  def toRddTracked[T](df: DataFrame, name: String)(firstPass: RDD[InternalRow] => T): (RDD[InternalRow], T) = {
     val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
       qe.executedPlan.resetMetrics()
-      qe.toRdd
+      val rdd = qe.toRdd
+      (rdd, firstPass(rdd))
     }
   }
 }

@@ -84,7 +84,8 @@ class AsOfJoinSpec extends SparkTestBase {
   }
 
   test("native as-of join plans as AsOfJoinExec with clustered+sorted children") {
-    val df = RelationalOps.joinAsofNative(spark, SF)
+    // planned as for a large input: a small one needs no exchange at all
+    val df = RelationalOps.joinAsofNative(largeInputSpark, SF)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), s"expected the custom exec node in:\n$plan")
     // EnsureRequirements must have satisfied the declared distribution and

@@ -26,7 +26,9 @@ class LayoutSpec extends SparkTestBase {
 
   test("checkpointBy's declared layout is the true layout: hash partition + sort per partition") {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val df = spark.range(2000).select(
+    // planned as for a large input, so the consumer below would shuffle
+    // if the declared layout did not satisfy it
+    val df = largeInputSpark.range(2000).select(
       (col("id") % 37).as("a"), (col("id") % 5).as("b"), col("id"))
     val cp = Layout.checkpointBy(df, col("a"), col("b"))
 

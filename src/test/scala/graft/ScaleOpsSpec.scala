@@ -187,6 +187,8 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("no graded query collects vectors to the driver (distributed cosine)") {
+    // planned as for a large input, on a session of its own
+    val s = largeInputSpark
     import graft.operators.LlmOps
     import graft.functions.VectorFunctions
     // the distributed block join shows up as groupByKey/mapGroups stages
@@ -195,9 +197,9 @@ class ScaleOpsSpec extends SparkTestBase {
     // (a checkpoint leaf with no upstream plan to inspect), so the plan
     // property is asserted on the builder that memo runs — the same
     // cosinePairsDistributed call, un-memoized.
-    Seq(LlmOps.llmCosineTopk(spark, SF),
-        VectorFunctions.cosinePairsDistributed(spark,
-          Tables.load(spark, SF, "embeddings"), 0.45).orderBy("a_id", "b_id"))
+    Seq(LlmOps.llmCosineTopk(s, SF),
+        VectorFunctions.cosinePairsDistributed(s,
+          Tables.load(s, SF, "embeddings"), 0.45).orderBy("a_id", "b_id"))
       .foreach { df =>
         val plan = df.queryExecution.executedPlan.toString
         // the collect kernel plans a bare MapPartitions over a driver
@@ -242,17 +244,19 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("AQE re-plans a sort-merge join to broadcast from runtime stats") {
+    // planned as for a large input, on a session of its own
+    val s = largeInputSpark
     // static threshold 1 KB forces SMJ at plan time; the adaptive
     // threshold lets AQE convert once the runtime shuffle shows the
     // filtered orders side is tiny — the re-plan a 100 TB job relies on
     // when static estimates are wrong
-    val prevStatic = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevStatic = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
-      val o = Tables.load(spark, SF, "orders")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
+      val o = Tables.load(s, SF, "orders")
         .filter(col("o_orderdate") >= lit("2001-06-01"))
-      val j = Tables.load(spark, SF, "lineitem")
+      val j = Tables.load(s, SF, "lineitem")
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .agg(count(lit(1)).as("n"))
       val static = j.queryExecution.executedPlan.toString
@@ -262,8 +266,8 @@ class ScaleOpsSpec extends SparkTestBase {
       assert(finalPlan.contains("isFinalPlan=true") && finalPlan.contains("BroadcastHashJoin"),
         s"AQE did not convert to broadcast:\n$finalPlan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevStatic)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevStatic)
+      s.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 
@@ -326,6 +330,8 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {
+    // planned as for a large input, on a session of its own
+    val s = largeInputSpark
     // The non-partitioned sibling of DPP: when a shuffle join's build side
     // carries a selective predicate, Catalyst injects a bloom-filter
     // semi-filter on the probe side so fact rows that cannot match die at
@@ -333,32 +339,34 @@ class ScaleOpsSpec extends SparkTestBase {
     // difference between shuffling the whole fact table and shuffling the
     // ~matching fraction. The size thresholds are tuned for real clusters;
     // lower them to let the tiny fixture qualify.
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      val li = Tables.load(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-      val ord = Tables.load(spark, SF, "orders")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
+      val li = Tables.load(s, SF, "lineitem").select("l_orderkey", "l_quantity")
+      val ord = Tables.load(s, SF, "orders")
         .filter(col("o_totalprice") > 400000.0).select("o_orderkey")
       val j = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.toLowerCase.contains("bloom_filter"),
         s"expected an injected runtime bloom filter in:\n$plan")
       // the filter is a pure pruning hint: result must equal the plain join
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
       val expected = li.join(ord, col("l_orderkey") === col("o_orderkey")).count()
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       assert(j.count() == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
-      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      s.conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
+      s.conf.unset("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
+      s.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
     }
   }
 
   test("stop-shingle cap costs zero extra shuffles: ONE sh-exchange, no window, no join") {
+    // planned as for a large input, on a session of its own
+    val s = largeInputSpark
     import graft.operators.LlmTextOps
     // r16 aggregate-then-pair shape (LlmTextOps.pairInter): the cap is a
     // size filter on the collected posting list, so the whole pair kernel
@@ -368,8 +376,8 @@ class ScaleOpsSpec extends SparkTestBase {
     // both sides still ran the window pass); the new one needs exactly
     // one sh-exchange BY CONSTRUCTION, zero Window nodes, zero joins.
     for ((name, df) <- Seq(
-        "llm_ngram_jaccard" -> LlmTextOps.llmNgramJaccard(spark, SF),
-        "llm_containment" -> LlmTextOps.llmContainment(spark, SF))) {
+        "llm_ngram_jaccard" -> LlmTextOps.llmNgramJaccard(s, SF),
+        "llm_containment" -> LlmTextOps.llmContainment(s, SF))) {
       val plan = df.queryExecution.executedPlan.toString
       val shExchanges = plan.linesIterator.count(l =>
         l.contains("Exchange hashpartitioning(sh#"))

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.tables.VersionedTable
 
@@ -13,55 +11,42 @@ import graft.tables.VersionedTable
   * whatever the file count), and the parquet write job fills the entries
   * of the files it writes, which commit inside the manifest, so a
   * commit's one sidecar pass is its write job: append and compact run
-  * one job, delete adds one to find its touched files, merge two for its
-  * join. A count that rises means a job came back; a count that falls is
+  * one job, delete adds one to find its touched files. Merge's join runs
+  * inside its write job while the table fits in one task
+  * ([[graft.SmallPlanRule]]), and adds two shuffle jobs above that
+  * threshold. A count that rises means a job came back; a count that falls is
   * a gain to pin here. */
 class VersionedTableJobsSpec extends SparkTestBase {
-  import spark.implicits._
 
-  private val Prop = "graft.test.vtJobs"
-
-  /** Jobs started while `body` runs on this thread: a listener counts the
-    * jobs that carry this call's local property, so jobs of other threads
-    * never count. */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Prop) == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(Prop, tag)
-    try body
-    finally {
-      sc.setLocalProperty(Prop, null)
-      ListenerDrain(sc)
-      sc.removeSparkListener(l)
-    }
-    n.get
+  private def rows(s: SparkSession, ids: Range) = {
+    import s.implicits._
+    ids.map(i => (i.toLong, i * 10.0, s"n$i")).toDF("id", "score", "name")
   }
 
-  private def rows(ids: Range) =
-    ids.map(i => (i.toLong, i * 10.0, s"n$i")).toDF("id", "score", "name")
-
-  test("jobs per table operation: reads run one job, commits one sidecar pass") {
+  /** Jobs per operation, in order, on a 100-row table of 4 files created
+    * on session `s`, and the table. */
+  private def opJobs(s: SparkSession): (VersionedTable, Seq[(String, Int)]) = {
     val root = Files.createTempDirectory("graft_vt_jobs").resolve("t").toString
-    val t = VersionedTable.create(spark, root, rows(0 until 100).repartition(4),
+    val t = VersionedTable.create(s, root, rows(s, 0 until 100).repartition(4),
       statsCol = Some("score"), bloomCol = Some("id"))
-    val counts = Seq(
+    (t, Seq(
       "read" -> jobs(t.read().collect()),
       "readWhere" -> jobs(t.readWhere(0, 200).collect()),
       "readWhereEq" -> jobs(t.readWhereEq(7L).collect()),
-      "append" -> jobs(t.append(rows(100 until 120))),
+      "append" -> jobs(t.append(rows(s, 100 until 120))),
       "addedBetween" -> jobs(t.addedBetween(0, 1).collect()),
       "delete" -> jobs(t.delete(col("id") === 7)),
-      "merge" -> jobs(t.merge(rows(4 until 7).withColumn("name", lit("m")), "id")),
-      "compact" -> jobs(t.compact()))
+      "merge" -> jobs(t.merge(rows(s, 4 until 7).withColumn("name", lit("m")), "id")),
+      "compact" -> jobs(t.compact())))
+  }
+
+  test("jobs per table operation: reads run one job, commits one sidecar pass") {
+    val (t, counts) = opJobs(spark)
+    // merge's full-outer join fits in one task, so it runs in its write job
     assert(counts == Seq("read" -> 1, "readWhere" -> 1, "readWhereEq" -> 1,
-      "append" -> 1, "addedBetween" -> 1, "delete" -> 2, "merge" -> 3, "compact" -> 1),
+      "append" -> 1, "addedBetween" -> 1, "delete" -> 2, "merge" -> 1, "compact" -> 1),
       counts.mkString(", "))
+    val root = t.root
     // the counts are of real work: every commit published both kinds of
     // entries in its manifest and the table holds what the operations say
     val v = t.currentVersion
@@ -75,11 +60,20 @@ class VersionedTableJobsSpec extends SparkTestBase {
     assert(out.size == 119 && !out.contains(7L) && out(5L) == "m" && out(119L) == "n119")
   }
 
+  test("above the one-task threshold, merge runs its join's shuffle jobs") {
+    val (t, counts) = opJobs(largeInputSpark)
+    assert(counts == Seq("read" -> 1, "readWhere" -> 1, "readWhereEq" -> 1,
+      "append" -> 1, "addedBetween" -> 1, "delete" -> 2, "merge" -> 3, "compact" -> 1),
+      counts.mkString(", "))
+    val out = t.read().collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(out.size == 119 && !out.contains(7L) && out(5L) == "m" && out(119L) == "n119")
+  }
+
   test("a read over more than 32 files runs one job: Spark lists no files") {
     // 32 paths is where Spark's own file listing turns into a job
     // (spark.sql.sources.parallelPartitionDiscovery.threshold)
     val root = Files.createTempDirectory("graft_vt_jobs40").resolve("t").toString
-    val t = VersionedTable.create(spark, root, rows(0 until 400).repartition(40),
+    val t = VersionedTable.create(spark, root, rows(spark, 0 until 400).repartition(40),
       statsCol = Some("score"), bloomCol = Some("id"))
     assert(t.read().inputFiles.length == 40)
     val counts = Seq(

@@ -302,4 +302,17 @@ class VersionedTableSidecarSpec extends SparkTestBase {
     assert(listed.size == kept.size, listed.mkString(", ")) // one manifest per version
     assert(t.readWhereEq(5L).count() == 1)
   }
+
+  test("an IN of 50 keys keeps exactly the union of the files the single-key probes keep") {
+    import spark.implicits._
+    val t = VersionedTable.create(spark, freshRoot(),
+      (0L until 400L).map(i => (i, s"n$i")).toDF("id", "name").repartition(40), bloomCol = Some("id"))
+    // 40 present keys and 10 absent ones, which only a false positive keeps a file for
+    val keys = (0L until 400L by 10L) ++ (10000L until 10010L)
+    val union = keys.flatMap(k => t.pruneFilesEq(k)).toSet
+    assert(union.nonEmpty && union.size < 40, union.size)
+    val df = t.read().filter(col("id").isin(keys: _*))
+    assert(df.collect().map(_.getLong(0)).toSet == (0L until 400L by 10L).toSet)
+    assert(VersionedTable.filesScanned(df) == union.size)
+  }
 }
