@@ -23,6 +23,9 @@ import org.apache.spark.sql.internal.SQLConf
   *    statistics (Spark estimates it at `Long.MaxValue`): no large input
   *    is ever funnelled into one task;
   *  - a streaming plan;
+  *  - a plan that is one scan chain: it plans no exchange, so one task
+  *    would only read its files one after another (and a local
+  *    relation's collect, which runs no job, would run one);
   *  - a chain directly under an explicit `Repartition`,
   *    `RepartitionByExpression` or `RebalancePartitions`: it states a
   *    layout, and its shuffle runs anyway. A wrapped chain sits under
@@ -35,7 +38,7 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object SmallPlanRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (plan.isStreaming || plan.collectLeaves().map(_.stats.sizeInBytes).sum >
+    if (plan.isStreaming || chain(plan) || plan.collectLeaves().map(_.stats.sizeInBytes).sum >
         conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) plan
     else wrap(plan)
 
@@ -51,7 +54,6 @@ object SmallPlanRule extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def wrap(p: LogicalPlan): LogicalPlan =
-    if (chain(p)) Repartition(1, shuffle = false, p)
-    else p.withNewChildren(p.children.map(c => if (chain(c) && statesLayout(p)) c else wrap(c)))
+  private def wrap(p: LogicalPlan): LogicalPlan = p.withNewChildren(p.children.map(c =>
+    if (!chain(c)) wrap(c) else if (statesLayout(p)) c else Repartition(1, shuffle = false, c)))
 }

@@ -36,7 +36,8 @@ private[tables] final class ManifestIndex(spark: SparkSession, private val files
   /** Each file's bloom, decoded and deserialized once per index, when a
     * filter first probes one; aligned with `files`. */
   private lazy val blooms: IndexedSeq[Option[BloomFilter]] =
-    files.map(_.bloom.map(b => BloomBridge.readDriver(java.util.Base64.getDecoder.decode(b)))).toIndexedSeq
+    files.map(_.bloom.map(b => BloomBridge.readDriver(java.util.Base64.getDecoder.decode(b))))
+      .toIndexedSeq
 
   /** The files whose entries rule out none of `filters`. */
   def prune(filters: Seq[Expression]): Seq[Written] =
@@ -75,7 +76,8 @@ private[tables] final class ManifestIndex(spark: SparkSession, private val files
   private def absent(i: Int, f: Expression): Boolean = f match {
     case OneOf(c: Attribute, ks) if bloomCol.contains(c.name) && c.dataType == LongType &&
         ks.forall(_.isInstanceOf[java.lang.Long]) =>
-      blooms(i).exists(bf => !ks.exists(k => BloomBridge.mightContainDriver(bf, k.asInstanceOf[java.lang.Long])))
+      blooms(i).exists(bf =>
+        !ks.exists(k => BloomBridge.mightContainDriver(bf, k.asInstanceOf[java.lang.Long])))
     case _ => false
   }
 

@@ -42,7 +42,8 @@ object InternalRows {
     * are published when it ends, and a plan without a shuffle stage (all
     * of a small one, see graft.SmallPlanRule) has read no row until a
     * job runs over its RDD. Returns the RDD and the first pass's result. */
-  def toRddTracked[T](df: DataFrame, name: String)(firstPass: RDD[InternalRow] => T): (RDD[InternalRow], T) = {
+  def toRddTracked[T](df: DataFrame, name: String)
+                     (firstPass: RDD[InternalRow] => T): (RDD[InternalRow], T) = {
     val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
       qe.executedPlan.resetMetrics()

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** What [[SmallPlanRule]] does: a plan whose leaves fit in one task
   * plans no shuffle and runs as one job; a plan above the threshold, an
-  * explicit repartition and a streaming plan keep their exchanges. */
+  * explicit repartition and a streaming plan keep their exchanges, and a
+  * plan that is one scan chain is left as it is. */
 class SmallPlanRuleSpec extends SparkTestBase {
 
   private val keys = Seq("agg_groupby_q1", "win_rank_dense")
@@ -52,6 +53,14 @@ class SmallPlanRuleSpec extends SparkTestBase {
     assert(df.rdd.getNumPartitions == 8)
   }
 
+  test("a plan that is one scan chain is left alone") {
+    import spark.implicits._
+    val scan = Tables.load(spark, SF, "customer").filter(col("c_acctbal") > 0).select("c_custkey")
+    assert(wraps(scan) == 0, scan.queryExecution.optimizedPlan.toString)
+    val local = Seq(1L, 2L, 3L).toDF("x").filter(col("x") > 1)
+    assert(wraps(local) == 0 && jobs(local.collect()) == 0)
+  }
+
   test("a streaming query's micro-batch plan is untouched") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -82,6 +91,7 @@ class SmallPlanRuleSpec extends SparkTestBase {
 
   test("RedundantRoundRule and the as-of strategy still fire in a below-threshold plan") {
     val df = Tables.load(spark, SF, "customer").select(round(round(col("c_acctbal") / 3.0, 2), 4).as("x"))
+      .orderBy("x")
     assert(wraps(df) == 1)
     assert("round\\(".r.findAllIn(df.queryExecution.optimizedPlan.toString.toLowerCase).length == 1,
       df.queryExecution.optimizedPlan.toString)

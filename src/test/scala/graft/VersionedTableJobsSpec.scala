@@ -46,12 +46,11 @@ class VersionedTableJobsSpec extends SparkTestBase {
     assert(counts == Seq("read" -> 1, "readWhere" -> 1, "readWhereEq" -> 1,
       "append" -> 1, "addedBetween" -> 1, "delete" -> 2, "merge" -> 1, "compact" -> 1),
       counts.mkString(", "))
-    val root = t.root
     // the counts are of real work: every commit published both kinds of
     // entries in its manifest and the table holds what the operations say
     val v = t.currentVersion
     assert(v == 4)
-    val head = new String(Files.readAllBytes(Paths.get(root, "_manifests", f"v$v%08d.json")), "UTF-8")
+    val head = new String(Files.readAllBytes(Paths.get(t.root, "_manifests", f"v$v%08d.json")), "UTF-8")
     for (field <- Seq("\"statsCol\":\"score\"", "\"mins\":[", "\"maxs\":[",
         "\"bloomCol\":\"id\"", "\"blooms\":[\""))
       assert(head.contains(field), field)
