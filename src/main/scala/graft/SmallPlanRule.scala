@@ -21,7 +21,11 @@ import org.apache.spark.sql.internal.SQLConf
   * Left alone, decided only by what the plan shows:
   *  - a plan above the threshold, which includes any leaf without
   *    statistics (Spark estimates it at `Long.MaxValue`): no large input
-  *    is ever funnelled into one task;
+  *    is ever funnelled into one task. The leaves of the plans inside
+  *    subquery expressions count too: `RewritePredicateSubquery` runs
+  *    after this rule and turns an `IN`/`EXISTS` filter of a wrapped
+  *    chain into a semi or anti join below the wrap, so a large
+  *    subquery input would otherwise be joined in one task;
   *  - a streaming plan;
   *  - a plan that is one scan chain: it plans no exchange, so one task
   *    would only read its files one after another (and a local
@@ -38,7 +42,8 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object SmallPlanRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (plan.isStreaming || chain(plan) || plan.collectLeaves().map(_.stats.sizeInBytes).sum >
+    if (plan.isStreaming || chain(plan) ||
+        plan.collectWithSubqueries { case l if l.children.isEmpty => l.stats.sizeInBytes }.sum >
         conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) plan
     else wrap(plan)
 

@@ -41,6 +41,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * PARTITION — bounded by the cluster's partition count, never the data
   * grain — and the sort itself is the same parallel range sort a global
   * `orderBy` costs anywhere else.
+  *
+  * Below [[graft.SmallPlanRule]]'s threshold the pinned plan has no
+  * shuffle: the sort is one SortExec over a one-partition coalesce, with
+  * no range sampling and no shuffle files to reuse. Each pass (totals,
+  * output, a chained downstream call) then recomputes the whole upstream
+  * plan — scan, kernels and sort — in its one task. Results are the same:
+  * one partition reads its files in a fixed order. The inputs that take
+  * this path fit in one task, so the repeat is bounded by that size.
   */
 object ScalePrimitives {
 
@@ -80,7 +88,8 @@ object ScalePrimitives {
         s"distRunning sums LongType columns only; ${df.schema(i).name} is ${df.schema(i).dataType}")
     }
     val sorted = df.orderBy(ord: _*)
-    // planned ONCE (see object doc) under a TRACKED execution id that
+    // planned ONCE (see object doc; a small input's plan has no shuffle,
+    // so each pass recomputes it) under a TRACKED execution id that
     // pass 1 runs inside — the Dataset.rdd parity that keeps
     // observe()/Observation working on plans upstream of the pin
     // (InternalRows.toRddTracked scaladoc)
@@ -212,7 +221,8 @@ object ScalePrimitives {
         s"distRunningBy double sums DoubleType columns only; ${df.schema(i).name} is ${df.schema(i).dataType}")
     }
     val sorted = df.orderBy((col(grp) +: ord): _*)
-    // planned ONCE (see object doc) under a TRACKED execution id that
+    // planned ONCE (see object doc; a small input's plan has no shuffle,
+    // so each pass recomputes it) under a TRACKED execution id that
     // pass 1 runs inside — see [[distRunningWithCount]] /
     // InternalRows.toRddTracked
     val (locG, locL, locD, locT) = (gIdx, lIdx, dIdx, gType)

@@ -8,9 +8,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** What [[SmallPlanRule]] does: a plan whose leaves fit in one task
-  * plans no shuffle and runs as one job; a plan above the threshold, an
-  * explicit repartition and a streaming plan keep their exchanges, and a
-  * plan that is one scan chain is left as it is. */
+  * plans no shuffle and runs as one job; a plan above the threshold, a
+  * small plan over a large subquery input, an explicit repartition and a
+  * streaming plan keep their exchanges, and a plan that is one scan chain
+  * is left as it is. */
 class SmallPlanRuleSpec extends SparkTestBase {
 
   private val keys = Seq("agg_groupby_q1", "win_rank_dense")
@@ -45,6 +46,20 @@ class SmallPlanRuleSpec extends SparkTestBase {
       assert(jobs(large.collect()) > 1, name)
       assert(large.collect().toSeq == small.collect().toSeq, s"$name: rows differ across the threshold")
     }
+  }
+
+  test("a small plan over a large subquery input keeps its exchanges") {
+    // customer (7 KB) fits under this threshold, orders (37 KB) does not;
+    // with broadcasts off the EXISTS becomes a sort-merge semi join, which
+    // must not run below a one-task coalesce
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val df = key(s, "sub_exists_corr")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(wraps(df) == 0, df.queryExecution.optimizedPlan.toString)
+    assert(plan.contains("LeftSemi") && !plan.contains("Coalesce") && exchanges(df).nonEmpty, plan)
+    assert(df.collect().toSeq == key(spark, "sub_exists_corr").collect().toSeq)
   }
 
   test("an explicit repartition over a small input keeps its exchange") {
