@@ -30,7 +30,11 @@ object Tables {
     * footer reads per full run. A DataFrame is an immutable logical plan,
     * so the resolved frame is reusable verbatim; this caches the PLAN,
     * never data or results (every execution still scans parquet). Keyed
-    * by session uuid so a fresh session (new confs) re-resolves.
+    * by session uuid so a fresh session (new confs) re-resolves, and by
+    * the table's [[graft.tables.CorpusStamp.fingerprint]] so a table
+    * rewritten in place re-resolves too: a plan keeps the file sizes it
+    * listed, and scanning a grown file with the old size drops the row
+    * groups past it (a retrain would seal an artifact of zero rows).
     *
     * r16 (ADVICE): bounded by [[graft.tools.LruMemo]] — one cold entry
     * evicted per insert past capacity — instead of the previous
@@ -40,12 +44,15 @@ object Tables {
     * plans (no blocks to release), so no eviction hook is needed; dead
     * sessions' entries age out LRU. */
   private val planMemo =
-    new graft.tools.LruMemo[(String, String, String), DataFrame](512)
+    new graft.tools.LruMemo[(String, String, String, String), DataFrame](512)
 
   /** Load one table as a DataFrame, applying per-table normalization. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val sid = org.apache.spark.sql.graftnative.SessionIds.uuid(spark)
-    planMemo.getAs("tables_plan", (sid, sfDir, name))(loadRaw(spark, sfDir, name))
+    // a path the stamp cannot walk (absent, or not on the local file
+    // system) keys as "" and fails or resolves in Spark's reader as before
+    val fp = scala.util.Try(graft.tables.CorpusStamp.fingerprint(sfDir, name)).getOrElse("")
+    planMemo.getAs("tables_plan", (sid, sfDir, name, fp))(loadRaw(spark, sfDir, name))
   }
 
   private def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {

@@ -23,7 +23,7 @@ object TempDirs {
     * shutdown hook's loop and leak every remaining directory and (b) in
     * cached()'s failure path mask the original write error with a
     * cleanup error. */
-  private[graft] def rmTree(p: Path): Unit =
+  private def rmTree(p: Path): Unit =
     try if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(Comparator.reverseOrder[Path]())

@@ -321,49 +321,25 @@ object GeoOps {
   /** Build-if-absent PERSISTED geo layout: customer points plus a
     * single-dimension cell id (`(latc+5)·20 + (lonc+10)` ∈ [0,200) —
     * row-major over the grid, so one latitude strip of the 3×3
-    * neighborhood is one CONTIGUOUS cell range), committed as a
-    * `graft-vt` versioned table and range-clustered on the cell id
-    * (`optimizeLayout`) with per-file min/max stats on it. This is the
-    * geo analogue of the persisted IVF index: the layout is paid once,
+    * neighborhood is one CONTIGUOUS cell range), range-clustered on the
+    * cell id into 8 files and committed as a `graft-vt` versioned table
+    * with per-file min/max stats on it, in ONE commit. This is the geo
+    * analogue of the persisted IVF index: the layout is paid once,
     * committed like data, and every region query after that prunes at
-    * the FILE level before any row is read. Crash posture: the v0
-    * manifest is the build predicate (its stats entries commit with it)
-    * and the v1 cluster commit is resumed if absent; a source table
-    * mutated in place (stale CorpusStamp) wipes and rebuilds the layout
-    * — safe because the whole table is a DERIVED index over
-    * re-derivable points, never source data. The whole check-build
-    * section is synchronized on this object: within
-    * one JVM (the cache root's lifetime) concurrent first-serves
-    * serialize instead of racing VersionedTable.create's
-    * single-attempt v0 commit (whose loser would THROW, not retry) or
-    * reading files mid-wipe; cross-process coordination is the durable
-    * deployment's problem, which PortableQuantizer.indexRootAt's
-    * idempotent-txn pattern shows how to solve. */
-  private[graft] def geoTable(s: SparkSession, d: String): graft.tables.VersionedTable =
-    GeoOps.synchronized {
-      val base = graft.TempDirs.cached("vtgeo", d) { _ => () }
-      val root = base + "/t"
-      val fp = graft.tables.CorpusStamp.fingerprint(d, "customer")
-      def build(): graft.tables.VersionedTable = {
-        val pts = points(t(s, d, "customer"), "c_custkey")
-          .withColumn("cell", (col("latc") + 5L) * 20L + (col("lonc") + 10L))
-        val vt = graft.tables.VersionedTable.create(s, root, pts, statsCol = Some("cell"))
-        graft.tables.CorpusStamp.write(root, fp)
-        vt
-      }
-      val v0 = java.nio.file.Paths.get(root, "_manifests", "v00000000.json")
-      var vt =
-        if (!java.nio.file.Files.exists(v0)) build()
-        else graft.tables.VersionedTable.open(s, root)
-      if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-        // a source table mutated in place under the same path: derived
-        // data — wipe and rebuild rather than serve a stale layout
-        graft.TempDirs.rmTree(java.nio.file.Paths.get(root))
-        vt = build()
-      }
-      if (vt.currentVersion < 1) vt.optimizeLayout("cell", 8)
-      vt
+    * the FILE level before any row is read. Build, seal and staleness go
+    * through [[graft.tables.CorpusStamp.persist]] like every persisted
+    * artifact: a customer table mutated in place re-versions the layout
+    * (same stats column), and concurrent first serves build once. */
+  private[graft] def geoTable(s: SparkSession, d: String): graft.tables.VersionedTable = {
+    val root = graft.tables.CorpusStamp.persist(s,
+        graft.TempDirs.cached("vtgeo", d)(_ => ()) + "/t",
+        graft.tables.CorpusStamp.fingerprint(d, "customer"), statsCol = Some("cell")) {
+      points(t(s, d, "customer"), "c_custkey")
+        .withColumn("cell", (col("latc") + 5L) * 20L + (col("lonc") + 10L))
+        .repartitionByRange(8, col("cell"))
     }
+    graft.tables.VersionedTable.open(s, root)
+  }
 
   /** geo_bbox_persisted: a region query SERVED from the persisted
     * cell-clustered layout — the operational posture a 100 TB geo table

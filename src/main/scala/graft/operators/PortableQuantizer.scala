@@ -131,12 +131,11 @@ object PortableQuantizer {
     * index serve path (ann_ivf_persisted) never retrains. */
   private[graft] val trainRuns = new java.util.concurrent.atomic.AtomicLong
 
-  /** Persist the trained ANN index into a `graft-vt` versioned table:
-    * v0 = the IVF coarse codebook, v1 = + the PQ codebooks. Schema
-    * (kind, m, k, vals): ("ivf", 0, bucket, centroid) and
-    * ("pq", subspace, code, centroid) — one table, so `asOf(0)`
-    * time-travels to the IVF-only index and the latest version serves
-    * both.
+  /** Persist the trained ANN index into a `graft-vt` versioned table in
+    * ONE commit carrying the IVF coarse codebook and the PQ codebooks.
+    * Schema (kind, m, k, vals): ("ivf", 0, bucket, centroid) and
+    * ("pq", subspace, code, centroid) — one table, so every version is a
+    * whole index and a stale corpus re-versions it whole.
     *
     * Durability is the ROOT's durability: under the graded harness the
     * root is a per-JVM temp dir (fixture hygiene — nothing may outlive a
@@ -152,73 +151,23 @@ object PortableQuantizer {
     indexRootAt(s, d, base)
   }
 
-  /** Build-if-absent bootstrap of the persisted index at an explicit
-    * `base` directory. Completeness is judged by the version history:
-    * no manifest → full build; only v0 (a crash between the two commits)
-    * → append the PQ batch; v1 present → pure open, no training jobs.
-    * Race posture: concurrent creators collide on the atomic-exclusive
-    * v0 commit (one wins, the other fails loudly); concurrent PQ
-    * completions share one idempotent txn (one commits, the other
-    * no-ops). Neither interleaving can duplicate or corrupt the index. */
+  /** Build-if-absent-or-stale bootstrap of the persisted index at an
+    * explicit `base` directory, through
+    * [[graft.tables.CorpusStamp.persist]]: no committed version → train
+    * and commit the whole index as v0; a stale corpus → retrain both
+    * codebooks (the trainer memos are fingerprint-keyed) and re-version
+    * the whole index in one commit; otherwise a pure open with no
+    * training jobs. Concurrent first serves in one JVM build once. */
   def indexRootAt(s: SparkSession, d: String, base: String): String = {
-    val root = base + "/t"
     import s.implicits._
-    val fp = graft.tables.CorpusStamp.fingerprint(d, "embeddings")
-    def ivfDf = ivfCentroids(s, d).zipWithIndex
-      .map { case (c, b) => ("ivf", 0, b, c) }.toDF("kind", "m", "k", "vals")
-    def pqDf = pqCodebook(s, d).zipWithIndex.flatMap { case (sub, m) =>
-      sub.zipWithIndex.map { case (c, code) => ("pq", m, code, c) }
-    }.toDF("kind", "m", "k", "vals")
-    // the PQ-completion txn id is FINGERPRINT-scoped: after a staleness
-    // overwrite the fresh PQ batch must commit (new id) while replays of
-    // the same corpus state still no-op (same id)
-    val pqTxn = s"ann-index:pq:$fp"
-    // "absent" = no COMMITTED v0 manifest, not a bare directory test:
-    // VersionedTable.create makes _manifests before the v0 commit lands,
-    // so a crashed first build leaves the directory behind — checking it
-    // would wedge the root forever (open succeeds, versions is empty).
-    // The v0 manifest file IS the commit point, so its existence is the
-    // correct resume predicate; racing creators still collide on the
-    // atomic-exclusive v0 link and fail loudly.
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "_manifests", "v00000000.json"))) {
-      graft.tables.VersionedTable.create(s, root, ivfDf)
-      graft.tables.CorpusStamp.write(root, fp)
+    graft.tables.CorpusStamp.persist(s, base + "/t",
+        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
+      val ivf = ivfCentroids(s, d).zipWithIndex.map { case (c, b) => ("ivf", 0, b, c) }
+      val pq = pqCodebook(s, d).zipWithIndex.flatMap { case (sub, m) =>
+        sub.zipWithIndex.map { case (c, code) => ("pq", m, code, c) }
+      }
+      (ivf ++ pq).toDF("kind", "m", "k", "vals")
     }
-    val t = graft.tables.VersionedTable.open(s, root)
-    if (!graft.tables.CorpusStamp.isFresh(root, fp)) {
-      // corpus mutated in place at the same path (CorpusStamp): retrain
-      // both codebooks (the trainer memos are fp-keyed) and RE-VERSION
-      // the index in ONE commit carrying IVF and PQ together. It must be
-      // one commit, not overwrite(ivf)+appendIdempotent(pq): committed
-      // txn ids survive overwrites (by design — that is what keeps
-      // appends exactly-once across vacuums), so a crash-retry of this
-      // branch, a corpus REVERT to a fingerprint whose pq txn already
-      // committed, or a racing stale bootstrapper would find the pq txn
-      // consumed, no-op the append, and seal a PQ-less index forever.
-      t.overwrite(ivfDf.unionByName(pqDf))
-      graft.tables.CorpusStamp.write(root, fp)
-    } else if (!t.committedTxns.contains(pqTxn)) {
-      // A missing txn does NOT imply a missing PQ batch: the stale
-      // retrain above commits the FULL index without consuming the txn
-      // (deliberately — see that branch), so check the snapshot before
-      // completing. A genuinely PQ-less snapshot (the create-crash
-      // window) gets the batch via the idempotent append — two
-      // bootstrappers both inside that window would otherwise BOTH
-      // succeed (append rebases through the version conflict) and
-      // double every PQ row; the fixed txn id makes the loser a no-op,
-      // the same exactly-once machinery the streaming sink rides. A
-      // complete snapshot just RECORDS the txn with an empty idempotent
-      // append (schema-only frame — built without touching the
-      // trainers) so later serves take the metadata fast path again.
-      val hasPq = t.read().filter(col("kind") === "pq").limit(1).count() > 0
-      if (hasPq)
-        t.appendIdempotent(
-          Seq.empty[(String, Int, Int, Seq[Long])].toDF("kind", "m", "k", "vals"), pqTxn)
-      else t.appendIdempotent(pqDf, pqTxn)
-      ()
-    }
-    root
   }
 
   /** The IVF codebook read back from the persisted index — a bounded

@@ -50,7 +50,7 @@ object CorpusStamp {
 
   /** Does the artifact at `tableRoot` carry this fingerprint? An absent
     * stamp reads as stale (pre-stamp artifacts retrain once, then seal). */
-  def isFresh(tableRoot: String, fp: String): Boolean =
+  private def isFresh(tableRoot: String, fp: String): Boolean =
     Files.exists(stampPath(tableRoot)) &&
       new String(Files.readAllBytes(stampPath(tableRoot)), "UTF-8") == fp
 
@@ -58,7 +58,7 @@ object CorpusStamp {
     * AFTER the retrained commit lands: a crash in between leaves an
     * unsealed (stale-reading) artifact that the next serve re-derives —
     * an extra version, never a stale serve. */
-  def write(tableRoot: String, fp: String): Unit = {
+  private def write(tableRoot: String, fp: String): Unit = {
     // sweep aged .fp-*.tmp orphans first (a crash between createTempFile
     // and the atomic move leaves one; vacuum never walks the root) —
     // same 10-minute age gate as VersionedTable.open's commit-tmp sweep,
@@ -83,23 +83,28 @@ object CorpusStamp {
 
   /** The build-if-absent-or-stale path of a persisted artifact, a
     * `graft-vt` table at `tableRoot` derived from the corpus state `fp`:
-    * with no committed v0 manifest, `create` it from `frame`; with a
-    * stamp other than `fp`, RE-VERSION it (`overwrite` with `frame`, so
-    * the history records the retrain); then seal `fp`. An artifact that
-    * is present and fresh evaluates nothing. Returns `tableRoot`.
+    * with no committed v0 manifest, `create` it from `frame` (with
+    * `statsCol`'s per-file min/max entries, if given); with a stamp other
+    * than `fp`, RE-VERSION it (`overwrite` with `frame`, which keeps the
+    * table's stats column, so the history records the retrain); then seal
+    * `fp`. Each build is ONE commit, so no version ever holds half an
+    * artifact. An artifact that is present and fresh evaluates nothing.
+    * Returns `tableRoot`. Every persisted artifact (tokenizers, the
+    * substring index, the ANN index, the geo layout) goes through here.
     *
     * "Absent" is the committed v0 manifest, not the directory: `create`
     * makes `_manifests` before its v0 commit lands, so a crashed first
     * build must not wedge the root. Check and build run under one lock
     * per root, so concurrent first serves in one JVM build once and
     * both return the one version; unserialized, both miss the v0 check
-    * and the loser's `create` throws. Cross-process coordination is the
-    * durable deployment's problem, which PortableQuantizer.indexRootAt's
-    * idempotent-txn pattern shows how to solve. */
-  def persist(s: SparkSession, tableRoot: String, fp: String)(frame: => DataFrame): String =
+    * and the loser's `create` throws. Two PROCESSES sharing a durable
+    * root still race the v0 commit: the loser throws and a retry serves
+    * the winner's version, never a half-built one. */
+  def persist(s: SparkSession, tableRoot: String, fp: String,
+              statsCol: Option[String] = None)(frame: => DataFrame): String =
     rootLocks.computeIfAbsent(tableRoot, _ => new AnyRef).synchronized {
       if (!Files.exists(Paths.get(tableRoot, "_manifests", "v00000000.json"))) {
-        VersionedTable.create(s, tableRoot, frame)
+        VersionedTable.create(s, tableRoot, frame, statsCol)
         write(tableRoot, fp)
       } else if (!isFresh(tableRoot, fp)) {
         VersionedTable.open(s, tableRoot).overwrite(frame)

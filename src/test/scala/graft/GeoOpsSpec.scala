@@ -177,6 +177,33 @@ class GeoOpsSpec extends SparkTestBase {
       "repeat serve re-built the layout")
   }
 
+  test("geo layout: an in-place customer mutation re-versions it, stats kept") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    // a WRITABLE copy of the corpus, so it can be mutated at the same path
+    val dir = Files.createTempDirectory("graft_geofp").toString
+    Files.copy(Paths.get(SF, "customer.parquet"), Paths.get(dir, "customer.parquet"))
+    val before = GeoOps.geoTable(spark, dir).versions
+    Files.copy(Paths.get("/root/testdata/sf0.01", "customer.parquet"),
+      Paths.get(dir, "customer.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val vt = GeoOps.geoTable(spark, dir)
+    assert(vt.versions == before :+ (before.last + 1),
+      s"the stale layout must gain exactly one version: $before -> ${vt.versions}")
+    assert(vt.statsCol == Some("cell"))
+    val cells = vt.readWhere(132.0, 135.0).unionAll(vt.readWhere(152.0, 155.0))
+    cells.collect()
+    assert(graft.tables.VersionedTable.filesScanned(cells) < vt.read().inputFiles.length,
+      "the re-versioned layout must still skip files")
+    val served = GeoOps.geoBboxPersisted(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    val direct = GeoOps.points(spark.read.parquet(s"$dir/customer.parquet"), "c_custkey")
+      .filter(col("lat") >= 1.0 && col("lat") < 3.0 &&
+        col("lon") >= 2.0 && col("lon") < 6.0)
+      .select("k", "lat", "lon").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(served.nonEmpty && served == direct,
+      "the re-versioned layout must serve the mutated corpus")
+  }
+
   test("plan shapes: radius join shuffles on cell keys, hub assign plans NO join at all") {
     // the BUILD plan (the served radiusPairs frame is checkpoint-memoized,
     // so the graded key's plan is a checkpoint scan — assert the builder)

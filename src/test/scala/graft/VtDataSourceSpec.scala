@@ -215,17 +215,15 @@ class VtDataSourceSpec extends SparkTestBase {
     val direct = LlmTextOps.annIvfTopk(spark, SF).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs == direct && pairs.nonEmpty)
-    // time travel: v0 is the IVF-only index, the current version adds PQ
+    // time travel: v0 is the whole index, IVF and PQ in one commit
     val v0 = spark.read.format("graft-vt").option("path", root)
       .option("asOf", "0").load()
-    assert(v0.filter(col("kind") === "pq").count() == 0)
     assert(v0.filter(col("kind") === "ivf").count() == trained.size)
-    val v1 = spark.read.format("graft-vt").option("path", root).load()
-    assert(v1.filter(col("kind") === "pq").count() ==
+    assert(v0.filter(col("kind") === "pq").count() ==
       trainedPq.map(_.size).sum)
     // restart-equivalence: bootstrap against an ALREADY-COMMITTED durable
     // root (what a restarted process does) is a pure open — the
-    // build-if-absent check must see v1 and run zero training jobs
+    // build-if-absent check must see v0 and run zero training jobs
     val before2 = PortableQuantizer.trainRuns.get()
     val again = PortableQuantizer.indexRootAt(s2, SF,
       root.stripSuffix("/t"))
@@ -268,20 +266,45 @@ class VtDataSourceSpec extends SparkTestBase {
     assert(WordPieceOps.wordpieceTrainRuns.get() == before + 2)
   }
 
+  test("corpus stamp: Tables.load re-resolves a table rewritten in place") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_fpload").toString
+    Files.copy(Paths.get(SF, "customer.parquet"), Paths.get(dir, "customer.parquet"))
+    assert(Tables.load(spark, dir, "customer").count() ==
+      spark.read.parquet(s"$SF/customer.parquet").count())
+    // a LARGER file at the same path: a plan that kept the old listing
+    // would read none of its row groups
+    Files.copy(Paths.get("/root/testdata/sf0.01", "customer.parquet"),
+      Paths.get(dir, "customer.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.load(spark, dir, "customer").count() ==
+      spark.read.parquet("/root/testdata/sf0.01/customer.parquet").count())
+  }
+
   test("persisted artifact: concurrent first serves of a fresh corpus build once, one root, one version") {
-    import graft.operators.LlmTextOps
+    import graft.operators.{GeoOps, LlmTextOps, PortableQuantizer, UnigramOps, WordPieceOps}
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_fpfirst").toString
-    Files.copy(Paths.get(SF, "documents.parquet"), Paths.get(dir, "documents.parquet"))
-    // both threads reach the build-if-absent check together
-    val gate = new java.util.concurrent.CyclicBarrier(2)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val roots = try (0 until 2).map(_ => pool.submit(new java.util.concurrent.Callable[String] {
-        def call(): String = { gate.await(); LlmTextOps.bpeIndexRoot(spark, dir) }
-      })).map(_.get())
-    finally pool.shutdown()
-    assert(roots.distinct.size == 1, roots.mkString(", "))
-    assert(VersionedTable.open(spark, roots.head).versions == Seq(0))
+    // every persisted root: (name, corpus table it derives from, serve)
+    val rows: Seq[(String, String, String => String)] = Seq(
+      ("bpe", "documents", LlmTextOps.bpeIndexRoot(spark, _)),
+      ("substring", "documents", LlmTextOps.substringIndexRoot(spark, _)),
+      ("unigram", "documents", UnigramOps.unigramIndexRoot(spark, _)),
+      ("wordpiece", "documents", WordPieceOps.wordpieceIndexRoot(spark, _)),
+      ("geo", "customer", GeoOps.geoTable(spark, _).root),
+      ("ann", "embeddings", { dir =>
+        PortableQuantizer.indexRootAt(spark, dir, Paths.get(dir, "ann").toString) }))
+    for ((name, table, serve) <- rows) {
+      val dir = Files.createTempDirectory("graft_fpfirst").toString
+      Files.copy(Paths.get(SF, s"$table.parquet"), Paths.get(dir, s"$table.parquet"))
+      // both threads reach the build-if-absent check together
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val roots = try (0 until 2).map(_ => pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = { gate.await(); serve(dir) }
+        })).map(_.get())
+      finally pool.shutdown()
+      assert(roots.distinct.size == 1, s"$name: ${roots.mkString(", ")}")
+      assert(VersionedTable.open(spark, roots.head).versions == Seq(0), name)
+    }
   }
 
   test("persisted substring known-hash index: cross-session serve with ZERO rebuilds, identical profile") {
@@ -333,7 +356,7 @@ class VtDataSourceSpec extends SparkTestBase {
     assert(LlmTextOps.substringIndexBuilds.get() == before + 2)
   }
 
-  test("stale retrain: one atomic IVF+PQ commit; completion records, never duplicates") {
+  test("stale ANN retrain: one IVF+PQ commit, later serves add none") {
     import graft.operators.PortableQuantizer
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val dir = Files.createTempDirectory("graft_annfp").toString
@@ -344,11 +367,8 @@ class VtDataSourceSpec extends SparkTestBase {
     val vFull = t0.currentVersion
     val nPq = t0.read().filter(col("kind") === "pq").count()
     assert(nPq > 0)
-    // mutate the corpus IN PLACE → fpB, whose pq txn has never committed.
-    // The retrain must land IVF+PQ in ONE commit: an overwrite+append
-    // pair would no-op the append whenever the txn pre-exists (crash
-    // retry, corpus revert, racing bootstrapper) and seal a PQ-less
-    // index forever — the round-14 review finding.
+    // mutate the corpus IN PLACE → fpB: the retrain must land IVF+PQ in
+    // ONE commit, so no version ever serves a PQ-less index
     Files.copy(Paths.get("/root/testdata/sf0.01", "embeddings.parquet"),
       Paths.get(dir, "embeddings.parquet"), StandardCopyOption.REPLACE_EXISTING)
     PortableQuantizer.indexRootAt(spark, dir, base)
@@ -356,46 +376,27 @@ class VtDataSourceSpec extends SparkTestBase {
     assert(t1.currentVersion == vFull + 1, "retrain must be ONE commit")
     assert(t1.read().filter(col("kind") === "pq").count() == nPq,
       "retrained snapshot must carry the FULL index atomically")
-    // fpB's txn is unrecorded: the next serve sees a COMPLETE snapshot,
-    // records the txn with an empty idempotent append (one version,
-    // zero trainer touches), and must NOT duplicate the PQ batch...
+    // the re-sealed index is fresh: the next serve adds no version and
+    // no rows, so the PQ batch is never duplicated
+    val nRows = t1.read().count()
     PortableQuantizer.indexRootAt(spark, dir, base)
     val t2 = VersionedTable.open(spark, root)
+    assert(t2.currentVersion == vFull + 1, "a fresh serve added a version")
     assert(t2.read().filter(col("kind") === "pq").count() == nPq, "PQ batch duplicated")
-    assert(t2.currentVersion == vFull + 2, "txn recording is one empty append")
-    // ...after which serves are pure metadata: no new versions
-    PortableQuantizer.indexRootAt(spark, dir, base)
-    assert(VersionedTable.open(spark, root).currentVersion == vFull + 2)
+    assert(t2.read().count() == nRows)
   }
 
-  test("index bootstrap recovers a crashed create and completes a v0-only root") {
+  test("ANN index bootstrap recovers a crashed create at version 0") {
     import graft.operators.PortableQuantizer
-    import spark.implicits._
     // crashed first build: _manifests directory exists, but NO committed
     // version — the resume predicate must rebuild, not wedge on open
     val base = java.nio.file.Files.createTempDirectory("graft_annboot").toString
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(base, "t", "_manifests"))
     val root = PortableQuantizer.indexRootAt(spark, SF, base)
-    assert(VersionedTable.open(spark, root).currentVersion == 1)
-    // crash between the two commits: a v0-only (IVF-committed, stamped —
-    // indexRootAt seals the corpus state right after create) root must
-    // be COMPLETED with the PQ batch, and a replayed completion (same
-    // fp-scoped txn) must be a no-op on contents and history
-    val base2 = java.nio.file.Files.createTempDirectory("graft_annboot2").toString
-    val ivf = PortableQuantizer.ivfCentroids(spark, SF).zipWithIndex
-      .map { case (c, b) => ("ivf", 0, b, c) }
-    VersionedTable.create(spark, base2 + "/t", ivf.toDF("kind", "m", "k", "vals"))
-    graft.tables.CorpusStamp.write(base2 + "/t",
-      graft.tables.CorpusStamp.fingerprint(SF, "embeddings"))
-    val root2 = PortableQuantizer.indexRootAt(spark, SF, base2)
-    val t2 = VersionedTable.open(spark, root2)
-    assert(t2.currentVersion == 1)
-    val nPq = t2.read().filter(col("kind") === "pq").count()
-    assert(nPq > 0)
-    PortableQuantizer.indexRootAt(spark, SF, base2) // replayed bootstrap
-    assert(t2.currentVersion == 1 &&
-      VersionedTable.open(spark, root2).read().filter(col("kind") === "pq").count() == nPq,
-      "replayed v0-only completion duplicated the PQ batch")
+    val t = VersionedTable.open(spark, root)
+    assert(t.versions == Seq(0))
+    assert(t.read().filter(col("kind") === "ivf").count() > 0 &&
+      t.read().filter(col("kind") === "pq").count() > 0)
   }
 }
