@@ -24,7 +24,7 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Analyzed-plan memo (r15): `spark.read.parquet` re-lists the path and
+  /** Analyzed-plan memo: `spark.read.parquet` re-lists the path and
     * re-reads parquet footers for schema inference on EVERY call, and the
     * bench invokes each key's builder twice — thousands of redundant
     * footer reads per full run. A DataFrame is an immutable logical plan,
@@ -36,13 +36,13 @@ object Tables {
     * listed, and scanning a grown file with the old size drops the row
     * groups past it (a retrain would seal an artifact of zero rows).
     *
-    * r16 (ADVICE): bounded by [[graft.tools.LruMemo]] — one cold entry
-    * evicted per insert past capacity — instead of the previous
-    * clear()-everything-at-512, which dropped the LIVE session's hot
-    * plans (and re-resolved every table once) whenever a long-lived
-    * multi-session process crossed the bound. Entries are plain logical
-    * plans (no blocks to release), so no eviction hook is needed; dead
-    * sessions' entries age out LRU. */
+    * Bounded by [[graft.tools.LruMemo]] — one cold entry evicted per
+    * insert past capacity — rather than clearing everything at the
+    * bound, which would drop the LIVE session's hot plans (and
+    * re-resolve every table once) whenever a long-lived multi-session
+    * process crossed it. Entries are plain logical plans (no blocks to
+    * release), so no eviction hook is needed; dead sessions' entries age
+    * out LRU. */
   private val planMemo =
     new graft.tools.LruMemo[(String, String, String, String), DataFrame](512)
 
@@ -52,7 +52,7 @@ object Tables {
     // a path the stamp cannot walk (absent, or not on the local file
     // system) keys as "" and fails or resolves in Spark's reader as before
     val fp = scala.util.Try(graft.tables.CorpusStamp.fingerprint(sfDir, name)).getOrElse("")
-    planMemo.getAs("tables_plan", (sid, sfDir, name, fp))(loadRaw(spark, sfDir, name))
+    planMemo.get("tables_plan", (sid, sfDir, name, fp))(loadRaw(spark, sfDir, name))
   }
 
   private def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {

@@ -332,8 +332,8 @@ object GeoOps {
     * (same stats column), and concurrent first serves build once. */
   private[graft] def geoTable(s: SparkSession, d: String): graft.tables.VersionedTable = {
     val root = graft.tables.CorpusStamp.persist(s,
-        graft.TempDirs.cached("vtgeo", d)(_ => ()) + "/t",
-        graft.tables.CorpusStamp.fingerprint(d, "customer"), statsCol = Some("cell")) {
+        graft.TempDirs.cached("vtgeo", d)(_ => ()) + "/t", d, "customer",
+        statsCol = Some("cell")) {
       points(t(s, d, "customer"), "c_custkey")
         .withColumn("cell", (col("latc") + 5L) * 20L + (col("lonc") + 10L))
         .repartitionByRange(8, col("cell"))

@@ -134,9 +134,13 @@ object LlmTextOps {
       .limit(20)
   }
 
+  /** Merge rounds of the BPE trainer, and of its two DuckDB oracles,
+    * which unroll the same loop. */
+  val BpeRounds = 8
+
   /** Multi-round BPE vocabulary TRAINING — the iterative completion of
     * [[llmBpeMerges]] (which grades round one): repeat
-    * (count adjacent symbol pairs → merge the argmax) for `rounds`
+    * (count adjacent symbol pairs → merge the argmax) for [[BpeRounds]]
     * rounds, exactly the loop that builds a real tokenizer vocabulary.
     *
     * Scale shape: the corpus collapses ONCE to its word-frequency table
@@ -159,23 +163,19 @@ object LlmTextOps {
     *
     * Returns (merge table: one row per round, ordered; final word
     * segmentation) — callers grade the first, specs audit the second. */
-  def bpeTrainCore(s: SparkSession, d: String, rounds: Int = 8): (DataFrame, DataFrame) =
+  def bpeTrainCore(s: SparkSession, d: String): (DataFrame, DataFrame) =
     // memoized: llm_bpe_train grades the merge table and llm_bpe_encode
     // the segmentation — without it each grading/bench pass paid the
     // full iterative training (8 argmax collects + 9 eager checkpoints)
-    // TWICE. Corpus fingerprint in the key: a corpus mutated in place at
-    // the same path must MISS and retrain, not serve the stale model
-    Derived(s, d, "bpe_train",
-        (graft.tables.CorpusStamp.fingerprint(d, "documents"), rounds)) {
-      bpeTrainUncached(s, d, rounds)
-    }
+    // TWICE
+    Derived(s, d, "bpe_train")(bpeTrainUncached(s, d))
 
   /** Trainer-invocation counter — the spec hook proving the persisted-
     * tokenizer serve path (llm_bpe_persisted) never retrains, the
     * PortableQuantizer.trainRuns discipline applied to tokenizers. */
   private[graft] val bpeTrainRuns = new java.util.concurrent.atomic.AtomicLong
 
-  private def bpeTrainUncached(s: SparkSession, d: String, rounds: Int): (DataFrame, DataFrame) = {
+  private def bpeTrainUncached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     bpeTrainRuns.incrementAndGet()
     // merge mechanics (seg init / pair explode / bounded regex merge)
     // live in TokenizerMerge, shared with the WordPiece trainer -- only
@@ -190,7 +190,7 @@ object LlmTextOps {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var round = 1
     var exhausted = false
-    while (round <= rounds && !exhausted) {
+    while (round <= BpeRounds && !exhausted) {
       val best = TokenizerMerge.pairCandidates(seg)
         .orderBy(col("pcnt").desc, col("pair"))
         .limit(1).collect() // single-row argmax: the per-iteration scalar
@@ -231,7 +231,7 @@ object LlmTextOps {
     * neighbor, so adjacent merge sites don't shadow each other — then
     * unwrap and halve. Verified byte-identical to the Spark
     * regex-lookaround merge at sf0.01 AND sf0.1. */
-  private def bpeOracleCtes(rounds: Int): String = {
+  private def bpeOracleCtes: String = {
     val p = "\u001f"
     def mergeCtes(k: Int): String =
       s"pairs$k AS (SELECT syms[i] || '$p' || syms[i+1] AS pair, sum(cnt) AS pcnt " +
@@ -244,7 +244,7 @@ object LlmTextOps {
         s"FROM (SELECT replace('$p' || replace(seg, '$p', '$p$p') || '$p', " +
         s"'$p' || b.l || '$p$p' || b.r || '$p', '$p' || b.l || b.r || '$p') AS m, cnt " +
         s"FROM seg$k, best$k b))"
-    val ctes = (0 until rounds).map(mergeCtes).mkString(", ")
+    val ctes = (0 until BpeRounds).map(mergeCtes).mkString(", ")
     // (?s) mirrors the Spark side's DOTALL: every char — newlines
     // included — gets a trailing separator, which the substr unwrap
     // assumes
@@ -255,11 +255,10 @@ object LlmTextOps {
   }
 
   private def bpeTrainOracle: String = {
-    val rounds = 8
-    val union = (0 until rounds).map(k =>
+    val union = (0 until BpeRounds).map(k =>
       s"""SELECT round, l AS "left", r AS "right", l || r AS merged, pcnt AS cnt FROM best$k""")
       .mkString(" UNION ALL ")
-    bpeOracleCtes(rounds) +
+    bpeOracleCtes +
       s""" SELECT CAST(round AS INTEGER) AS round, "left", "right", merged, """ +
       s"CAST(cnt AS BIGINT) AS cnt FROM ($union) ORDER BY round"
   }
@@ -307,7 +306,7 @@ object LlmTextOps {
     * serving job with zero training jobs. The merge list is 8 rows. */
   private[graft] def bpeIndexRoot(s: SparkSession, d: String): String =
     graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtbpe", d)(_ => ()) + "/t",
-      graft.tables.CorpusStamp.fingerprint(d, "documents"))(bpeTrainCore(s, d)._1)
+      d, "documents")(bpeTrainCore(s, d)._1)
 
   /** The ordered merge list read back from the persisted tokenizer -- a
     * bounded index LOOKUP (8 rows through the graft-vt reader), never
@@ -329,12 +328,9 @@ object LlmTextOps {
     * applied to the tokenizer family. */
   def llmBpePersisted(s: SparkSession, d: String): DataFrame = {
     // the served segmentation is a derived table like annIvfPersisted's
-    // assigned frame: memoized + checkpointed per (session, corpus STATE)
-    // — the corpus fingerprint rides in the key so an in-place corpus
-    // mutation re-derives from the retrained index instead of serving
-    // the stale frame — so repeated serves price the derivation once
-    val seg = Derived(s, d, "bpe_served_seg",
-        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
+    // assigned frame: memoized + checkpointed per (session, corpus
+    // state), so repeated serves price the derivation once
+    val seg = Derived(s, d, "bpe_served_seg") {
       val merges = bpeMergesFromIndex(s, d)
       var sg = TokenizerMerge.initialSeg(
         t(s, d, "documents")
@@ -354,9 +350,9 @@ object LlmTextOps {
     * then the identical left join + per-doc aggregation. */
   private def bpeEncodeOracle: String = {
     val p = "\u001f"
-    bpeOracleCtes(8) +
+    bpeOracleCtes +
       s", wordtok AS (SELECT replace(seg, '$p', '') AS w, " +
-      s"CAST(len(string_split(seg, '$p')) AS BIGINT) AS ntok FROM seg8), " +
+      s"CAST(len(string_split(seg, '$p')) AS BIGINT) AS ntok FROM seg$BpeRounds), " +
       "dw AS (SELECT doc_id, w FROM (SELECT doc_id, " +
       "unnest(string_split(text, ' ')) AS w FROM documents) WHERE length(w) >= 1) " +
       "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, " +
@@ -736,7 +732,7 @@ object LlmTextOps {
     * an unchanged corpus serves with zero builds. */
   private[graft] def substringIndexRoot(s: SparkSession, d: String): String =
     graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtsubh", d)(_ => ()) + "/t",
-        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
+        d, "documents") {
       substringIndexBuilds.incrementAndGet()
       substringWindows(t(s, d, "documents").filter(col("doc_id") % 10 < 8), SubstringWindow)
         .select(col("h")).distinct()
@@ -1771,11 +1767,7 @@ object LlmTextOps {
     * no-retrain is asserted in VtDataSourceSpec via the trainRuns
     * counter. */
   def annIvfPersisted(s: SparkSession, d: String): DataFrame = {
-    // corpus fingerprint in the memo key (CorpusStamp): an in-place
-    // corpus mutation re-assigns against the retrained index instead of
-    // serving the stale assigned frame
-    val assigned = Derived(s, d, "ivf_persisted",
-        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
+    val assigned = Derived(s, d, "ivf_persisted") {
       val cb = PortableQuantizer.ivfFromIndex(s, d)
       t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),

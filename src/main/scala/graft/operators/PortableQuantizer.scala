@@ -155,13 +155,12 @@ object PortableQuantizer {
     * explicit `base` directory, through
     * [[graft.tables.CorpusStamp.persist]]: no committed version → train
     * and commit the whole index as v0; a stale corpus → retrain both
-    * codebooks (the trainer memos are fingerprint-keyed) and re-version
-    * the whole index in one commit; otherwise a pure open with no
+    * codebooks (the trainer memos follow the corpus stamp) and
+    * re-version the whole index in one commit; otherwise a pure open with no
     * training jobs. Concurrent first serves in one JVM build once. */
   def indexRootAt(s: SparkSession, d: String, base: String): String = {
     import s.implicits._
-    graft.tables.CorpusStamp.persist(s, base + "/t",
-        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
+    graft.tables.CorpusStamp.persist(s, base + "/t", d, "embeddings") {
       val ivf = ivfCentroids(s, d).zipWithIndex.map { case (c, b) => ("ivf", 0, b, c) }
       val pq = pqCodebook(s, d).zipWithIndex.flatMap { case (sub, m) =>
         sub.zipWithIndex.map { case (c, code) => ("pq", m, code, c) }
@@ -199,12 +198,9 @@ object PortableQuantizer {
       .select(col("vec_id").as("id"), quantArr(col("embedding")).as("qa"))
 
   /** IVF coarse quantizer: one full-dimension k-centroid codebook.
-    * Codebooks are an INDEX — trained once per (session, corpus STATE):
-    * the corpus fingerprint rides in the key (CorpusStamp) so an
-    * in-place corpus mutation retrains instead of serving stale. */
+    * Codebooks are an INDEX — trained once per (session, corpus state). */
   def ivfCentroids(s: SparkSession, d: String): Seq[Seq[Long]] =
-    graft.tools.Derived(s, d, "vt_ivf_centroids",
-        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
+    graft.tools.Derived(s, d, "vt_ivf_centroids") {
       train(trainFrame(s, d)
         .select(lit(0).as("m"), col("id"), col("qa").as("q")), K)(0)
         .map(_.toSeq).toSeq
@@ -247,8 +243,7 @@ object PortableQuantizer {
   /** PQ codebooks: [[NumSub]] subspaces × [[K]] codewords,
     * every subspace trained concurrently in the same Lloyd's jobs. */
   def pqCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Long]]] =
-    graft.tools.Derived(s, d, "vt_pq_codebooks",
-        graft.tables.CorpusStamp.fingerprint(d, "embeddings")) {
+    graft.tools.Derived(s, d, "vt_pq_codebooks") {
       val cbs = train(trainFrame(s, d)
         .select(col("id"), posexplode(expr(
           s"transform(sequence(0, ${NumSub - 1}), " +

@@ -57,15 +57,12 @@ object UnigramOps {
 
   /** Trained model: (vocab rows (piece, final count, final score) in
     * insertion order; distinct-word table with final token counts,
-    * checkpointed). Memoized per (session, dir) — llm_unigram_train
-    * grades the first, llm_unigram_encode joins the second; without the
-    * memo each grading/bench pass would pay the full EM (2 Viterbi
-    * passes + 3 bounded collects) twice. */
+    * checkpointed). Memoized per (session, corpus state) —
+    * llm_unigram_train grades the first, llm_unigram_encode joins the
+    * second; without the memo each grading/bench pass would pay the full
+    * EM (2 Viterbi passes + 3 bounded collects) twice. */
   def unigramCore(s: SparkSession, d: String): (Seq[(String, Long, Long)], DataFrame) =
-    // corpus fingerprint in the key: a corpus mutated in place at the
-    // same path must MISS and retrain, not serve the stale model
-    graft.tools.Derived(s, d, "unigram_train",
-        graft.tables.CorpusStamp.fingerprint(d, "documents"))(trainUncached(s, d))
+    graft.tools.Derived(s, d, "unigram_train")(trainUncached(s, d))
 
   /** Trainer-invocation counter — the spec hook proving the persisted-
     * tokenizer serve path (llm_unigram_persisted) never re-runs EM, the
@@ -167,8 +164,7 @@ object UnigramOps {
   private[graft] def unigramIndexRoot(s: SparkSession, d: String): String = {
     import s.implicits._
     graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtuni", d)(_ => ()) + "/t",
-      graft.tables.CorpusStamp.fingerprint(d, "documents"))(
-      unigramCore(s, d)._1.toDF("piece", "cnt", "score"))
+      d, "documents")(unigramCore(s, d)._1.toDF("piece", "cnt", "score"))
   }
 
   /** The trained scores read back from the persisted model — a bounded
@@ -187,8 +183,7 @@ object UnigramOps {
     * together with llm_bpe_persisted this makes the tokenizer-artifact
     * posture a FAMILY property, not a BPE special case. */
   def llmUnigramPersisted(s: SparkSession, d: String): DataFrame = {
-    val seg = graft.tools.Derived(s, d, "unigram_served_seg",
-        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
+    val seg = graft.tools.Derived(s, d, "unigram_served_seg") {
       val (ps, ss) = unigramScoresFromIndex(s, d).unzip
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))

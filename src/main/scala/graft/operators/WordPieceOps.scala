@@ -50,16 +50,13 @@ object WordPieceOps {
   /** Trained model: (merge rows (round, l, r, merged, pcnt, score);
     * encode vocabulary (corpus alphabet ∪ merged symbols, sorted);
     * distinct-word table with greedy token counts, checkpointed).
-    * Memoized per (session, dir) — llm_wordpiece_train grades the first,
-    * llm_wordpiece_encode joins the third; without the memo each
-    * grading/bench pass would pay the 8-round training (8 argmax
+    * Memoized per (session, corpus state) — llm_wordpiece_train grades
+    * the first, llm_wordpiece_encode joins the third; without the memo
+    * each grading/bench pass would pay the 8-round training (8 argmax
     * collects + 9 eager checkpoints) twice. */
   def wordpieceCore(s: SparkSession, d: String):
       (Seq[(Int, String, String, String, Long, Long)], Seq[String], DataFrame) =
-    // corpus fingerprint in the key: a corpus mutated in place at the
-    // same path must MISS and retrain, not serve the stale model
-    graft.tools.Derived(s, d, "wordpiece_train",
-        graft.tables.CorpusStamp.fingerprint(d, "documents"))(trainUncached(s, d))
+    graft.tools.Derived(s, d, "wordpiece_train")(trainUncached(s, d))
 
   /** Trainer-invocation counter — the spec hook proving the persisted-
     * tokenizer serve path (llm_wordpiece_persisted) never retrains, the
@@ -202,7 +199,7 @@ object WordPieceOps {
   private[graft] def wordpieceIndexRoot(s: SparkSession, d: String): String = {
     import s.implicits._
     graft.tables.CorpusStamp.persist(s, graft.TempDirs.cached("vtwp", d)(_ => ()) + "/t",
-      graft.tables.CorpusStamp.fingerprint(d, "documents"))(wordpieceCore(s, d)._2.toDF("piece"))
+      d, "documents")(wordpieceCore(s, d)._2.toDF("piece"))
   }
 
   /** The vocabulary read back from the persisted tokenizer — a bounded
@@ -218,8 +215,7 @@ object WordPieceOps {
     * (asserted via [[wordpieceTrainRuns]] in VtDataSourceSpec). Same
     * answer, same oracle as llm_wordpiece_encode. */
   def llmWordpiecePersisted(s: SparkSession, d: String): DataFrame = {
-    val seg = graft.tools.Derived(s, d, "wordpiece_served_seg",
-        graft.tables.CorpusStamp.fingerprint(d, "documents")) {
+    val seg = graft.tools.Derived(s, d, "wordpiece_served_seg") {
       val vocab = wordpieceVocabFromIndex(s, d)
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))

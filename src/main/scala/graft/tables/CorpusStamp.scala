@@ -4,20 +4,22 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Staleness seal for persisted derived artifacts (trained tokenizers,
-  * ANN codebooks, geo layouts): a metadata fingerprint of the corpus
-  * table the artifact was derived from, stamped next to the artifact's
-  * manifests at build time and re-checked at every serve.
-  *
-  * Why: the persisted-model roots are keyed per corpus DIRECTORY
-  * (build-if-absent on the committed v0 manifest, [[persist]]), so a corpus mutated
-  * IN PLACE at the same path would serve a stale vocabulary / codebook
-  * silently — the one failure the whole "committed pipeline artifact"
-  * posture must not have. With the stamp, a serve whose recomputed
-  * fingerprint mismatches retrains and RE-VERSIONS the artifact table
-  * (a new commit, so the index history records the retrain), exactly
-  * once per corpus state (the retrained model lands under the new
-  * fingerprint and subsequent serves are stamp-fresh).
+/** The one staleness rule for everything derived from a corpus: a
+  * metadata fingerprint of the corpus tables a value was derived from,
+  * recomputed at every use and compared with the one it was built
+  * under. Three users, each at the granularity its cost calls for:
+  *   - `Tables.load`'s plan memo keys on ONE table's [[fingerprint]]: a
+  *     plan keeps the file sizes it listed, so only a rewrite of that
+  *     table makes it wrong, and re-resolving it is cheap.
+  *   - [[graft.tools.Derived]] keys on the CORPUS stamp,
+  *     `fingerprint(sfDir)`: its entries are session-scoped and rebuild
+  *     without a commit, and a derived frame may read any table of its
+  *     corpus, so a table rewritten in place misses every entry of that
+  *     corpus and no call site has to name its inputs.
+  *   - [[persist]] seals a durable artifact root with ONE table's
+  *     fingerprint: a stale root retrains and re-versions a table every
+  *     later process reads, so rewriting `orders` must not retrain a
+  *     tokenizer derived from `documents`.
   *
   * The fingerprint is METADATA-scale — one directory walk collecting
   * (relative path, size, mtime) per data file, no data read; the same
@@ -38,6 +40,18 @@ object CorpusStamp {
         .map(f => s"${p.relativize(f)}|${Files.size(f)}|${Files.getLastModifiedTime(f).toMillis}")
         .toSeq.sorted
       finally walk.close()
+    md5(entries)
+  }
+
+  /** Fingerprint of the corpus at `sfDir`: the per-table fingerprints of
+    * the [[graft.Tables.all]] tables present there. Only those
+    * `<table>.parquet` entries count, so other files under `sfDir` (a
+    * persisted root placed inside the corpus directory) never change it. */
+  def fingerprint(sfDir: String): String =
+    md5(graft.Tables.all.filter(t => Files.exists(Paths.get(sfDir, t + ".parquet")))
+      .map(t => s"$t|${fingerprint(sfDir, t)}"))
+
+  private def md5(entries: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     entries.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
@@ -82,15 +96,16 @@ object CorpusStamp {
   private val rootLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** The build-if-absent-or-stale path of a persisted artifact, a
-    * `graft-vt` table at `tableRoot` derived from the corpus state `fp`:
-    * with no committed v0 manifest, `create` it from `frame` (with
-    * `statsCol`'s per-file min/max entries, if given); with a stamp other
-    * than `fp`, RE-VERSION it (`overwrite` with `frame`, which keeps the
-    * table's stats column, so the history records the retrain); then seal
-    * `fp`. Each build is ONE commit, so no version ever holds half an
-    * artifact. An artifact that is present and fresh evaluates nothing.
-    * Returns `tableRoot`. Every persisted artifact (tokenizers, the
-    * substring index, the ANN index, the geo layout) goes through here.
+    * `graft-vt` table at `tableRoot` derived from corpus table `table` of
+    * `sfDir`: with no committed v0 manifest, `create` it from `frame`
+    * (with `statsCol`'s per-file min/max entries, if given); with a stamp
+    * other than the table's current [[fingerprint]], RE-VERSION it
+    * (`overwrite` with `frame`, which keeps the table's stats column, so
+    * the history records the retrain); then seal that fingerprint. Each
+    * build is ONE commit, so no version ever holds half an artifact. An
+    * artifact that is present and fresh evaluates nothing. Returns
+    * `tableRoot`. Every persisted artifact (tokenizers, the substring
+    * index, the ANN index, the geo layout) goes through here.
     *
     * "Absent" is the committed v0 manifest, not the directory: `create`
     * makes `_manifests` before its v0 commit lands, so a crashed first
@@ -100,8 +115,9 @@ object CorpusStamp {
     * and the loser's `create` throws. Two PROCESSES sharing a durable
     * root still race the v0 commit: the loser throws and a retry serves
     * the winner's version, never a half-built one. */
-  def persist(s: SparkSession, tableRoot: String, fp: String,
-              statsCol: Option[String] = None)(frame: => DataFrame): String =
+  def persist(s: SparkSession, tableRoot: String, sfDir: String, table: String,
+              statsCol: Option[String] = None)(frame: => DataFrame): String = {
+    val fp = fingerprint(sfDir, table)
     rootLocks.computeIfAbsent(tableRoot, _ => new AnyRef).synchronized {
       if (!Files.exists(Paths.get(tableRoot, "_manifests", "v00000000.json"))) {
         VersionedTable.create(s, tableRoot, frame, statsCol)
@@ -112,4 +128,5 @@ object CorpusStamp {
       }
       tableRoot
     }
+  }
 }

@@ -8,12 +8,15 @@ import org.apache.spark.sql.graftnative.{CheckpointRelease, SessionIds}
   * many queries from — shingle index, SimHash sketches, edge lists, stage
   * frames, tokenizer models, PQ/IVF codebooks.
   *
-  * Key: (session uuid, sfDir, tag, version). `tag` names the artifact and
-  * is its [[MemoRegistry.BuildLog]] tag; `version` carries whatever else
-  * the artifact depends on (a CorpusStamp fingerprint, BPE rounds) so a
-  * corpus mutated in place MISSES instead of serving stale. The session
-  * uuid (not an identity hash, which can collide across sessions in one
-  * JVM) keeps a frame bound to a dead session from reaching a live one.
+  * Key: (session uuid, sfDir, tag, corpus stamp). `tag` names the
+  * artifact and is its [[MemoRegistry.BuildLog]] tag. The corpus stamp
+  * (`CorpusStamp.fingerprint(sfDir)`, recomputed on every call) covers
+  * every table of the corpus, so after any table is rewritten in place
+  * every entry of that corpus MISSES and rebuilds instead of serving a
+  * frame derived from the old files; no call site names its inputs.
+  * The session uuid (not an identity hash, which can collide across
+  * sessions in one JVM) keeps a frame bound to a dead session from
+  * reaching a live one.
   *
   * The store finds the DataFrames in a value itself — a bare frame or a
   * tuple containing frames — and, with no per-site hook:
@@ -38,14 +41,14 @@ object Derived {
     * sessions' frames one cold entry at a time. */
   val Capacity = 96
 
-  private val store = new LruMemo[(String, String, String, Any), Any](Capacity,
+  private val store = new LruMemo[(String, String, String, String), Any](Capacity,
     onEvict = release, revalidate = v => framesIn(v).forall(CheckpointRelease.isLive))
 
-  /** The memoized artifact `tag` of corpus `sfDir` for `spark`'s session,
-    * building it on first use. */
-  def apply[V](spark: SparkSession, sfDir: String, tag: String, version: Any = ())(
-      build: => V): V =
-    store.getAs(tag, (SessionIds.uuid(spark), sfDir, tag, version))(build).asInstanceOf[V]
+  /** The memoized artifact `tag` of corpus `sfDir`'s current state for
+    * `spark`'s session, building it on first use. */
+  def apply[V](spark: SparkSession, sfDir: String, tag: String)(build: => V): V =
+    store.get(tag, (SessionIds.uuid(spark), sfDir, tag,
+      graft.tables.CorpusStamp.fingerprint(sfDir)))(build).asInstanceOf[V]
 
   def size: Int = store.size
 
@@ -91,19 +94,11 @@ object Derived {
   * @param onEvict releases a value dropped by capacity eviction or by a
   *            failed revalidation (never re-run by [[clear]], which takes
   *            its own hook).
-  * @param tag the memo's name in [[MemoRegistry.BuildLog]]; [[getAs]]
-  *            passes a per-call tag instead (the [[Derived]] store tags
-  *            each build with its artifact name), so BENCH_FULL's
-  *            memo_builds records WHICH artifact each build belongs to —
-  *            an n=2 under one bench key reads as either two distinct
-  *            prerequisite indexes (two tags) or one eviction rebuild
-  *            (same tag twice).
   * @param revalidate hit-time liveness probe: a cached value this
   *            returns false for is released (via `onEvict`) and REBUILT
   *            instead of returned. Must be cheap (runs on every hit) and
   *            side-effect free; default accepts every hit. */
 final class LruMemo[K, V](val capacity: Int, onEvict: V => Unit = (_: V) => (),
-                          tag: String = "memo",
                           revalidate: V => Boolean = (_: V) => true) {
   require(capacity > 0, "LruMemo capacity must be positive")
 
@@ -127,7 +122,12 @@ final class LruMemo[K, V](val capacity: Int, onEvict: V => Unit = (_: V) => (),
   private val building = new java.util.HashMap[K, KeyLock]()
 
   /** The memoized value for `k`, building (and caching) it on first use.
-    * Touching a key marks it most-recently-used.
+    * Touching a key marks it most-recently-used. Each build is recorded
+    * in [[MemoRegistry.BuildLog]] under `tag` (the [[Derived]] store tags
+    * each build with its artifact name), so BENCH_FULL's memo_builds
+    * records WHICH artifact each build belongs to — an n=2 under one
+    * bench key reads as either two distinct prerequisite indexes (two
+    * tags) or one eviction rebuild (same tag twice).
     *
     * RETENTION CONTRACT (same one clear() carries): when `onEvict`
     * releases resources — the [[Derived]] store releases a frame's
@@ -137,10 +137,7 @@ final class LruMemo[K, V](val capacity: Int, onEvict: V => Unit = (_: V) => (),
     * recomputed, so a later action on the stale reference fails
     * unrecoverably with missing-checkpoint-block errors. Use the value
     * promptly (or re-get() it, which re-memoizes). */
-  def get(k: K)(build: => V): V = getAs(tag, k)(build)
-
-  /** [[get]] with a per-call BuildLog tag. */
-  def getAs(buildTag: String, k: K)(build: => V): V = lookup(k) match {
+  def get(tag: String, k: K)(build: => V): V = lookup(k) match {
     case Some(v) => v
     case None =>
       val lock = map.synchronized {
@@ -161,7 +158,7 @@ final class LruMemo[K, V](val capacity: Int, onEvict: V => Unit = (_: V) => (),
           var ok = false
           val v = try { val r = build; ok = true; r }
                   finally MemoRegistry.BuildLog.exit(
-                    buildTag, (System.nanoTime() - t0) / 1e9, ok)
+                    tag, (System.nanoTime() - t0) / 1e9, ok)
           map.synchronized(map.put(k, v))
           v
         }

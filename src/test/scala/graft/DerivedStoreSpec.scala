@@ -6,7 +6,8 @@ import org.apache.spark.sql.graftnative.CheckpointRelease
 import graft.tools.{Derived, MemoRegistry}
 
 /** The session-scoped derived-artifact store ([[graft.tools.Derived]])
-  * against a live session: lost blocks rebuild, releaseAll frees them. */
+  * against a live session: lost blocks rebuild, releaseAll frees them,
+  * and a corpus rewritten in place rebuilds what was derived from it. */
 class DerivedStoreSpec extends SparkTestBase {
 
   private def rows(key: String): Seq[String] =
@@ -53,5 +54,42 @@ class DerivedStoreSpec extends SparkTestBase {
     MemoRegistry.releaseAll()
     assert(Derived.size == 0)
     assert((ids & cached).isEmpty, s"still cached after releaseAll: ${ids & cached}")
+  }
+
+  test("a corpus rewritten in place rebuilds its artifacts in the same session; a non-table file rebuilds none") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.SparkSession
+    import graft.operators.LlmTextOps
+    import graft.tables.VersionedTable
+    // simhash, substring_spans and geo_radius_pairs artifacts
+    val keys = Seq("llm_dedup_simhash", "llm_dedup_substring", "geo_radius_join")
+    val tables = Seq("documents", "supplier", "customer")
+    // a WRITABLE copy of the corpus, so it can be rewritten at the same path
+    val dir = Files.createTempDirectory("graft_derivedfp").toString
+    tables.foreach(t => Files.copy(Paths.get(SF, s"$t.parquet"), Paths.get(dir, s"$t.parquet")))
+    def serve(s: SparkSession, ks: Seq[String]): Seq[Seq[String]] =
+      ks.map(k => SparkEntry.queries(k)(s, dir).collect().map(_.toString).toSeq)
+    val before = serve(spark, keys)
+    tables.foreach(t => Files.copy(Paths.get("/root/testdata/sf0.01", s"$t.parquet"),
+      Paths.get(dir, s"$t.parquet"), StandardCopyOption.REPLACE_EXISTING))
+    val after = serve(spark, keys)
+    val fresh = serve(spark.newSession(), keys)
+    for ((k, (a, f)) <- keys.zip(after.zip(fresh)))
+      assert(a == f, s"$k: the session served rows derived from the replaced files")
+    assert(after != before)
+    // a persisted root inside the corpus directory is not a corpus
+    // table: the serves after it build nothing, trainers included
+    val warm = keys :+ "llm_bpe_encode"
+    val served = serve(spark, warm)
+    VersionedTable.create(spark, Paths.get(dir, "ann", "t").toString, spark.range(3).toDF("k"))
+    val (n, runs) = (Derived.size, LlmTextOps.bpeTrainRuns.get())
+    MemoRegistry.BuildLog.reset()
+    MemoRegistry.BuildLog.setKey("after_non_table_write")
+    try {
+      assert(serve(spark, warm) == served)
+      assert(MemoRegistry.BuildLog.snapshot().isEmpty,
+        s"builds after a non-table write: ${MemoRegistry.BuildLog.snapshot()}")
+      assert(Derived.size == n && LlmTextOps.bpeTrainRuns.get() == runs)
+    } finally MemoRegistry.BuildLog.reset()
   }
 }

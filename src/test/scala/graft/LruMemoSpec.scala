@@ -14,7 +14,7 @@ class LruMemoSpec extends AnyFunSuite {
   test("exceeding the bound evicts only the coldest entry, never a hot one") {
     val m = new LruMemo[Int, String](3)
     var builds = 0
-    def b(i: Int): String = m.get(i) { builds += 1; s"v$i" }
+    def b(i: Int): String = m.get("m", i) { builds += 1; s"v$i" }
     b(1); b(2); b(3)
     assert(builds == 3 && m.size == 3)
     b(1) // touch: access order is now 2, 3, 1
@@ -31,7 +31,7 @@ class LruMemoSpec extends AnyFunSuite {
   test("capacity eviction fires the onEvict hook exactly once per evicted value") {
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     val m = new LruMemo[Int, String](2, dropped += _)
-    def b(i: Int): String = m.get(i)(s"v$i")
+    def b(i: Int): String = m.get("m", i)(s"v$i")
     b(1); b(2)
     assert(dropped.isEmpty)
     b(3) // evicts 1
@@ -47,8 +47,8 @@ class LruMemoSpec extends AnyFunSuite {
 
   test("a throwing onEvict hook does not break the insert that triggered it") {
     val m = new LruMemo[Int, String](1, _ => sys.error("drop hook boom"))
-    m.get(1)("v1")
-    assert(m.get(2)("v2") == "v2") // eviction hook throws; insert survives
+    m.get("m", 1)("v1")
+    assert(m.get("m", 2)("v2") == "v2") // eviction hook throws; insert survives
     assert(!m.contains(1) && m.contains(2))
   }
 
@@ -56,7 +56,7 @@ class LruMemoSpec extends AnyFunSuite {
     // the cluster-label memo builds on the shingle-index memo; a
     // ConcurrentHashMap.computeIfAbsent would throw on this nesting
     val m = new LruMemo[String, Int](4)
-    val r = m.get("outer")(m.get("inner")(21) * 2)
+    val r = m.get("m", "outer")(m.get("m", "inner")(21) * 2)
     assert(r == 42 && m.contains("inner") && m.contains("outer"))
   }
 
@@ -64,13 +64,13 @@ class LruMemoSpec extends AnyFunSuite {
     import graft.tools.MemoRegistry.BuildLog
     BuildLog.reset()
     BuildLog.setKey("bench_key")
-    val inner = new LruMemo[String, Int](4, tag = "inner_idx")
-    val outer = new LruMemo[String, Int](4, tag = "outer_frame")
+    val inner = new LruMemo[String, Int](4)
+    val outer = new LruMemo[String, Int](4)
     // outer's thunk builds inner (the fused-retrieval-frame shape) and
     // then sleeps: the outer bracket's wall CONTAINS inner's, so without
     // self-time subtraction the composite would double-count (r12 advice)
-    outer.get("k") {
-      val v = inner.get("k") { Thread.sleep(60); 21 }
+    outer.get("outer_frame", "k") {
+      val v = inner.get("inner_idx", "k") { Thread.sleep(60); 21 }
       Thread.sleep(60)
       v * 2
     }
@@ -87,18 +87,18 @@ class LruMemoSpec extends AnyFunSuite {
     BuildLog.reset()
   }
 
-  test("BuildLog: per-call tags (getAs) separate stages sharing one memo") {
+  test("BuildLog: per-call tags separate stages sharing one memo") {
     import graft.tools.MemoRegistry.BuildLog
     BuildLog.reset()
     BuildLog.setKey("k1")
     val stageMemo = new LruMemo[String, Int](8)
-    stageMemo.getAs("shingles", "shingles")(1)
-    stageMemo.getAs("labels", "labels")(2)
+    stageMemo.get("shingles", "shingles")(1)
+    stageMemo.get("labels", "labels")(2)
     // an eviction-style REBUILD of the same stage under a later key reads
     // as n=2 on ONE tag — distinguishable from two distinct prerequisites
     BuildLog.setKey("k2")
-    stageMemo.getAs("shingles", "shingles2")(3)
-    stageMemo.getAs("shingles", "shingles3")(4)
+    stageMemo.get("shingles", "shingles2")(3)
+    stageMemo.get("shingles", "shingles3")(4)
     val snap = BuildLog.snapshot().toMap
     assert(snap("k1").map(_._1).sorted == Seq("labels", "shingles"))
     assert(snap("k1").forall(_._2 == 1))
@@ -108,8 +108,8 @@ class LruMemoSpec extends AnyFunSuite {
     })
     // a failed build pops the bracket without recording, and the stack
     // survives for the retry
-    intercept[RuntimeException](stageMemo.getAs("boom", "b")(sys.error("x")))
-    assert(stageMemo.getAs("boom", "b")(7) == 7)
+    intercept[RuntimeException](stageMemo.get("boom", "b")(sys.error("x")))
+    assert(stageMemo.get("boom", "b")(7) == 7)
     val snap2 = BuildLog.snapshot().toMap
     assert(snap2("k2").collect { case ("boom", n, _) => n }.sum == 1)
     BuildLog.reset()
@@ -121,7 +121,7 @@ class LruMemoSpec extends AnyFunSuite {
     var builds = 0
     val m = new LruMemo[Int, String](4, released += _,
       revalidate = v => !dead.contains(v))
-    def b(i: Int): String = m.get(i) { builds += 1; s"v$i-$builds" }
+    def b(i: Int): String = m.get("m", i) { builds += 1; s"v$i-$builds" }
     assert(b(1) == "v1-1" && b(1) == "v1-1" && builds == 1)
     // simulate executor loss: the cached value's blocks are gone
     dead += "v1-1"
@@ -136,7 +136,7 @@ class LruMemoSpec extends AnyFunSuite {
     val m = new LruMemo[Int, Int](8)
     val builds = new java.util.concurrent.atomic.AtomicInteger
     val threads = (1 to 8).map(_ => new Thread(() =>
-      (1 to 100).foreach(i => m.get(i % 4) { builds.incrementAndGet(); i % 4 })))
+      (1 to 100).foreach(i => m.get("m", i % 4) { builds.incrementAndGet(); i % 4 })))
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(builds.get == 4, s"expected 4 builds, got ${builds.get}")
@@ -145,20 +145,20 @@ class LruMemoSpec extends AnyFunSuite {
   test("a slow build of one key does not block a hit on an already-built key") {
     import java.util.concurrent.{CompletableFuture, CountDownLatch, TimeUnit}
     val m = new LruMemo[String, Int](4)
-    m.get("b")(2)
+    m.get("m", "b")(2)
     val started = new CountDownLatch(1)
     val gate = new CountDownLatch(1)
-    val slow = new Thread(() => m.get("a") { started.countDown(); gate.await(); 1 })
+    val slow = new Thread(() => m.get("m", "a") { started.countDown(); gate.await(); 1 })
     slow.start()
     try {
       assert(started.await(10, TimeUnit.SECONDS))
-      val hit = CompletableFuture.supplyAsync[Int](() => m.get("b")(sys.error("rebuilt b")))
+      val hit = CompletableFuture.supplyAsync[Int](() => m.get("m", "b")(sys.error("rebuilt b")))
       // the hit must not wait for key a's build to finish
       assert(hit.get(5, TimeUnit.SECONDS) == 2)
     } finally {
       gate.countDown()
       slow.join()
     }
-    assert(m.get("a")(sys.error("rebuilt a")) == 1)
+    assert(m.get("m", "a")(sys.error("rebuilt a")) == 1)
   }
 }

@@ -345,10 +345,8 @@ class VtDataSourceSpec extends SparkTestBase {
     assert(VersionedTable.open(spark, root).currentVersion == vBefore + 1,
       "the rebuild must RE-VERSION the persisted hash table")
     assert(out2 != out1, "the serve must reflect the mutated corpus")
-    // the served answer equals the derived path on the NEW corpus — via
-    // a fresh session, since the derived key's spans memo is keyed by
-    // (session, dir) and still holds the pre-mutation frame here
-    val direct = LlmTextOps.llmDedupSubstringIncremental(spark.newSession(), dir)
+    // the served answer equals the derived path on the NEW corpus
+    val direct = LlmTextOps.llmDedupSubstringIncremental(spark, dir)
       .collect().map(_.toString).toSeq
     assert(out2 == direct && LlmTextOps.substringIndexBuilds.get() == before + 2)
     // re-sealed: the post-rebuild state serves with zero builds again
