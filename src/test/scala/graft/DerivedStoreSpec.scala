@@ -70,7 +70,9 @@ class DerivedStoreSpec extends SparkTestBase {
     def serve(s: SparkSession, ks: Seq[String]): Seq[Seq[String]] =
       ks.map(k => SparkEntry.queries(k)(s, dir).collect().map(_.toString).toSeq)
     val before = serve(spark, keys)
-    tables.foreach(t => Files.copy(Paths.get("/root/testdata/sf0.01", s"$t.parquet"),
+    // the next fixture scale's files replace them at the same paths
+    val larger = Paths.get(SF).resolveSibling("sf0.01")
+    tables.foreach(t => Files.copy(larger.resolve(s"$t.parquet"),
       Paths.get(dir, s"$t.parquet"), StandardCopyOption.REPLACE_EXISTING))
     val after = serve(spark, keys)
     val fresh = serve(spark.newSession(), keys)
